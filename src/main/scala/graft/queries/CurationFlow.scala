@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *    signature family);
   *  - `quality_filter`: q61's narrow per-row predicate, with the rule
   *    table coming from the config;
-  *  - `decontaminate`: q67's broadcast shingle posting join, with the
-  *    benchmark list coming from the config;
+  *  - `decontaminate`: q67's shingle-vs-benchmark-list test as a
+  *    per-row `arrays_overlap`, with the list coming from the config;
   *  - `mixture_sample`: q36's sixteenths-of-a-content-hash mixture
   *    weighting, with the group weights coming from the config;
   *  - `split`: q78's deterministic hash-bucket split — with
@@ -30,23 +30,45 @@ import org.apache.spark.sql.functions._
   *  - `token_budget`: q63's capped hash-ordered stream, SURVIVOR-AWARE
   *    (q212's honesty rule): rows dropped by earlier declared stages
   *    spend none of the budget, so the cap buys exactly what curation
-  *    keeps — declared first it is q63's raw-corpus budget verbatim.
+  *    keeps — declared first it is q63's raw-corpus budget verbatim;
+  *  - `dedup_semantic`: q87's SemDeDup verdicts as a drop set;
+  *  - `containment`: q108's rare-shingle containment verdicts;
+  *  - `mask` / `span_scrub`: text pre-passes (q123's scrub for the
+  *    latter) that rewrite the corpus every later stage reads.
   *
-  * Two hand-composed curation operators deliberately stay OUT of the
-  * stage vocabulary: span_scrub (q123) REWRITES text rather than
-  * keeping/dropping rows — it composes as a pre-pass producing a new
-  * corpus, not as a funnel membership; and semantic decontamination
-  * (q106) is keyed on the embeddings table, which has no declared
-  * doc↔vector mapping in this corpus (counts diverge at sf0.1), so a
-  * document-keyed membership would silently exempt unembedded rows.
+  * Semantic decontamination (q106) deliberately stays OUT of the
+  * vocabulary: it is keyed on the embeddings table, which has no
+  * declared doc↔vector mapping in this corpus (counts diverge at
+  * sf0.1), so a document-keyed membership would silently exempt
+  * unembedded rows.
+  *
+  * ONE interpreter ([[interpret]]) serves the batch entry points
+  * ([[run]], [[runAttrition]], [[runSinks]]) and the stream ones
+  * ([[runStream]], [[runStreamAttrition]], [[runStreamSinks]]), one
+  * match arm per stage type, so batch and stream cannot disagree on
+  * what a stage means. The entry point sets the mode; streamability
+  * is decided by the stage's arm when the plan is built, before any
+  * stream starts:
+  *
+  *  - per-row stages (mask, quality_filter, mixture_sample, id-keyed
+  *    split, decontaminate) run in both modes;
+  *  - cluster stages (dedup_near, leakage-free split, dedup_semantic)
+  *    probe the stored artifacts of a corpus dir (the near-dup label
+  *    table, the SemDeDup verdicts) as a left join — a stream-static
+  *    join under a stream — so a stream runs them only when given
+  *    that dir (the index);
+  *  - corpus-scan stages (dedup_exact's min-id winner, containment,
+  *    token_budget's survivor-ordered running sum, span_scrub) have
+  *    no per-row form and raise "not streamable" in stream mode.
   *
   * Scale shape is q86's, independent of what the config declares:
   * stage memberships are bounded keep/drop sets LEFT-JOINED onto ONE
   * pass over the corpus (memberships compose as conjunctions in the
   * declared order), and the report is a partial agg on the declared
-  * report axis. A config change re-plans the same bounded skeleton —
-  * it can never introduce an unbounded join, because the stage
-  * vocabulary only contains operators with a fixed shuffle shape.
+  * report axis (Complete-mode state of |groups| rows under a stream).
+  * A config change re-plans the same bounded skeleton — it can never
+  * introduce an unbounded join, because the stage vocabulary only
+  * contains operators with a fixed shuffle shape.
   *
   * [[oracleSql]] renders the SAME parsed config as the DuckDB twin,
   * so the driver's correctness gate checks the config → plan
@@ -71,41 +93,6 @@ object CurationFlow {
     val v = r.numValue.get
     if (v.isWhole) lit(v.toLong) else lit(v.toDouble)
   }
-
-  /** Per-row (stateless) membership for the stages a STREAM can run —
-    * quality rules, mixture sampling, and id-keyed (non-leakage-free)
-    * splits. [[run]] and [[runStream]] share these exact Columns, so
-    * batch and stream can never disagree on a stateless stage.
-    */
-  private def rowMember(cur: CurationDef, st: CurationStageDef): Option[Column] =
-    st match {
-      case QualityStageDef(_, rules) =>
-        Some(!rules.map(ruleCol).reduce(_ || _))
-      case MixtureStageDef(_, salt, by, weights) =>
-        // q36's rule: first hex digit of the salted content hash vs the
-        // group's keep16 sixteenths — a narrow per-row predicate, no join
-        val digitVal = instr(lit("0123456789abcdef"),
-          substring(md5(concat(lit(s"$salt|"), col(cur.idColumn).cast("string"))),
-            1, 1)) - 1
-        val keep = weights.foldLeft(lit(0)) { case (acc, (grp, k)) =>
-          when(col(by) === grp, lit(k)).otherwise(acc)
-        }
-        Some(digitVal < keep)
-      case SplitStageDef(_, salt, buckets, keepName, false) =>
-        Some(splitMember(col(cur.idColumn), salt, buckets, keepName))
-      case _ => None
-    }
-
-  /** The declared mask stages' combined rewrite, applied to the text
-    * column in declaration order (stage order, then rule order within
-    * a stage) — the single definition [[funnel]], [[streamFunnel]]
-    * and the oracle's `msk` CTE all speak, so batch, stream and the
-    * generated SQL can never disagree on what "masked" means.
-    */
-  private def maskText(stages: Seq[CurationStageDef], text: Column): Column =
-    stages.collect { case m: MaskStageDef => m }
-      .flatMap(_.rules)
-      .foldLeft(text)((c, r) => regexp_replace(c, r.pattern, r.replacement))
 
   /** q123's span scrub as a corpus rewrite: chunk into `spanLen`-token
     * spans (tail exempt), drop every span duplicated across ≥ 2
@@ -144,21 +131,6 @@ object CurationFlow {
       .drop("sdid", "sp_newtext")
   }
 
-  /** The declared text pre-passes (mask, span_scrub) applied to the
-    * corpus in declaration order — the parser guarantees they form a
-    * prefix of the stage list, so every membership stage reads the
-    * fully rewritten text.
-    */
-  private def applyPrePasses(docs: DataFrame, cur: CurationDef): DataFrame =
-    cur.stages.foldLeft(docs) {
-      case (d, m: MaskStageDef) =>
-        d.withColumn(cur.textColumn,
-          m.rules.foldLeft(col(cur.textColumn))(
-            (c, r) => regexp_replace(c, r.pattern, r.replacement)))
-      case (d, s: SpanScrubStageDef) => spanScrub(d, cur, s.spanLen)
-      case (d, _)                    => d
-    }
-
   /** q78's two-hex-digit bucket split over an arbitrary key column. */
   private def splitMember(
       key: Column, salt: String, buckets: Seq[(String, Int)],
@@ -173,188 +145,224 @@ object CurationFlow {
     split === keepName
   }
 
-  /** The funnel's row level: the corpus with one membership Column per
-    * declared stage (plus whatever join/window columns the stages
-    * needed), shared by the report aggregate ([[run]]) and the sink
-    * writer ([[runSinks]]) so both read the SAME interpretation.
-    */
-  private def funnel(
-      spark: SparkSession, dir: String,
-      cur: CurationDef): (DataFrame, Seq[Column]) = {
-    import spark.implicits._
-    // mask pre-passes rewrite the corpus BEFORE anything derives from
-    // it — content hashes, shingles, token counts and quality metrics
-    // all read the masked text (scrub-before-hash); the stored LSH
-    // signature family (ccLabels below) predates the scrub and stays
-    // keyed on raw-corpus ids by design
-    val pre = applyPrePasses(Tables.load(spark, dir, cur.table), cur)
-    // a span scrub is a corpus-level rewrite (two shuffles); several
-    // membership stages re-scan `docs`, so materialize the scrubbed
-    // corpus ONCE instead of replaying the rewrite per consumer —
-    // exactly what a real pipeline does (write the scrubbed corpus,
-    // curate from it)
-    val docs =
-      if (cur.stages.exists(_.isInstanceOf[SpanScrubStageDef]))
-        pre.localCheckpoint()
-      else pre
-    val needQuality = cur.stages.exists(_.isInstanceOf[QualityStageDef])
-    var base = docs
-      .withColumn("toks", T.tokens(col(cur.textColumn)))
-      .withColumn("n_toks", size(col("toks")).cast("long"))
-    if (needQuality) base = base
-      .withColumn("lang_det", T.langId(col("toks")))
-      .withColumn("quality", T.qualityScore(col(cur.textColumn)))
-    // the near-dup cluster labels are shared by EVERY stage that needs
-    // them (dedup_near, leakage-free split) AND by every funnel in the
-    // session: the stored (id, component) label table is resolved once
-    // per corpus (TextQueries.dupClusters — r18 opt), so a config
-    // declaring both (q313) pays ZERO banding/CC runs after the first
-    // consumer, like the generated oracle's single `lab` CTE
-    lazy val ccLabels = TextQueries.dupClusters(spark, dir)
-    // one membership column/predicate per declared stage, each the
-    // operator's own bounded-set shape; built sequentially because the
-    // survivor-aware token_budget stage folds over the memberships
-    // declared before it
-    val members = scala.collection.mutable.ArrayBuffer[Column]()
-    cur.stages.foreach { st => members += (st match {
-      case _: MaskStageDef | _: SpanScrubStageDef =>
-        // transforms, not gates: every row passes; their effect rides
-        // the rewritten text every later column reads
-        lit(true)
-      case ContainmentStageDef(name, minPct) =>
-        // q108's rare-shingle candidate pairs over the (pre-passed)
-        // corpus, integer containment threshold, drop the contained
-        // side (both contained → drop the higher id): one bounded
-        // self-join on df≤dfCut postings, one verdict set left-join
-        // materialized once (Lineage.cut): sk feeds the posting explode
-        // AND both verdict-side joins — unmaterialized, the shingle
-        // pass over the (scrubbed) corpus ran three times (§2.4; the
-        // stored SigIndex cannot serve here because the text was
-        // rewritten by the declared pre-passes)
-        val sk = graft.Lineage.cut(docs
-          .select(col(cur.idColumn).as("cid"),
-            call_function("shingles3", col(cur.textColumn)).as("csh"))
-          .filter(size(col("csh")) >= 1)
-          .select(col("cid"),
-            array_distinct(H.shingleKeys(col("csh"))).as("skd")))
-        val posting = sk.select(col("cid"), explode(col("skd")).as("s"))
-        val hot = posting.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") > TextQueries.dfCut).select("s")
-        val rare = posting.join(hot, Seq("s"), "left_anti")
-        val cand = rare.select(col("cid").as("a_id"), col("s"))
-          .join(rare.select(col("cid").as("b_id"), col("s")), "s")
-          .filter(col("a_id") < col("b_id"))
-          .groupBy("a_id", "b_id")
-          .agg(count(lit(1)).as("nsr"))
-          .filter(col("nsr") >= TextQueries.minSharedRare)
-        val dropSet = cand
-          .join(sk.select(col("cid").as("a_id"), col("skd").as("a_sk")), "a_id")
-          .join(sk.select(col("cid").as("b_id"), col("skd").as("b_sk")), "b_id")
-          .withColumn("inter",
-            call_function("intersect_count", col("a_sk"), col("b_sk")).cast("long"))
-          .withColumn("a_in_b",
-            col("inter") * 100 >= lit(minPct.toLong) * size(col("a_sk")).cast("long"))
-          .withColumn("b_in_a",
-            col("inter") * 100 >= lit(minPct.toLong) * size(col("b_sk")).cast("long"))
-          .filter(col("a_in_b") || col("b_in_a"))
-          .select(
-            when(col("a_in_b") && col("b_in_a"), greatest(col("a_id"), col("b_id")))
-              .when(col("a_in_b"), col("a_id"))
-              .otherwise(col("b_id")).as(cur.idColumn))
-          .distinct()
-          .withColumn(s"m_$name", lit(1L))
-        base = base.join(dropSet, Seq(cur.idColumn), "left")
-        col(s"m_$name").isNull
-      case DedupExactStageDef(name) =>
-        val keep = docs
-          .groupBy(md5(col(cur.textColumn)).as("h"))
-          .agg(min(col(cur.idColumn)).as(cur.idColumn))
-          .select(col(cur.idColumn), lit(1L).as(s"m_$name"))
-        base = base.join(keep, Seq(cur.idColumn), "left")
-        col(s"m_$name").isNotNull
-      case DedupNearStageDef(name) =>
-        val dropSet = ccLabels
-          .filter(col("id") =!= col("component"))
-          .select(col("id").as(cur.idColumn), lit(1L).as(s"m_$name"))
-        base = base.join(dropSet, Seq(cur.idColumn), "left")
-        col(s"m_$name").isNull
-      case DedupSemanticStageDef(name, missing) =>
-        // q87's SemDeDup verdicts as a bounded drop set (non-
-        // representative cluster duplicates), joined doc_id = vec_id.
-        // The quantizer is memoized per corpus, so a funnel declaring
-        // this stage pays ONE training run however often it replans —
-        // the shared-cluster rule ccLabels applies to MinHash stages
-        val dropSet = VectorQueries.semDedupVerdicts(spark, dir)
-          .select(col("dup_id").as(cur.idColumn), lit(1L).as(s"m_$name"))
-        base = base.join(dropSet, Seq(cur.idColumn), "left")
-        if (missing == "keep") col(s"m_$name").isNull
-        else {
-          // missing='drop': only EMBEDDED non-duplicates survive
-          val embedded = Tables.load(spark, dir, "embeddings")
-            .select(col("vec_id").as(cur.idColumn), lit(1L).as(s"e_$name"))
-          base = base.join(embedded, Seq(cur.idColumn), "left")
-          col(s"m_$name").isNull && col(s"e_$name").isNotNull
-        }
-      case q: QualityStageDef =>
-        rowMember(cur, q).get
-      case DecontaminateStageDef(name, shingles) =>
-        val bench = shingles.toDF("s")
-        val contaminated = docs
-          .select(col(cur.idColumn),
-            explode(call_function("shingles3", col(cur.textColumn))).as("s"))
-          .join(broadcast(bench), "s")
-          .select(cur.idColumn).distinct()
-          .withColumn(s"m_$name", lit(1L))
-        base = base.join(contaminated, Seq(cur.idColumn), "left")
-        col(s"m_$name").isNull
-      case m: MixtureStageDef =>
-        rowMember(cur, m).get
-      case s @ SplitStageDef(name, salt, buckets, keepName, leakFree) =>
-        // q78's two-hex-digit bucket; with leakage_free the key is
-        // q223's cluster representative (bounded label left-join)
-        if (!leakFree) rowMember(cur, s).get
-        else {
-          val reps = ccLabels
-            .select(col("id").as(cur.idColumn),
-              col("component").as(s"rep_$name"))
-          base = base.join(reps, Seq(cur.idColumn), "left")
-          splitMember(coalesce(col(s"rep_$name"), col(cur.idColumn)),
-            salt, buckets, keepName)
-        }
-      case TokenBudgetStageDef(name, salt, by, budget) =>
-        // the survivor-aware running sum: upstream-dropped rows weigh
-        // zero, so the cap buys exactly what the earlier stages kept.
-        // Ranking is RangeRank on q63's key chain (15-hex numeric
-        // prefix drives bucketing; full hash + id complete the total
-        // order) — no raw-corpus single-task window
-        val prior = members.foldLeft(lit(true))(_ && _)
-        base = base
-          .withColumn(s"h_$name",
-            md5(concat(lit(s"$salt|"), col(cur.idColumn).cast("string"))))
-          .withColumn(s"h15_$name",
-            conv(substring(col(s"h_$name"), 1, 15), 16, 10).cast("long"))
-          .withColumn(s"w_$name", when(prior, col("n_toks")).otherwise(0L))
-        base = RangeRank.rank(base, Seq(by),
-          Seq(RangeRank.Key(s"h15_$name"), RangeRank.Key(s"h_$name"),
-            RangeRank.Key(cur.idColumn)),
-          s"rk_$name", s"nn_$name",
-          weight = Some(RangeRank.Weight(s"w_$name", s"cum_$name", s"wtot_$name")))
-        prior && (col(s"cum_$name") - col("n_toks") < budget)
-    })}
-    // memberships are normalized to DEFINITE booleans: a stage whose
-    // predicate evaluates NULL (e.g. a split whose declared buckets
-    // don't cover 0-255) must read as dropped EVERYWHERE — without
-    // this, run()'s counts treat NULL as false but runAttrition's
-    // when(!s, name) skips NULL under three-valued logic and
-    // mislabels the row 'survived'
-    (base, members.toSeq.map(m => coalesce(m, lit(false))))
+  private def stageType(st: CurationStageDef): String = st match {
+    case _: DedupExactStageDef  => "dedup_exact"
+    case _: DedupNearStageDef   => "dedup_near"
+    case _: QualityStageDef     => "quality_filter"
+    case _: DecontaminateStageDef => "decontaminate"
+    case _: MixtureStageDef     => "mixture_sample"
+    case s: SplitStageDef       => if (s.leakageFree) "split (leakage_free)" else "split"
+    case _: TokenBudgetStageDef => "token_budget"
+    case _: DedupSemanticStageDef => "dedup_semantic"
+    case _: MaskStageDef        => "mask"
+    case _: SpanScrubStageDef   => "span_scrub"
+    case _: ContainmentStageDef => "containment"
   }
 
-  def run(spark: SparkSession, dir: String, cur: CurationDef): DataFrame = {
-    val (base, members) = funnel(spark, dir, cur)
-    // conjunctions in declared order: stage i survives iff stages 1..i do
-    val sCols = members.scanLeft(lit(true))(_ && _).tail
-    val staged = base.select(
+  private def notStreamable(st: CurationStageDef, hint: String = ""): Nothing =
+    throw new MetadataError(s"stage '${st.name}' (${stageType(st)}) is " +
+      "not streamable: only per-row stages (quality_filter, " +
+      "mixture_sample, id-keyed split, decontaminate) and " +
+      "index-backed cluster stages can run over a stream — " +
+      s"corpus-scan stages need a batch pass$hint")
+
+  /** The interpreter's row level after some prefix of the stages:
+    * `corpus` is the pre-passed document table the corpus-scan stages
+    * derive their keep/drop sets from; `rows` is that corpus plus the
+    * text-derived columns and every membership join so far; `members`
+    * holds one definite-boolean membership per stage so far.
+    */
+  private final case class Funnel(
+      corpus: DataFrame, rows: DataFrame, members: Vector[Column])
+
+  /** The curation interpreter: folds the declared stages over `docs`
+    * (a table or a stream; `streaming` is the entry point's mode) with
+    * exactly one match arm per stage type. `index` is the corpus dir
+    * whose stored artifacts the cluster stages probe — always the
+    * corpus itself in batch.
+    */
+  private def interpret(
+      cur: CurationDef, docs: DataFrame, index: Option[String],
+      streaming: Boolean): Funnel = {
+    val spark = docs.sparkSession
+    val needQuality = cur.stages.exists(_.isInstanceOf[QualityStageDef])
+    // scrub-before-derive: token counts and quality metrics read the
+    // pre-passed text (the stored LSH signature family behind the
+    // cluster labels predates the pre-passes and stays keyed on
+    // raw-corpus ids by design)
+    def derive(corpus: DataFrame): DataFrame = {
+      val d = corpus
+        .withColumn("toks", T.tokens(col(cur.textColumn)))
+        .withColumn("n_toks", size(col("toks")).cast("long"))
+      if (!needQuality) d
+      else d.withColumn("lang_det", T.langId(col("toks")))
+        .withColumn("quality", T.qualityScore(col(cur.textColumn)))
+    }
+    def batchOnly(st: CurationStageDef): Unit =
+      if (streaming) notStreamable(st)
+    // the stored near-dup label table (id, component), resolved once
+    // per corpus (TextQueries.dupClusters) and shared by every stage
+    // and funnel that needs it, like the generated oracle's `lab` CTE
+    def clusterLabels(st: CurationStageDef): DataFrame =
+      TextQueries.dupClusters(spark, index.getOrElse(notStreamable(st,
+        " (cluster membership streams against the stored signature " +
+          "index — pass one)")))
+    def step(f: Funnel, st: CurationStageDef): Funnel = {
+      val Funnel(corpus, rows, _) = f
+      // NULL must read as dropped EVERYWHERE: without the coalesce the
+      // survivor counts treat NULL as false but the attribution's
+      // when(!s, name) skips it and mislabels the row 'survived'
+      def gate(member: Column, joined: DataFrame = rows): Funnel =
+        Funnel(corpus, joined, f.members :+ coalesce(member, lit(false)))
+      // pre-passes rewrite the corpus BEFORE anything derives from it;
+      // the parser keeps them a prefix, so `rows` has no joins yet
+      def rewrite(text: DataFrame): Funnel =
+        Funnel(text, derive(text), f.members :+ lit(true))
+      def dropIfIn(name: String, ids: DataFrame): Funnel =
+        gate(col(s"m_$name").isNull, rows.join(
+          ids.select(col(cur.idColumn), lit(1L).as(s"m_$name")),
+          Seq(cur.idColumn), "left"))
+      st match {
+        case MaskStageDef(_, rules) =>
+          rewrite(corpus.withColumn(cur.textColumn,
+            rules.foldLeft(col(cur.textColumn))(
+              (c, r) => regexp_replace(c, r.pattern, r.replacement))))
+        case SpanScrubStageDef(_, spanLen) =>
+          batchOnly(st)
+          // a corpus-level rewrite (two shuffles) that several stages
+          // re-scan: materialize it ONCE, as a real pipeline writes the
+          // scrubbed corpus and curates from it
+          rewrite(spanScrub(corpus, cur, spanLen).localCheckpoint())
+        case DedupExactStageDef(name) =>
+          batchOnly(st)
+          val keep = corpus
+            .groupBy(md5(col(cur.textColumn)).as("h"))
+            .agg(min(col(cur.idColumn)).as(cur.idColumn))
+            .select(col(cur.idColumn), lit(1L).as(s"m_$name"))
+          gate(col(s"m_$name").isNotNull,
+            rows.join(keep, Seq(cur.idColumn), "left"))
+        case DedupNearStageDef(name) =>
+          dropIfIn(name, clusterLabels(st)
+            .filter(col("id") =!= col("component"))
+            .select(col("id").as(cur.idColumn)))
+        case DedupSemanticStageDef(name, missing) =>
+          // q87's verdicts (non-representative cluster duplicates),
+          // joined doc_id = vec_id; the quantizer is memoized per
+          // corpus, so the stage pays ONE training run however often
+          // it replans
+          val dir = index.getOrElse(notStreamable(st,
+            " (semantic membership streams against the stored SemDeDup " +
+              "verdict table — pass the index)"))
+          val dropped = dropIfIn(name, VectorQueries.semDedupVerdicts(spark, dir)
+            .select(col("dup_id").as(cur.idColumn)))
+          if (missing == "keep") dropped
+          else {
+            // missing='drop': only EMBEDDED non-duplicates survive
+            val embedded = Tables.load(spark, dir, "embeddings")
+              .select(col("vec_id").as(cur.idColumn), lit(1L).as(s"e_$name"))
+            gate(col(s"m_$name").isNull && col(s"e_$name").isNotNull,
+              dropped.rows.join(embedded, Seq(cur.idColumn), "left"))
+          }
+        case QualityStageDef(_, rules) =>
+          gate(!rules.map(ruleCol).reduce(_ || _))
+        case DecontaminateStageDef(_, shingles) =>
+          // contaminated iff a 3-shingle of the text is on the list; a
+          // NULL text has no shingles, so it stays (as the generated
+          // SQL's LEFT JOIN ct_… IS NULL keeps it)
+          gate(!coalesce(arrays_overlap(
+            call_function("shingles3", col(cur.textColumn)), typedLit(shingles)),
+            lit(false)))
+        case ContainmentStageDef(name, minPct) =>
+          batchOnly(st)
+          // q108's rare-shingle candidate pairs over the pre-passed
+          // corpus, integer containment threshold, drop the contained
+          // side (both contained → drop the higher id). `sk` feeds the
+          // posting explode AND both verdict-side joins, so it is
+          // materialized once (Lineage.cut) — unmaterialized, the
+          // shingle pass ran three times (§2.4; the stored SigIndex
+          // cannot serve, the pre-passes rewrote the text)
+          val sk = graft.Lineage.cut(corpus
+            .select(col(cur.idColumn).as("cid"),
+              call_function("shingles3", col(cur.textColumn)).as("csh"))
+            .filter(size(col("csh")) >= 1)
+            .select(col("cid"),
+              array_distinct(H.shingleKeys(col("csh"))).as("skd")))
+          val posting = sk.select(col("cid"), explode(col("skd")).as("s"))
+          val hot = posting.groupBy("s").agg(count(lit(1)).as("df"))
+            .filter(col("df") > TextQueries.dfCut).select("s")
+          val rare = posting.join(hot, Seq("s"), "left_anti")
+          val cand = rare.select(col("cid").as("a_id"), col("s"))
+            .join(rare.select(col("cid").as("b_id"), col("s")), "s")
+            .filter(col("a_id") < col("b_id"))
+            .groupBy("a_id", "b_id")
+            .agg(count(lit(1)).as("nsr"))
+            .filter(col("nsr") >= TextQueries.minSharedRare)
+          dropIfIn(name, cand
+            .join(sk.select(col("cid").as("a_id"), col("skd").as("a_sk")), "a_id")
+            .join(sk.select(col("cid").as("b_id"), col("skd").as("b_sk")), "b_id")
+            .withColumn("inter",
+              call_function("intersect_count", col("a_sk"), col("b_sk")).cast("long"))
+            .withColumn("a_in_b",
+              col("inter") * 100 >= lit(minPct.toLong) * size(col("a_sk")).cast("long"))
+            .withColumn("b_in_a",
+              col("inter") * 100 >= lit(minPct.toLong) * size(col("b_sk")).cast("long"))
+            .filter(col("a_in_b") || col("b_in_a"))
+            .select(
+              when(col("a_in_b") && col("b_in_a"), greatest(col("a_id"), col("b_id")))
+                .when(col("a_in_b"), col("a_id"))
+                .otherwise(col("b_id")).as(cur.idColumn))
+            .distinct())
+        case MixtureStageDef(_, salt, by, weights) =>
+          // q36's rule: first hex digit of the salted content hash vs
+          // the group's keep16 sixteenths — a narrow per-row predicate
+          val digitVal = instr(lit("0123456789abcdef"),
+            substring(md5(concat(lit(s"$salt|"), col(cur.idColumn).cast("string"))),
+              1, 1)) - 1
+          val keep = weights.foldLeft(lit(0)) { case (acc, (grp, k)) =>
+            when(col(by) === grp, lit(k)).otherwise(acc)
+          }
+          gate(digitVal < keep)
+        case SplitStageDef(name, salt, buckets, keepName, leakFree) =>
+          // q78's bucket; with leakage_free the key is q223's cluster
+          // representative (bounded label left-join)
+          if (!leakFree) gate(splitMember(col(cur.idColumn), salt, buckets, keepName))
+          else gate(
+            splitMember(coalesce(col(s"rep_$name"), col(cur.idColumn)),
+              salt, buckets, keepName),
+            rows.join(clusterLabels(st).select(col("id").as(cur.idColumn),
+              col("component").as(s"rep_$name")), Seq(cur.idColumn), "left"))
+        case TokenBudgetStageDef(name, salt, by, budget) =>
+          batchOnly(st)
+          // the survivor-aware running sum: upstream-dropped rows weigh
+          // zero. Ranking is RangeRank on q63's key chain (15-hex
+          // numeric prefix drives bucketing; full hash + id complete
+          // the total order) — no raw-corpus single-task window
+          val prior = f.members.foldLeft(lit(true))(_ && _)
+          val weighted = rows
+            .withColumn(s"h_$name",
+              md5(concat(lit(s"$salt|"), col(cur.idColumn).cast("string"))))
+            .withColumn(s"h15_$name",
+              conv(substring(col(s"h_$name"), 1, 15), 16, 10).cast("long"))
+            .withColumn(s"w_$name", when(prior, col("n_toks")).otherwise(0L))
+          gate(prior && (col(s"cum_$name") - col("n_toks") < budget),
+            RangeRank.rank(weighted, Seq(by),
+              Seq(RangeRank.Key(s"h15_$name"), RangeRank.Key(s"h_$name"),
+                RangeRank.Key(cur.idColumn)),
+              s"rk_$name", s"nn_$name",
+              weight = Some(RangeRank.Weight(s"w_$name", s"cum_$name", s"wtot_$name"))))
+      }
+    }
+    cur.stages.foldLeft(Funnel(docs, derive(docs), Vector.empty))(step)
+  }
+
+  private def batchFunnel(spark: SparkSession, dir: String, cur: CurationDef): Funnel =
+    interpret(cur, Tables.load(spark, dir, cur.table), Some(dir), streaming = false)
+
+  /** Per-group survivor report: n_raw, one n_<stage> per declared
+    * stage (stage i survives iff stages 1..i do), tokens_final. */
+  private def survivorReport(cur: CurationDef, f: Funnel): DataFrame = {
+    val sCols = f.members.scanLeft(lit(true))(_ && _).tail
+    val staged = f.rows.select(
       col(cur.reportBy) +: col("n_toks") +:
         sCols.zipWithIndex.map { case (c, i) => c.as(s"s${i + 1}") }: _*)
     val stageCounts = cur.stages.zipWithIndex.map { case (st, i) =>
@@ -367,35 +375,53 @@ object CurationFlow {
         stageCounts :+
           sum(when(col(s"s${cur.stages.size}"), col("n_toks")).otherwise(0L))
             .as("tokens_final"): _*)
-      .orderBy(cur.reportBy)
   }
 
-  /** Corpus-loss LINEAGE from the same declared document: attribute
-    * every dropped row to the FIRST stage that dropped it (stages are
-    * conjunctive in declared order, so "first failing" is the
-    * well-defined cause), and report (group × removed_by) document
-    * and token mass. [[run]] answers "how much survived each gate";
-    * this answers the operational follow-up — "WHICH gate is eating
-    * source X" — without re-running anything: same funnel, same
-    * memberships, one extra CASE.
-    *
-    * Scale shape: identical to [[run]] — the attribution CASE is a
-    * per-row projection over the already-computed stage columns; the
-    * report is (groups × stages+1) rows.
-    */
-  def runAttrition(spark: SparkSession, dir: String, cur: CurationDef): DataFrame = {
-    val (base, members) = funnel(spark, dir, cur)
-    val sCols = members.scanLeft(lit(true))(_ && _).tail
+  /** Corpus-loss lineage: every dropped row is attributed to the FIRST
+    * stage that dropped it (stages are conjunctive in declared order,
+    * so "first failing" is the well-defined cause), reported as
+    * (group × removed_by) document and token mass — a per-row CASE
+    * over the survivor memberships, (groups × stages+1) rows. */
+  private def attritionReport(cur: CurationDef, f: Funnel): DataFrame = {
+    val sCols = f.members.scanLeft(lit(true))(_ && _).tail
     val removedBy = cur.stages.zip(sCols).foldRight(lit("survived")) {
       case ((st, s), acc) => when(!s, lit(st.name)).otherwise(acc)
     }
-    base
+    f.rows
       .select(col(cur.reportBy), col("n_toks"), removedBy.as("removed_by"))
       .groupBy(cur.reportBy, "removed_by")
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("n_toks")).cast("long").as("n_tokens"))
-      .orderBy(cur.reportBy, "removed_by")
   }
+
+  /** The rows every sink writes: survivors of all stages, projected to
+    * id, report axis, the sinks' partition columns and n_toks. */
+  private def survivors(cur: CurationDef, f: Funnel): DataFrame =
+    f.rows.filter(f.members.reduce(_ && _)).select(
+      ((Seq(cur.idColumn, cur.reportBy) ++ cur.sinks.flatMap(_.partitionBy))
+        .distinct.map(col) :+ col("n_toks")): _*)
+
+  def run(spark: SparkSession, dir: String, cur: CurationDef): DataFrame =
+    survivorReport(cur, batchFunnel(spark, dir, cur)).orderBy(cur.reportBy)
+
+  /** [[run]]'s loss-attribution reading ("WHICH gate is eating source
+    * X"): same funnel, same memberships, one extra CASE. */
+  def runAttrition(spark: SparkSession, dir: String, cur: CurationDef): DataFrame =
+    attritionReport(cur, batchFunnel(spark, dir, cur))
+      .orderBy(cur.reportBy, "removed_by")
+
+  /** [[run]] over a stream `docs`; `index` is the corpus dir whose
+    * stored artifacts the cluster stages probe. */
+  def runStream(
+      cur: CurationDef, docs: DataFrame,
+      index: Option[String] = None): DataFrame =
+    survivorReport(cur, interpret(cur, docs, index, streaming = true))
+
+  /** [[runAttrition]] over a stream `docs`. */
+  def runStreamAttrition(
+      cur: CurationDef, docs: DataFrame,
+      index: Option[String] = None): DataFrame =
+    attritionReport(cur, interpret(cur, docs, index, streaming = true))
 
   /** The attribution twin of [[oracleSql]], generated from the SAME
     * config: first-failing-stage CASE over the s1..sN survivor
@@ -454,14 +480,10 @@ object CurationFlow {
     require(batchStamps.nonEmpty, "runSinks needs at least one batch stamp")
     locally {
       val subs = graft.io.SourceReader.Substitutions(Map("out" -> work))
-      val (base, members) = funnel(spark, dir, cur)
-      val survCols = ((Seq(cur.idColumn, cur.reportBy) ++
-        cur.sinks.flatMap(_.partitionBy)).distinct.map(col)) :+ col("n_toks")
       // the funnel is evaluated ONCE — every (stamp × sink) write and
       // the bin-pack compaction replay the materialized survivor set,
       // not the full stage-join plan over the corpus
-      val surv = base.filter(members.reduce(_ && _)).select(survCols: _*)
-        .localCheckpoint()
+      val surv = survivors(cur, batchFunnel(spark, dir, cur)).localCheckpoint()
       batchStamps.foreach { stamp =>
         val batch = surv.withColumn("batch_date", lit(stamp))
         cur.sinks.foreach(s => graft.io.SinkWriter.write(batch, s, subs))
@@ -490,163 +512,6 @@ object CurationFlow {
         .orderBy(cur.reportBy)
         .localCheckpoint() // materialize before the work dir is deleted
     }
-  }
-
-  private def stageType(st: CurationStageDef): String = st match {
-    case _: DedupExactStageDef  => "dedup_exact"
-    case _: DedupNearStageDef   => "dedup_near"
-    case _: QualityStageDef     => "quality_filter"
-    case _: DecontaminateStageDef => "decontaminate"
-    case _: MixtureStageDef     => "mixture_sample"
-    case s: SplitStageDef       => if (s.leakageFree) "split (leakage_free)" else "split"
-    case _: TokenBudgetStageDef => "token_budget"
-    case _: DedupSemanticStageDef => "dedup_semantic"
-    case _: MaskStageDef        => "mask"
-    case _: SpanScrubStageDef   => "span_scrub"
-    case _: ContainmentStageDef => "containment"
-  }
-
-  /** The SAME declared funnel over a STREAM — the reference's
-    * metadata-driven pattern extended to Structured Streaming: every
-    * per-row stage (quality rules, mixture sampling, id-keyed splits)
-    * is applied as the stateless predicate [[run]] uses verbatim, and
-    * the report is a streaming aggregation on the declared axis
-    * (Complete mode — the group axis is domain-bounded, so the state
-    * is |groups| rows at any corpus size).
-    *
-    * With `index` (the session's stored LSH signature family — q73's
-    * artifact), the two CLUSTER-membership stages stream too: the
-    * near-dup label table is materialized ONCE from the stored index
-    * before the stream starts, and each micro-batch probes it as a
-    * stream-static left join — `dedup_near` drops
-    * non-representatives, a leakage-free `split` keys on the cluster
-    * representative. `decontaminate` streams unconditionally (its
-    * benchmark list is config data; the per-row predicate is the
-    * batch join's equivalent). Stages whose semantics are ORDER- or
-    * corpus-count-dependent (dedup_exact's min-id winner,
-    * token_budget's survivor-ordered running sum) fail FAST at
-    * submission, before any stream starts — the config contract, not
-    * a runtime surprise.
-    */
-  def runStream(
-      cur: CurationDef, docs: DataFrame,
-      index: Option[(SparkSession, String)] = None): DataFrame = {
-    val (base, members) = streamFunnel(cur, docs, index)
-    val sCols = members.scanLeft(lit(true))(_ && _).tail
-    val staged = base.select(
-      col(cur.reportBy) +: col("n_toks") +:
-        sCols.zipWithIndex.map { case (c, i) => c.as(s"s${i + 1}") }: _*)
-    val stageCounts = cur.stages.zipWithIndex.map { case (st, i) =>
-      count(when(col(s"s${i + 1}"), 1)).as(s"n_${st.name}")
-    }
-    staged
-      .groupBy(cur.reportBy)
-      .agg(
-        count(lit(1)).as("n_raw"),
-        stageCounts :+
-          sum(when(col(s"s${cur.stages.size}"), col("n_toks")).otherwise(0L))
-            .as("tokens_final"): _*)
-  }
-
-  /** The STREAM funnel's row level — [[runStream]]'s validation and
-    * per-stage membership Columns without the report, shared with the
-    * sink-landing form ([[runStreamSinks]]). */
-  private def streamFunnel(
-      cur: CurationDef, docs: DataFrame,
-      index: Option[(SparkSession, String)]): (DataFrame, Seq[Column]) = {
-    cur.stages.foreach { st =>
-      val streamable = st match {
-        case _: MaskStageDef           => true // stateless per-row rewrite
-        case _: DecontaminateStageDef  => true
-        case _: DedupNearStageDef      => index.isDefined
-        case _: DedupSemanticStageDef  => index.isDefined
-        case s: SplitStageDef          => !s.leakageFree || index.isDefined
-        case other                     => rowMember(cur, other).isDefined
-      }
-      if (!streamable) {
-        val hint = st match {
-          case _: DedupNearStageDef | _: SplitStageDef =>
-            " (cluster membership streams against the stored signature " +
-              "index — pass one)"
-          case _: DedupSemanticStageDef =>
-            " (semantic membership streams against the stored SemDeDup " +
-              "verdict table — pass the index)"
-          case _ => ""
-        }
-        throw new MetadataError(s"stage '${st.name}' (${stageType(st)}) is " +
-          "not streamable: only per-row stages (quality_filter, " +
-          "mixture_sample, id-keyed split, decontaminate) and " +
-          "index-backed cluster stages can run over a stream — " +
-          s"corpus-scan stages need a batch pass$hint")
-      }
-    }
-    // the shared near-dup label table, built ONCE from the stored
-    // signature index and materialized before the stream starts
-    // (bounded — only documents inside a near-dup cluster appear);
-    // every cluster-membership stage probes these labels per
-    // micro-batch as a stream-static left join, q73's
-    // batch×occupancy cost with the corpus side precomputed
-    lazy val labels: DataFrame = {
-      val (spark, dir) = index.get
-      // the session's stored label table (parquet-backed, so each
-      // micro-batch's stream-static probe re-reads a tiny file set
-      // instead of holding checkpoint blocks for the stream's life)
-      TextQueries.dupClusters(spark, dir)
-    }
-    val needQuality = cur.stages.exists(_.isInstanceOf[QualityStageDef])
-    // the same scrub-before-derive rule as [[funnel]]: every inline
-    // column below reads the masked text
-    var base = docs
-      .withColumn(cur.textColumn, maskText(cur.stages, col(cur.textColumn)))
-      .withColumn("toks", T.tokens(col(cur.textColumn)))
-      .withColumn("n_toks", size(col("toks")).cast("long"))
-    if (needQuality) base = base
-      .withColumn("lang_det", T.langId(col("toks")))
-      .withColumn("quality", T.qualityScore(col(cur.textColumn)))
-    val members = cur.stages.map {
-      case _: MaskStageDef => lit(true)
-      case DedupNearStageDef(name) =>
-        val dropSet = labels
-          .filter(col("id") =!= col("component"))
-          .select(col("id").as(cur.idColumn), lit(1L).as(s"m_$name"))
-        base = base.join(dropSet, Seq(cur.idColumn), "left")
-        col(s"m_$name").isNull
-      case DecontaminateStageDef(_, shingles) =>
-        // the batch join's per-row equivalent: contaminated iff any
-        // 3-shingle of the text appears in the benchmark list
-        !arrays_overlap(call_function("shingles3", col(cur.textColumn)),
-          typedLit(shingles))
-      case SplitStageDef(name, salt, buckets, keepName, true) =>
-        val reps = labels.select(col("id").as(cur.idColumn),
-          col("component").as(s"rep_$name"))
-        base = base.join(reps, Seq(cur.idColumn), "left")
-        splitMember(coalesce(col(s"rep_$name"), col(cur.idColumn)),
-          salt, buckets, keepName)
-      case DedupSemanticStageDef(name, missing) =>
-        // q87's SemDeDup verdicts are a STATIC table a stream can
-        // probe per micro-batch (the labels pattern above applied to
-        // the embedding clusters): the quantizer runs once before the
-        // stream starts, the bounded dup set materializes, and each
-        // batch pays one stream-static left join — q73's cost shape
-        val (spark, dir) = index.get
-        val dropSet = VectorQueries.semDedupVerdicts(spark, dir)
-          .select(col("dup_id").as(cur.idColumn), lit(1L).as(s"m_$name"))
-          .localCheckpoint()
-        base = base.join(dropSet, Seq(cur.idColumn), "left")
-        if (missing == "keep") col(s"m_$name").isNull
-        else {
-          val embedded = Tables.load(spark, dir, "embeddings")
-            .select(col("vec_id").as(cur.idColumn), lit(1L).as(s"e_$name"))
-            .localCheckpoint()
-          base = base.join(embedded, Seq(cur.idColumn), "left")
-          col(s"m_$name").isNull && col(s"e_$name").isNotNull
-        }
-      case st => rowMember(cur, st).get
-    }
-    // same definite-boolean normalization as [[funnel]] — stream and
-    // batch must agree that a NULL-membership row is dropped, not
-    // 'survived', in the attrition ledger
-    (base, members.map(m => coalesce(m, lit(false))))
   }
 
   // ---------- generated DuckDB twin ----------
@@ -1261,38 +1126,17 @@ object CurationFlow {
   def q292_declared_curation_stream(spark: SparkSession, dir: String): DataFrame =
     driveStream(spark, dir, Metadata.parseCuration(streamCurationJson), index = None)
 
-  /** [[runStream]]'s report shape for corpus-loss lineage — the
-    * attrition CASE is a per-row projection over the same streamed
-    * memberships, so lineage streams wherever the funnel does;
-    * Complete-mode state is (groups × stages+1) rows at any corpus
-    * size.
-    */
-  def runStreamAttrition(
-      cur: CurationDef, docs: DataFrame,
-      index: Option[(SparkSession, String)] = None): DataFrame = {
-    val (base, members) = streamFunnel(cur, docs, index)
-    val sCols = members.scanLeft(lit(true))(_ && _).tail
-    val removedBy = cur.stages.zip(sCols).foldRight(lit("survived")) {
-      case ((st, s), acc) => when(!s, lit(st.name)).otherwise(acc)
-    }
-    base
-      .select(col(cur.reportBy), col("n_toks"), removedBy.as("removed_by"))
-      .groupBy(cur.reportBy, "removed_by")
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        sum(col("n_toks")).cast("long").as("n_tokens"))
-  }
-
   /** The shared micro-batch drive (q74's harness shape): stage the
     * corpus as two content-hash-split files, run `report`'s streaming
     * query over them (the survivor funnel by default, the attrition
     * ledger for q314), return the final Complete-mode report read
     * back from the foreachBatch sink.
     */
-  private def driveStream(
+  private[queries] def driveStream(
       spark: SparkSession, dir: String, cur: CurationDef,
-      index: Option[(SparkSession, String)],
-      report: (CurationDef, DataFrame,
-        Option[(SparkSession, String)]) => DataFrame = runStream(_, _, _)): DataFrame = {
+      index: Option[String],
+      report: (CurationDef, DataFrame, Option[String]) => DataFrame =
+        runStream(_, _, _)): DataFrame = {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val work = graft.io.Scratch.dir(spark, "graft-curstream-")
@@ -1301,13 +1145,7 @@ object CurationFlow {
       val docs = Tables.load(spark, dir, cur.table)
       stageTwoBatches(spark, work, docs, cur.idColumn,
         shareTag = Some(s"$dir|${cur.table}"))
-      // streaming-aggregation state commits one delta per shuffle
-      // partition per micro-batch; pin to a few partitions for the
-      // |groups|-row state and restore after (q74's rule)
-      val key = "spark.sql.shuffle.partitions"
-      val oldParts = spark.conf.get(key)
-      spark.conf.set(key, "8")
-      try {
+      withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
         val query = report(cur, stream, index)
@@ -1321,7 +1159,7 @@ object CurationFlow {
           .option("checkpointLocation", s"$work/ckpt")
           .start()
         query.awaitTermination()
-      } finally spark.conf.set(key, oldParts)
+      }
       spark.read.parquet(s"$work/out")
         .orderBy(cur.reportBy)
         .localCheckpoint() // materialize before the work dir is deleted
@@ -1432,7 +1270,7 @@ object CurationFlow {
     */
   def runStreamSinks(
       spark: SparkSession, dir: String, cur: CurationDef,
-      index: Option[(SparkSession, String)] = None): DataFrame = {
+      index: Option[String] = None): DataFrame = {
     import org.apache.hadoop.fs.Path
     val work = graft.io.Scratch.dir(spark, "graft-curstreamsink-")
     val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1444,7 +1282,7 @@ object CurationFlow {
     * the spec drives this form so the landed layout can be audited. */
   private[queries] def runStreamSinksAt(
       spark: SparkSession, dir: String, cur: CurationDef,
-      index: Option[(SparkSession, String)], work: String): DataFrame = {
+      index: Option[String], work: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     require(cur.sinks.nonEmpty, "runStreamSinks needs a sink-bearing config")
     cur.sinks.foreach { s =>
@@ -1464,11 +1302,8 @@ object CurationFlow {
         shareTag = Some(s"$dir|${cur.table}"))
       val stream = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      val (base, members) = streamFunnel(cur, stream, index)
-      val survCols = ((Seq(cur.idColumn, cur.reportBy) ++
-        cur.sinks.flatMap(_.partitionBy)).distinct.map(col)) :+ col("n_toks")
-      val surv = base.filter(members.reduce(_ && _)).select(survCols: _*)
-      val query = surv.writeStream
+      val query = survivors(cur, interpret(cur, stream, index, streaming = true))
+        .writeStream
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           cur.sinks.foreach(s => graft.io.SinkWriter.write(batch, s, subs))
@@ -1577,7 +1412,7 @@ object CurationFlow {
 
   def q298_declared_stream_neardup(spark: SparkSession, dir: String): DataFrame =
     driveStream(spark, dir, Metadata.parseCuration(streamNearDupCurationJson),
-      index = Some((spark, dir)))
+      index = Some(dir))
 
   val q298_oracle: String =
     oracleSql(Metadata.parseCuration(streamNearDupCurationJson))
@@ -1590,9 +1425,9 @@ object CurationFlow {
     * applied to embedding clusters) and every micro-batch pays one
     * stream-static left join against the bounded dup set. No
     * generated oracle (the k-means stage refuses the render — q323's
-    * rule); Round17OpsSpec pins stream ≡ batch row for row, which
-    * chains through q323's oracle-shaped equality to the independent
-    * hand-composed stack.
+    * rule); CurationFlowSpec pins stream ≡ batch row for row, which
+    * chains through q323's oracle-shaped equality (Round17OpsSpec) to
+    * the independent hand-composed stack.
     */
   val streamSemanticCurationJson: String =
     """{
@@ -1611,7 +1446,7 @@ object CurationFlow {
 
   def q326_declared_stream_semantic(spark: SparkSession, dir: String): DataFrame =
     driveStream(spark, dir, Metadata.parseCuration(streamSemanticCurationJson),
-      index = Some((spark, dir)))
+      index = Some(dir))
 
   // ---------- q314: loss attribution over the STREAM ----------
 
@@ -1627,7 +1462,7 @@ object CurationFlow {
     */
   def q314_declared_stream_attrition(spark: SparkSession, dir: String): DataFrame =
     driveStream(spark, dir, Metadata.parseCuration(streamNearDupCurationJson),
-      index = Some((spark, dir)), report = runStreamAttrition(_, _, _))
+      index = Some(dir), report = runStreamAttrition(_, _, _))
 
   val q314_oracle: String =
     attritionOracleSql(Metadata.parseCuration(streamNearDupCurationJson))

@@ -82,20 +82,6 @@ object StreamingParity {
       })
   }
 
-  /** Stateful replay queries commit one state-store delta per shuffle
-    * partition per micro-batch; at the harness's row counts 32
-    * partitions are pure checkpoint-fsync overhead. Pin the stream to
-    * a few partitions and restore the session conf after — the
-    * operator's semantics are partition-count-free (that is exactly
-    * what the DuckDB gate proves).
-    */
-  private def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, old)
-  }
-
   /** Stage prebuilt batch files into watchDir with strictly increasing
     * modification times — the file source picks files up oldest-first,
     * so arrival order is deterministic. Pure FS copies of the
@@ -140,7 +126,7 @@ object StreamingParity {
       stageBatches(spark, dir, fs, watchDir,
         Seq("b0", "b1", "sent_tumbling"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      withShufflePartitions(spark, 8) {
+      CurationFlow.withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(watchDir)
         val query = EventsStreaming.tumblingCounts(stream)
@@ -185,7 +171,7 @@ object StreamingParity {
       stageBatches(spark, dir, fs, watchDir,
         Seq("b0", "b1", "sent_sessions"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      withShufflePartitions(spark, 8) {
+      CurationFlow.withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(watchDir)
           .as[EventsStreaming.Event](org.apache.spark.sql.Encoders.product)
@@ -265,7 +251,7 @@ object StreamingParity {
       stageBatches(spark, dir, fs, watchDir,
         Seq("b0", "b1_redelivered"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      withShufflePartitions(spark, 8) {
+      CurationFlow.withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(watchDir)
         val query = stream
@@ -325,7 +311,7 @@ object StreamingParity {
     try {
       stageBatches(spark, dir, fs, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      withShufflePartitions(spark, 8) {
+      CurationFlow.withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(watchDir)
         val views = stream.filter(col("event_type") === "view")
@@ -395,7 +381,7 @@ object StreamingParity {
       stageBatches(spark, dir, fs, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      withShufflePartitions(spark, 8) {
+      CurationFlow.withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(watchDir)
         val query = stream.writeStream
@@ -450,7 +436,7 @@ object StreamingParity {
       stageBatches(spark, dir, fs, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      withShufflePartitions(spark, 8) {
+      CurationFlow.withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(watchDir)
         val query = stream.writeStream
@@ -504,7 +490,7 @@ object StreamingParity {
       stageBatches(spark, dir, fs, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      withShufflePartitions(spark, 8) {
+      CurationFlow.withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(watchDir)
         val query = stream.writeStream
@@ -603,7 +589,7 @@ object StreamingParity {
         t0 + 1000L)
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      withShufflePartitions(spark, 8) {
+      CurationFlow.withStreamShufflePartitions(spark) {
         val query = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(watchDir)
           .writeStream

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.meta.{Metadata, MetadataError}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** The declared-curation contract: q276's JSON-configured funnel must
   * reproduce q86's hand-composed one exactly (same constants → same
@@ -166,32 +167,173 @@ class CurationFlowSpec extends SparkSpec {
     assert(sql.contains("cum_budget - n_toks < 2000"))
   }
 
-  test("q292 stream == batch run of the same config, row for row") {
-    val cur = Metadata.parseCuration(CurationFlow.streamCurationJson)
-    val streamed = CurationFlow.q292_declared_curation_stream(spark, sf())
-    val batch = CurationFlow.run(spark, sf(), cur)
-    assert(streamed.columns.toSeq === batch.columns.toSeq)
-    val s = streamed.collect().map(_.toSeq)
-    val b = batch.collect().map(_.toSeq)
-    assert(s.length === b.length && s.nonEmpty)
-    s.zip(b).foreach { case (a, e) => assert(a === e) }
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** One stream ≡ batch pin: the streamed report of a config against
+    * the batch interpreter's report of the same config. `rowForRow`
+    * additionally compares the two ordered collects position by
+    * position; `check` adds case-specific assertions on the streamed
+    * rows. */
+  private case class StreamCase(
+      name: String, streamed: String => DataFrame, batch: String => DataFrame,
+      diverged: String, rowForRow: Boolean = false,
+      check: Array[Row] => Unit = _ => ())
+
+  private val streamCases = Seq(
+    StreamCase("q292 stream == batch run of the same config, row for row",
+      CurationFlow.q292_declared_curation_stream(spark, _),
+      CurationFlow.run(spark, _, Metadata.parseCuration(CurationFlow.streamCurationJson)),
+      "stream and batch disagree on the per-row funnel", rowForRow = true),
+    StreamCase(
+      "q298 stream (index-backed near-dedup) == batch run of the same config, row for row",
+      CurationFlow.q298_declared_stream_neardup(spark, _),
+      CurationFlow.run(spark, _,
+        Metadata.parseCuration(CurationFlow.streamNearDupCurationJson)),
+      "stream and batch disagree on the index-backed funnel", rowForRow = true,
+      check = { report =>
+        // the near-dup stage genuinely dropped rows in flight (the
+        // config isn't vacuous on this corpus)
+        val raw = report.map(r => r.getLong(r.fieldIndex("n_raw"))).sum
+        val kept = report.map(r => r.getLong(r.fieldIndex("n_neardup"))).sum
+        assert(kept < raw, "dedup_near dropped nothing — fixture corpus has near-dups")
+      }),
+    StreamCase("q314: streamed attrition equals the batch attrition of the same config row for row",
+      CurationFlow.q314_declared_stream_attrition(spark, _),
+      CurationFlow.runAttrition(spark, _,
+        Metadata.parseCuration(CurationFlow.streamNearDupCurationJson)),
+      "in-flight lineage diverged from the batch interpreter"),
+    StreamCase("q326: the streamed semantic funnel equals the batch interpreter of the same config row for row",
+      CurationFlow.q326_declared_stream_semantic(spark, _),
+      CurationFlow.run(spark, _,
+        Metadata.parseCuration(CurationFlow.streamSemanticCurationJson)),
+      "in-flight semantic membership diverged from the batch interpreter"),
+    StreamCase("q328: the streamed mask funnel equals the batch interpreter of the same config",
+      CurationFlow.q328_declared_stream_mask(spark, _),
+      CurationFlow.run(spark, _, Metadata.parseCuration(CurationFlow.streamMaskCurationJson)),
+      "stream and batch disagree on the masked funnel"))
+
+  streamCases.foreach { c =>
+    test(c.name) {
+      val dir = sf()
+      val streamed = c.streamed(dir)
+      val batch = c.batch(dir)
+      assert(streamed.columns.toSeq === batch.columns.toSeq)
+      assert(sameRows(streamed, batch), c.diverged)
+      val s = streamed.collect()
+      assert(s.nonEmpty)
+      if (c.rowForRow) {
+        val b = batch.collect()
+        assert(s.length === b.length)
+        s.map(_.toSeq).zip(b.map(_.toSeq)).foreach { case (x, e) => assert(x === e) }
+      }
+      c.check(s)
+    }
   }
 
-  test("q298 stream (index-backed near-dedup) == batch run of the same config, row for row") {
-    val cur = Metadata.parseCuration(CurationFlow.streamNearDupCurationJson)
-    val streamed = CurationFlow.q298_declared_stream_neardup(spark, sf())
-    val batch = CurationFlow.run(spark, sf(), cur)
-    assert(streamed.columns.toSeq === batch.columns.toSeq)
-    val s = streamed.collect().map(_.toSeq)
-    val b = batch.collect().map(_.toSeq)
-    assert(s.length === b.length && s.nonEmpty)
-    s.zip(b).foreach { case (a, e) => assert(a === e) }
-    // the near-dup stage genuinely dropped rows in flight (the config
-    // isn't vacuous on this corpus)
-    val report = streamed.collect()
-    val raw = report.map(r => r.getLong(r.fieldIndex("n_raw"))).sum
-    val kept = report.map(r => r.getLong(r.fieldIndex("n_neardup"))).sum
-    assert(kept < raw, "dedup_near dropped nothing — fixture corpus has near-dups")
+  test("decontaminate keeps a NULL-text document in stream and batch alike") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{col, lit, sum}
+    val work = graft.io.Scratch.dir(spark, "graft-nulltext-")
+    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val docs = graft.Tables.load(spark, sf(), "documents").orderBy("doc_id").limit(40)
+      docs.unionByName(docs.limit(1)
+          .withColumn("doc_id", lit(-1L))
+          .withColumn("text", lit(null).cast("string")))
+        .write.parquet(s"$work/documents.parquet")
+      val cur = Metadata.parseCuration(
+        """{"curation": {"table": "documents", "id_column": "doc_id",
+          |  "text_column": "text", "report_by": "source", "stages": [
+          |  {"type": "decontaminate", "name": "bench", "shingles": [
+          |    "the fast key", "spark group query", "join a filter"]}
+          |]}}""".stripMargin)
+      val batch = CurationFlow.run(spark, work, cur)
+      val streamed = CurationFlow.driveStream(spark, work, cur, index = None)
+      assert(sameRows(streamed, batch),
+        "stream and batch disagree on a NULL-text document")
+      // the NULL-text document is in the corpus both reports count
+      assert(batch.agg(sum(col("n_raw"))).head().getLong(0) === 41L)
+    } finally fs.delete(new Path(work), true)
+  }
+
+  /** One single-stage config per grammar case. `Streams(index)`: the
+    * stage runs over a stream (against the stored artifacts when
+    * `index`, which it then also needs) and must equal the batch
+    * run; `BatchOnly`: the stream entry refuses it. */
+  private sealed trait Streamability
+  private final case class Streams(index: Boolean) extends Streamability
+  private case object BatchOnly extends Streamability
+
+  private def oneStage(stage: String): String =
+    s"""{"curation": {"table": "documents", "id_column": "doc_id",
+       |  "text_column": "text", "report_by": "source",
+       |  "stages": [${stage.stripMargin}]}}""".stripMargin
+
+  private val grammarCases: Seq[(String, String, Streamability)] = Seq(
+    ("dedup_exact", """{"type": "dedup_exact", "name": "g"}""", BatchOnly),
+    ("dedup_near", """{"type": "dedup_near", "name": "g"}""", Streams(index = true)),
+    ("quality_filter", """{"type": "quality_filter", "name": "g", "rules": [
+        |  {"reason": "too_short", "metric": "n_toks", "op": "lt", "value": 10},
+        |  {"reason": "low_quality", "metric": "quality", "op": "lt", "value": 0.4}]}""",
+      Streams(index = false)),
+    ("decontaminate", """{"type": "decontaminate", "name": "g", "shingles": [
+        |  "the fast key", "spark group query", "join a filter"]}""", Streams(index = false)),
+    ("mixture_sample", """{"type": "mixture_sample", "name": "g", "salt": "g1",
+        |  "by": "source", "weights": [{"group": "src0", "keep16": 8},
+        |  {"group": "src1", "keep16": 4}, {"group": "src2", "keep16": 2}]}""",
+      Streams(index = false)),
+    ("split", """{"type": "split", "name": "g", "salt": "g1", "keep": "1_train",
+        |  "buckets": [{"name": "1_train", "upper": 204}, {"name": "2_test", "upper": 256}]}""",
+      Streams(index = false)),
+    ("split (leakage_free)", """{"type": "split", "name": "g", "salt": "g1",
+        |  "keep": "1_train", "leakage_free": true,
+        |  "buckets": [{"name": "1_train", "upper": 204}, {"name": "2_test", "upper": 256}]}""",
+      Streams(index = true)),
+    ("token_budget", """{"type": "token_budget", "name": "g", "salt": "g1",
+        |  "by": "source", "budget": 500}""", BatchOnly),
+    ("dedup_semantic", """{"type": "dedup_semantic", "name": "g", "missing": "drop"}""",
+      Streams(index = true)),
+    ("mask", """{"type": "mask", "name": "g", "rules": [
+        |  {"pattern": "customer", "replacement": "<CUST>"}]}""", Streams(index = false)),
+    ("span_scrub", """{"type": "span_scrub", "name": "g", "span_len": 8}""", BatchOnly),
+    ("containment", """{"type": "containment", "name": "g", "min_pct": 80}""", BatchOnly))
+
+  test("grammar coverage: every CurationStageDef subclass has a one-stage case") {
+    import scala.reflect.runtime.universe._
+    val known = typeOf[graft.meta.CurationStageDef].typeSymbol.asClass
+      .knownDirectSubclasses.map(_.fullName)
+    val covered = grammarCases.flatMap { case (_, stage, _) =>
+      Metadata.parseCuration(oneStage(stage)).stages.map(_.getClass.getName)
+    }.toSet
+    assert(known.nonEmpty)
+    assert(covered === known, s"stage types without a grammar case: ${known -- covered}")
+  }
+
+  grammarCases.foreach { case (label, stage, mode) =>
+    test(s"grammar coverage: $label over a stream at sf0.001") {
+      val dir = sf()
+      val cur = Metadata.parseCuration(oneStage(stage))
+      def refused(index: Option[String]): String = intercept[MetadataError](
+        CurationFlow.runStream(cur, graft.Tables.load(spark, dir, "documents"), index))
+        .getMessage
+      mode match {
+        case BatchOnly =>
+          val msg = refused(Some(dir))
+          assert(msg.contains("not streamable") && msg.contains(s"($label)"), msg)
+        case Streams(needsIndex) =>
+          if (needsIndex) {
+            val msg = refused(None)
+            assert(msg.contains("not streamable") && msg.contains("index"), msg)
+          }
+          val index = if (needsIndex) Some(dir) else None
+          val streamed = CurationFlow.driveStream(spark, dir, cur, index)
+          val batch = CurationFlow.run(spark, dir, cur)
+          assert(streamed.columns.toSeq === batch.columns.toSeq)
+          assert(sameRows(streamed, batch), s"$label: stream and batch disagree")
+          assert(streamed.count() > 0)
+      }
+    }
   }
 
   test("runStream without an index still fails fast on dedup_near; with one it submits") {

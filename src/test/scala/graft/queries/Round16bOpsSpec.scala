@@ -166,16 +166,6 @@ class Round16bOpsSpec extends SparkSpec {
       "stream-ingested signature index diverged from the persisted build")
   }
 
-  test("q314: streamed attrition equals the batch attrition of the same config row for row") {
-    import graft.meta.Metadata
-    val dir = sf("sf0.001")
-    val cur = Metadata.parseCuration(CurationFlow.streamNearDupCurationJson)
-    val streamed = CurationFlow.q314_declared_stream_attrition(spark, dir)
-    val batch = CurationFlow.runAttrition(spark, dir, cur)
-    assert(sameRows(streamed, batch),
-      "in-flight lineage diverged from the batch interpreter")
-  }
-
   test("q315: planted fixture — identical halves read zero, a planted shift reads its exact micro value") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._

@@ -152,15 +152,6 @@ class Round17OpsSpec extends SparkSpec {
     } finally fs.delete(new Path(work), true)
   }
 
-  test("q326: the streamed semantic funnel equals the batch interpreter of the same config row for row") {
-    import graft.meta.Metadata
-    val dir = sf("sf0.001")
-    val cur = Metadata.parseCuration(CurationFlow.streamSemanticCurationJson)
-    assert(sameRows(CurationFlow.q326_declared_stream_semantic(spark, dir),
-      CurationFlow.run(spark, dir, cur)),
-      "in-flight semantic membership diverged from the batch interpreter")
-  }
-
   test("maintainLog: the chosen artifact always scores like the always-compact leg; below threshold nothing is written") {
     import org.apache.hadoop.fs.Path
     val dir = sf("sf0.001")

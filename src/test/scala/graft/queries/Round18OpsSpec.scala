@@ -95,15 +95,6 @@ class Round18OpsSpec extends SparkSpec {
       "the composed second mask stage was a no-op")
   }
 
-  test("q328: the streamed mask funnel equals the batch interpreter of the same config") {
-    import graft.meta.Metadata
-    val dir = sf("sf0.001")
-    val cur = Metadata.parseCuration(CurationFlow.streamMaskCurationJson)
-    assert(sameRows(CurationFlow.q328_declared_stream_mask(spark, dir),
-      CurationFlow.run(spark, dir, cur)),
-      "stream and batch disagree on the masked funnel")
-  }
-
   test("q329: the span scrub pre-pass removes duplicated spans the downstream gates then read") {
     import graft.meta.{Metadata, SpanScrubStageDef}
     val dir = sf("sf0.01")

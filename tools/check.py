@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate.
 
-Usage: python tools/check.py <sfDir> <verifyOutDir>
+Usage: python tools/check.py <sfDir> <verifyOutDir> [names]
 
 Reads each <verifyOutDir>/<name> (Spark parquet dir) and the oracle SQL
 from <verifyOutDir>/oracle_sql.json, runs the SQL in DuckDB against the
@@ -51,6 +51,7 @@ def cmp_cell(a, b) -> bool:
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
@@ -58,10 +59,14 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
+    if only is not None:
+        oracles = {k: v for k, v in oracles.items() if k in only}
 
     failures = 0
     # rows-only check for queries that (by design) ship no oracle SQL
     all_outputs = {p.split("/")[-1] for p in glob.glob(f"{out_dir}/q*") if "." not in p.split("/")[-1]}
+    if only is not None:
+        all_outputs = only
     for name in sorted(all_outputs - set(oracles)):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         n = sum(len(pd.read_parquet(p)) for p in files) if files else 0
