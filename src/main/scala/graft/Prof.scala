@@ -49,7 +49,7 @@ object Prof {
     val fn = SparkEntry.queries(name)
     // warm once on the flagship so JVM/codegen startup is not in the trace
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => System.err.println(s"[prof] warm-up flagship failed: $e") }
     for (i <- 1 to repeat) {
       taskCount = new java.util.concurrent.atomic.AtomicLong()
       val t0 = System.nanoTime()

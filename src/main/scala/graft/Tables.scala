@@ -11,13 +11,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * nothing here is local-filesystem specific.
   *
   * IMMUTABILITY CONTRACT: a scale-factor directory is read-only for
-  * the lifetime of the JVM. The session-artifact stores (SigIndex,
-  * OrdIndex, CcLabels, TradeGraph, SemVerdicts, TopkState, BPE merges,
-  * quantizer models, StagedSplits) memoize derived tables keyed by
-  * `dir` for the whole process — mutating a corpus dir mid-session
-  * would silently serve stale artifacts. The driver's testdata is
-  * generated once and never rewritten, so the key is sound there; any
-  * future writer must use a fresh dir (or restart the session).
+  * the lifetime of the JVM. [[graft.io.Artifacts]] memoizes derived
+  * state keyed by `dir` for the whole process and checks the contract:
+  * every hit re-lists the dir and fails loudly if it changed since the
+  * build. A writer of a changed corpus must use a fresh dir.
   */
 object Tables {
   val names: Seq[String] = Seq(

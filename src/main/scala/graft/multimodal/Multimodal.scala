@@ -170,7 +170,7 @@ object Multimodal {
     try {
       val d = Tables.load(spark, dir, "documents")
       graft.queries.CurationFlow.stageTwoBatches(spark, work, d, "doc_id",
-        shareTag = Some(s"$dir|documents"))
+        feed = Some(dir -> "documents"))
       val stream = spark.readStream.schema(d.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
       graft.queries.CurationFlow.withStreamShufflePartitions(spark) {

@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.json4s.JString
+import org.json4s.jackson.JsonMethods
 
 /** Structured JSON run log (reference utils/json_logger.py): one JSON
   * document per run with stages and sub-stages, written to any Hadoop
@@ -11,15 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RunLog {
 
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private def q(s: String): String = JsonMethods.compact(JString(s))
 
   def stageJson(r: Runner.StageReport): String = {
     val detail = r.detail.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString(", ")

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{TextFunctions => T}
+import graft.io.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,12 +73,8 @@ object BpeTrain {
     * right storage (the spec pins cross-run determinism, so caching
     * cannot change answers).
     */
-  private object Merges {
-    private val built =
-      new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, String, Long)]]()
-    def get(spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-      built.computeIfAbsent(dir, _ => train(spark, dir))
-  }
+  private def trainedMerges(spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
+    Artifacts.value(spark, "bpe", dir)(train(spark, dir))
 
   /** Driver-side vocabulary bound for the merge loop — the standard
     * BPE truncation knob (real tokenizer trainers cut by minimum
@@ -137,7 +134,7 @@ object BpeTrain {
     */
   def q92_bpe_train(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Merges.get(spark, dir)
+    trainedMerges(spark, dir)
       .toDF("rank", "left", "right", "pair_count")
       .orderBy("rank")
   }
@@ -167,7 +164,7 @@ object BpeTrain {
     */
   def q93_bpe_apply(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val merges = Merges.get(spark, dir).map { case (_, l, r, _) => (l, r) }
+    val merges = trainedMerges(spark, dir).map { case (_, l, r, _) => (l, r) }
     val wordCost = wordFreq(spark, dir)
       .as[(String, Long)]
       .map { case (w, _) =>

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{HashFunctions => H, TextFunctions => T}
+import graft.io.Artifacts
 import graft.meta._
 import graft.operators.RangeRank
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1144,7 +1145,7 @@ object CurationFlow {
     try {
       val docs = Tables.load(spark, dir, cur.table)
       stageTwoBatches(spark, work, docs, cur.idColumn,
-        shareTag = Some(s"$dir|${cur.table}"))
+        feed = Some(dir -> cur.table))
       withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
@@ -1190,28 +1191,31 @@ object CurationFlow {
     * or static-membership and the downstream aggregates/sink appends
     * are commutative.
     *
-    * `shareTag`: the staged bytes are a pure function of (feed rows,
+    * `feed`: the staged bytes are a pure function of (feed rows,
     * idColumn), and ten streaming legs stage the SAME feed (the raw
     * documents table, the embeddings batch half, …) — building the
     * split per leg paid two filtered corpus writes each. A caller
-    * that passes the feed's identity (e.g. "$dir|documents") gets the
-    * session-stored split (built once, Scratch-cleaned at exit) and
-    * pays two FS copies instead — the StagedSplits/CcLabels rule
-    * applied to stream STAGING (input simulation, not results: every
-    * micro-batch is still read, planned and processed per leg).
+    * that passes the feed's identity (corpus dir, feed name — e.g.
+    * `dir -> "documents"`) gets the session-stored split (built once,
+    * Scratch-cleaned at exit) and pays two FS copies instead — the
+    * staged-splits/CcLabels rule applied to stream STAGING (input
+    * simulation, not results: every micro-batch is still read,
+    * planned and processed per leg).
     * Callers with a one-off feed pass None and build privately.
     */
   private[graft] def stageTwoBatches(
       spark: SparkSession, work: String, docs: DataFrame,
-      idColumn: String, shareTag: Option[String] = None): Unit = {
+      idColumn: String, feed: Option[(String, String)] = None): Unit = {
     import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(work).getFileSystem(conf)
     fs.mkdirs(new Path(s"$work/incoming"))
     val t0 = System.currentTimeMillis()
-    shareTag match {
-      case Some(tag) =>
-        val src = StagedTwoBatches.dir(spark, s"$tag|$idColumn", docs, idColumn)
+    feed match {
+      case Some((dir, name)) =>
+        val src = Artifacts.dir(spark, "2batch", dir, name, idColumn) { store =>
+          writeTwoBatchFiles(spark, store, docs, idColumn)
+        }
         Seq("b0", "b1").zipWithIndex.foreach { case (name, i) =>
           val target = new Path(s"$work/incoming/$name.parquet")
           org.apache.hadoop.fs.FileUtil.copy(
@@ -1220,19 +1224,6 @@ object CurationFlow {
         }
       case None => writeTwoBatchFiles(spark, s"$work/incoming", docs, idColumn)
     }
-  }
-
-  /** Session-stored two-batch splits keyed by the caller-declared feed
-    * identity (see [[stageTwoBatches]]). */
-  private object StagedTwoBatches {
-    private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def dir(spark: SparkSession, key: String,
-        docs: => DataFrame, idColumn: String): String =
-      built.computeIfAbsent(key, _ => {
-        val store = graft.io.Scratch.dirAutoCleaned(spark, "graft-2batch-")
-        writeTwoBatchFiles(spark, store, docs, idColumn)
-        store
-      })
   }
 
   private def writeTwoBatchFiles(
@@ -1299,7 +1290,7 @@ object CurationFlow {
       val subs = graft.io.SourceReader.Substitutions(Map("out" -> work))
       val docs = Tables.load(spark, dir, cur.table)
       stageTwoBatches(spark, work, docs, cur.idColumn,
-        shareTag = Some(s"$dir|${cur.table}"))
+        feed = Some(dir -> cur.table))
       val stream = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
       val query = survivors(cur, interpret(cur, stream, index, streaming = true))

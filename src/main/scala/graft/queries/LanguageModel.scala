@@ -298,7 +298,7 @@ object LanguageModel {
     try {
       val docs = Tables.load(spark, dir, "documents")
       CurationFlow.stageTwoBatches(spark, work, docs, "doc_id",
-        shareTag = Some(s"$dir|documents"))
+        feed = Some(dir -> "documents"))
       val stream = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
       CurationFlow.withStreamShufflePartitions(spark) {

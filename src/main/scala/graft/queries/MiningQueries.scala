@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{TextFunctions => T}
+import graft.io.Artifacts
 import graft.operators.MisraGries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -228,27 +229,21 @@ object MiningQueries {
     * TextQueries' OrdIndex. Exact counts (not just MG survivors) are
     * what make the refresh O(batch + vocab): the recount never has to
     * rescan era A. */
-  private object TopkState {
-    private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def path(spark: SparkSession, dir: String): String =
-      built.computeIfAbsent(dir, _ => {
-        val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-mgstate-")
-        val vocab = Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 4 =!= 3)
-          .select(explode(T.tokens(col("text"))).as("token"))
-          .groupBy("token").agg(count(lit(1)).cast("long").as("cnt"))
-        val nA = vocab.agg(coalesce(sum(col("cnt")), lit(0L)))
-          .head.getLong(0)
-        vocab.withColumn("n_era", lit(nA))
-          .write.mode("overwrite").parquet(s"$work/mg_state")
-        s"$work/mg_state"
-      })
-  }
+  private def topkState(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.table(spark, "mgstate", dir) {
+      val vocab = Tables.load(spark, dir, "documents")
+        .filter(col("doc_id") % 4 =!= 3)
+        .select(explode(T.tokens(col("text"))).as("token"))
+        .groupBy("token").agg(count(lit(1)).cast("long").as("cnt"))
+      val nA = vocab.agg(coalesce(sum(col("cnt")), lit(0L)))
+        .head.getLong(0)
+      vocab.withColumn("n_era", lit(nA))
+    }
 
   /** Builds q209's committed state eagerly (Bench warmup hook — the
     * prior-state contract, as with q186). */
   def warmTopkState(spark: SparkSession, dir: String): Unit = {
-    TopkState.path(spark, dir); ()
+    topkState(spark, dir); ()
   }
 
   /** INCREMENTAL φ-heavy hitters — q118's operator under the
@@ -276,7 +271,7 @@ object MiningQueries {
     */
   def q209_incremental_topk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val state = spark.read.parquet(TopkState.path(spark, dir))
+    val state = topkState(spark, dir)
     val nA = state.agg(coalesce(max(col("n_era")), lit(0L))).head.getLong(0)
     val toksB = Tables.load(spark, dir, "documents")
       .filter(col("doc_id") % 4 === 3)

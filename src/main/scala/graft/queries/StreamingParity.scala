@@ -3,6 +3,7 @@ package graft.queries
 import java.sql.Timestamp
 
 import graft.Tables
+import graft.io.Artifacts
 import graft.streaming.EventsStreaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,59 +40,53 @@ object StreamingParity {
     * what made q74's wall time a harness-I/O lottery (5.6/7.3/13.8 s
     * across three runs of identical operator code).
     */
-  private object StagedSplits {
-    private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-    def path(spark: SparkSession, dir: String): String =
-      built.computeIfAbsent(dir, _ => {
-        val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-evsplit-")
-        val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val events = eventCols(spark, dir)
-        val cutoffTs = lit(cutoff).cast("timestamp")
-        val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
-        def sentinel(offsetMs: Long, users: DataFrame) = users.select(
-          lit(-1L).as("event_id"),
-          lit(new Timestamp(maxTs.getTime + offsetMs)).as("ts"),
-          col("user_id"),
-          lit("__sentinel__").as("event_type"),
-          lit(0.0).as("value"))
-        val b0 = events.filter(col("ts") < cutoffTs)
-        val b1 = events.filter(col("ts") >= cutoffTs)
-        // q88's at-least-once batch: the post-cutoff events PLUS the
-        // redelivered pre-cutoff tail in the SAME file — the
-        // redelivery must share its micro-batch with the new data or
-        // the advanced watermark would drop it as late instead of the
-        // dedup state matching it
-        val redelivered = b0.filter(col("ts") >= cutoffTs - expr("INTERVAL 1 HOUR"))
-        Seq(
-          "b0" -> b0,
-          "b1" -> b1,
-          "b1_redelivered" -> b1.unionAll(redelivered),
-          "sent_tumbling" -> sentinel(4 * 3600 * 1000L,
-            spark.range(1).select(lit(-1L).as("user_id"))),
-          "sent_sessions" -> sentinel(3600 * 1000L,
-            events.select(col("user_id")).distinct()))
-          .foreach { case (name, df) =>
-            df.coalesce(1).write.parquet(s"$work/$name")
-            val part = fs.globStatus(new Path(s"$work/$name/part-*.parquet")).head.getPath
-            require(fs.rename(part, new Path(s"$work/$name.parquet")),
-              s"failed to finalize staged split $name")
-            fs.delete(new Path(s"$work/$name"), true)
-          }
-        work
-      })
-  }
+  private def stagedSplits(spark: SparkSession, dir: String): String =
+    Artifacts.dir(spark, "evsplit", dir) { work =>
+      val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val events = eventCols(spark, dir)
+      val cutoffTs = lit(cutoff).cast("timestamp")
+      val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
+      def sentinel(offsetMs: Long, users: DataFrame) = users.select(
+        lit(-1L).as("event_id"),
+        lit(new Timestamp(maxTs.getTime + offsetMs)).as("ts"),
+        col("user_id"),
+        lit("__sentinel__").as("event_type"),
+        lit(0.0).as("value"))
+      val b0 = events.filter(col("ts") < cutoffTs)
+      val b1 = events.filter(col("ts") >= cutoffTs)
+      // q88's at-least-once batch: the post-cutoff events PLUS the
+      // redelivered pre-cutoff tail in the SAME file — the
+      // redelivery must share its micro-batch with the new data or
+      // the advanced watermark would drop it as late instead of the
+      // dedup state matching it
+      val redelivered = b0.filter(col("ts") >= cutoffTs - expr("INTERVAL 1 HOUR"))
+      Seq(
+        "b0" -> b0,
+        "b1" -> b1,
+        "b1_redelivered" -> b1.unionAll(redelivered),
+        "sent_tumbling" -> sentinel(4 * 3600 * 1000L,
+          spark.range(1).select(lit(-1L).as("user_id"))),
+        "sent_sessions" -> sentinel(3600 * 1000L,
+          events.select(col("user_id")).distinct()))
+        .foreach { case (name, df) =>
+          df.coalesce(1).write.parquet(s"$work/$name")
+          val part = fs.globStatus(new Path(s"$work/$name/part-*.parquet")).head.getPath
+          require(fs.rename(part, new Path(s"$work/$name.parquet")),
+            s"failed to finalize staged split $name")
+          fs.delete(new Path(s"$work/$name"), true)
+        }
+    }
 
   /** Stage prebuilt batch files into watchDir with strictly increasing
     * modification times — the file source picks files up oldest-first,
     * so arrival order is deterministic. Pure FS copies of the
-    * session's [[StagedSplits]]; no Spark job runs here.
+    * session's [[stagedSplits]]; no Spark job runs here.
     */
   private def stageBatches(
       spark: SparkSession, dir: String,
       fs: FileSystem, watchDir: String,
       batches: Seq[String]): Unit = {
-    val splits = StagedSplits.path(spark, dir)
+    val splits = stagedSplits(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
     fs.mkdirs(new Path(watchDir))
     val t0 = System.currentTimeMillis()
@@ -565,7 +560,7 @@ object StreamingParity {
       fs.mkdirs(new Path(watchDir))
       // stage each batch as ONE plain file (the file source lists
       // files, not directories) with strictly increasing mtimes —
-      // StagedSplits' recipe
+      // stagedSplits' recipe
       def stage(name: String, df: DataFrame, mtime: Long): Unit = {
         df.coalesce(1).write.parquet(s"$work/$name")
         val part = fs.globStatus(new Path(s"$work/$name/part-*.parquet")).head.getPath

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{HashFunctions => H, TextFunctions => T}
+import graft.io.Artifacts
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -172,18 +173,12 @@ object TextQueries {
     * amortize-everywhere deal a 100 TB deployment runs on (there the
     * path would be a permanent table, not a session temp dir).
     */
-  private object SigIndex {
-    private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def path(spark: SparkSession, dir: String): String =
-      built.computeIfAbsent(dir, _ => {
-        val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-sigidx-")
-        sigTable(spark, dir)
-          .withColumn("skd", array_distinct(H.shingleKeys(col("sh"))))
-          .drop("sh")
-          .write.mode("overwrite").parquet(s"$work/sig_index")
-        s"$work/sig_index"
-      })
-  }
+  private def sigIndex(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.table(spark, "sigidx", dir) {
+      sigTable(spark, dir)
+        .withColumn("skd", array_distinct(H.shingleKeys(col("sh"))))
+        .drop("sh")
+    }
 
   /** (doc_id, skd, band, bucket) from a stored signature index — one
     * row per document per LSH band, shared by the corpus self-join
@@ -231,17 +226,17 @@ object TextQueries {
     * verified with true Jaccard over stored shingle keys. The
     * self-join is on (band, bucket) — at corpus scale each bucket
     * holds a handful of docs, so the join output is near-linear, not
-    * quadratic. Reads the session's stored [[SigIndex]] (built once),
+    * quadratic. Reads the session's stored [[sigIndex]] (built once),
     * so the q47/q60/q68/q86 family stopped re-tokenizing the corpus
     * once per query.
     */
   private[queries] def lshPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsFromIndex(spark.read.parquet(SigIndex.path(spark, dir)))
+    pairsFromIndex(sigIndex(spark, dir))
 
   def q25_minhash_lsh_pairs(spark: SparkSession, dir: String): DataFrame =
     lshPairs(spark, dir).orderBy("a_id", "b_id")
 
-  /** Session-lifetime STORED near-dup cluster labels — the [[SigIndex]]
+  /** Session-lifetime STORED near-dup cluster labels — the [[sigIndex]]
     * rule applied to the cluster-RESOLUTION step. Twelve consumers
     * (q47/q60/q86/q200/q212/q220/q223/q231/q232/q234 and both declared-
     * funnel interpreters) each ran ConnectedComponents over the SAME
@@ -254,28 +249,16 @@ object TextQueries {
     * dedup deployment keeps beside its signature index (labels change
     * only when the index does, and the index-maintenance legs
     * q94/q317 rebuild pairs from their OWN fresh artifacts, never
-    * this one).
-    */
-  private object CcLabels {
-    private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def path(spark: SparkSession, dir: String): String =
-      built.computeIfAbsent(dir, _ => {
-        val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-cclbl-")
-        val pairs = lshPairs(spark, dir)
-          .select("a_id", "b_id").transform(graft.Lineage.cut)
-        graft.operators.ConnectedComponents.run(pairs, "a_id", "b_id")
-          .write.mode("overwrite").parquet(s"$work/cc_labels")
-        s"$work/cc_labels"
-      })
-  }
-
-  /** (id, component) near-dup cluster labels over [[lshPairs]]' pair
-    * set — one row per vertex appearing in any verified pair,
-    * component = min reachable doc id (ConnectedComponents' contract),
-    * served from the session's stored label table.
+    * this one). One (id, component) row per vertex appearing in any
+    * verified pair; component = min reachable doc id
+    * (ConnectedComponents' contract).
     */
   private[queries] def dupClusters(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(CcLabels.path(spark, dir))
+    Artifacts.table(spark, "cclbl", dir) {
+      val pairs = lshPairs(spark, dir)
+        .select("a_id", "b_id").transform(graft.Lineage.cut)
+      graft.operators.ConnectedComponents.run(pairs, "a_id", "b_id")
+    }
 
   /** `base AS (…), bands AS (…)` CTE prefix over the STORED-index
     * columns (skd + signature) — the DuckDB twin of
@@ -649,7 +632,7 @@ object TextQueries {
     // real deployment keeps on storage and probes per arriving batch;
     // no re-shingling, no cache juggling (two columnar scans of the
     // narrow index are cheaper than materializing it in memory)
-    val bands = bandsFromIndex(spark.read.parquet(SigIndex.path(spark, dir)))
+    val bands = bandsFromIndex(sigIndex(spark, dir))
     val isBatch =
       substring(md5(concat(lit("b73|"), col("doc_id").cast("string"))), 1, 1)
         .isin("0", "1")
@@ -782,7 +765,7 @@ object TextQueries {
     * order with the DuckDB twin — bit-identical scores.
     */
   def q108_containment(spark: SparkSession, dir: String): DataFrame = {
-    val idx = spark.read.parquet(SigIndex.path(spark, dir))
+    val idx = sigIndex(spark, dir)
       .select(col("doc_id"), col("skd"))
     val posting = idx.select(col("doc_id"), explode(col("skd")).as("s"))
     val hot = posting.groupBy("s").agg(count(lit(1)).as("df"))
@@ -940,7 +923,7 @@ object TextQueries {
     try {
       val d = docs(spark, dir)
       CurationFlow.stageTwoBatches(spark, work, d, "doc_id",
-        shareTag = Some(s"$dir|documents"))
+        feed = Some(dir -> "documents"))
       val stream = spark.readStream.schema(d.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -1074,7 +1057,7 @@ object TextQueries {
     // table, novelty counts come from the first-seen table ALONE
     // (group its min-doc by doc), so the only join is doc-sized ⋈
     // doc-sized. Measured 46 s → ~2 s at sf0.1.
-    val sh = spark.read.parquet(SigIndex.path(spark, dir))
+    val sh = sigIndex(spark, dir)
       .select(col("doc_id"), explode(col("skd")).as("k"))
     val perDoc = sh.groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_shingles"))
@@ -1151,24 +1134,18 @@ object TextQueries {
     * from the stored signature index, written to scratch parquet,
     * reopened by every later threshold.
     */
-  private object OrdIndex {
-    private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def path(spark: SparkSession, dir: String): String =
-      built.computeIfAbsent(dir, _ => {
-        val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-ordidx-")
-        val keyed = spark.read.parquet(SigIndex.path(spark, dir))
-          .select(col("doc_id"), explode(col("skd")).as("k"))
-        val dfreq = keyed.groupBy("k").agg(count(lit(1)).as("df"))
-        keyed.join(dfreq, "k")
-          .groupBy("doc_id")
-          .agg(sort_array(collect_list(struct(col("df"), col("k")))).as("sw"))
-          .select(col("doc_id"),
-            transform(col("sw"), s => s.getField("k")).as("ks"),
-            size(col("sw")).as("n"))
-          .write.mode("overwrite").parquet(s"$work/ord_index")
-        s"$work/ord_index"
-      })
-  }
+  private def ordIndex(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.table(spark, "ordidx", dir) {
+      val keyed = sigIndex(spark, dir)
+        .select(col("doc_id"), explode(col("skd")).as("k"))
+      val dfreq = keyed.groupBy("k").agg(count(lit(1)).as("df"))
+      keyed.join(dfreq, "k")
+        .groupBy("doc_id")
+        .agg(sort_array(collect_list(struct(col("df"), col("k")))).as("sw"))
+        .select(col("doc_id"),
+          transform(col("sw"), s => s.getField("k")).as("ks"),
+          size(col("sw")).as("n"))
+    }
 
   /** The prefix-filter core over an (already persisted) df-ordered
     * key table — the plan only, no materialization: callers decide
@@ -1205,7 +1182,7 @@ object TextQueries {
     // the df-ordered key table comes from the session's stored
     // OrdIndex (built once per dir); persist because it feeds the
     // prefix explode AND both verify joins within this call
-    val ord = spark.read.parquet(OrdIndex.path(spark, dir)).persist()
+    val ord = ordIndex(spark, dir).persist()
     try allPairsExactOn(ord, num, den)
       .transform(graft.Lineage.cut) // eager: survives the unpersist
     finally ord.unpersist()
@@ -1463,10 +1440,10 @@ object TextQueries {
     import graft.operators.RangeRank
     val wCum = org.apache.spark.sql.expressions.Window.orderBy("decile")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val sh = spark.read.parquet(SigIndex.path(spark, dir))
+    val sh = sigIndex(spark, dir)
       .select(col("doc_id"), explode(col("skd")).as("k"))
     val docDecile = RangeRank.rank(
-        spark.read.parquet(SigIndex.path(spark, dir)).select(col("doc_id")),
+        sigIndex(spark, dir).select(col("doc_id")),
         Nil, Seq(RangeRank.Key("doc_id")), "rnk", "n")
       .select(col("doc_id"), expr("((rnk - 1) * 10) DIV n").cast("int").as("decile"))
     val keyed = sh.join(docDecile, "doc_id")
@@ -1538,7 +1515,7 @@ object TextQueries {
     // serial jobs; as union branches of a single job the three prefix
     // joins are independent subtrees whose stages the scheduler
     // overlaps across the cores (guide §2.6)
-    val ord = spark.read.parquet(OrdIndex.path(spark, dir)).persist()
+    val ord = ordIndex(spark, dir).persist()
     try {
       val rows = sweepThresholds.map { case (num, den) =>
         allPairsExactOn(ord, num, den)
@@ -1584,7 +1561,7 @@ object TextQueries {
     * sets ride the same parquet, no re-tokenization.
     */
   def q191_minhash_estimate(spark: SparkSession, dir: String): DataFrame = {
-    val idx = spark.read.parquet(SigIndex.path(spark, dir))
+    val idx = sigIndex(spark, dir)
     val pairs = lshPairs(spark, dir).select("a_id", "b_id")
     val sigCols = (0 until minhashK).map(i => f"mh$i%02d")
     def side(p: String) = idx.select(
@@ -1679,7 +1656,7 @@ object TextQueries {
     * decile floor is cross-engine stable.
     */
   def q203_lsh_precision(spark: SparkSession, dir: String): DataFrame = {
-    val bands = bandsFromIndex(spark.read.parquet(SigIndex.path(spark, dir)))
+    val bands = bandsFromIndex(sigIndex(spark, dir))
     val a = bands.select(col("band"), col("bucket"),
       col("doc_id").as("a_id"), col("skd").as("a_sk"))
     val b = bands.select(col("band"), col("bucket"),
@@ -1727,7 +1704,7 @@ object TextQueries {
       substring(md5(concat(lit("del|"), col("doc_id").cast("string"))), 1, 1)
         .isin("0", "1")
     val tombstones = docs(spark, dir).filter(erased).select("doc_id")
-    val kept = spark.read.parquet(SigIndex.path(spark, dir))
+    val kept = sigIndex(spark, dir)
       .join(tombstones, Seq("doc_id"), "left_anti")
     pairsFromIndex(kept).orderBy("a_id", "b_id")
   }
@@ -1772,7 +1749,7 @@ object TextQueries {
         substring(md5(concat(lit("del|"), col("doc_id").cast("string"))), 1, 1)
           .isin("0", "1")
       val tombstones = docs(spark, dir).filter(erased).select("doc_id")
-      spark.read.parquet(SigIndex.path(spark, dir))
+      sigIndex(spark, dir)
         .join(tombstones, Seq("doc_id"), "left_anti")
         .write.parquet(s"$work/compacted")
       pairsFromIndex(spark.read.parquet(s"$work/compacted"))
@@ -1889,7 +1866,7 @@ object TextQueries {
     * partial-agg shuffle keyed by the 60-bit key + a ≤64-row rollup.
     */
   def q213_shingle_df_profile(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(SigIndex.path(spark, dir))
+    sigIndex(spark, dir)
       .select(explode(col("skd")).as("k"))
       .groupBy("k").agg(count(lit(1)).cast("long").as("df"))
       .withColumn("df_bucket", expr("length(bin(df)) - 1").cast("int"))

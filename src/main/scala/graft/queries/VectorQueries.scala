@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{VectorFunctions => V}
+import graft.io.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -453,16 +454,13 @@ object VectorQueries {
     * content-hash sample), so the memo cannot change answers
     * (IvfPersistSpec pins fresh-train determinism); it only removes
     * the re-training a real deployment never does per query. Same
-    * lifecycle as TextQueries.SigIndex and BpeTrain.Merges.
+    * lifecycle as the text signature index and the BPE merges.
     */
-  private object IvfModel {
-    private val built =
-      new java.util.concurrent.ConcurrentHashMap[String, graft.similarity.IvfIndex.Model]()
-    def get(spark: SparkSession, dir: String, k: Int): graft.similarity.IvfIndex.Model =
-      built.computeIfAbsent(s"$dir|$k", _ =>
-        graft.similarity.IvfIndex.train(emb(spark, dir), "v", k = k,
-          sampleIdCol = Some("vec_id")))
-  }
+  private def ivfModel(spark: SparkSession, dir: String, k: Int): graft.similarity.IvfIndex.Model =
+    Artifacts.value(spark, "ivf", dir, k) {
+      graft.similarity.IvfIndex.train(emb(spark, dir), "v", k = k,
+        sampleIdCol = Some("vec_id"))
+    }
 
   /** Trained-quantizer ANN: k-means cells + 4-probe search, the IVF
     * counterpart of q29's LSH. Rows-only driver check (k-means floats
@@ -471,7 +469,7 @@ object VectorQueries {
     */
   def q42_knn_ivf(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val model = IvfModel.get(spark, dir, k = 16)
+    val model = ivfModel(spark, dir, k = 16)
     val corpusCells = e
       .withColumn("cell", model.cell(col("v")))
       .select(col("vec_id").as("n_id"), col("v").as("nv"), col("cell"),
@@ -619,7 +617,7 @@ object VectorQueries {
       val feed = Tables.load(spark, dir, "embeddings")
         .filter(pqIsBatch(col("vec_id")))
       CurationFlow.stageTwoBatches(spark, work, feed, "vec_id",
-        shareTag = Some(s"$dir|embeddings-pqbatch"))
+        feed = Some(dir -> "embeddings-pqbatch"))
       val stream = spark.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -690,7 +688,7 @@ object VectorQueries {
     val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val e = emb(spark, dir)
-      val model = IvfModel.get(spark, dir, k = 16)
+      val model = ivfModel(spark, dir, k = 16)
       // the persisted index: full corpus, frozen quantizer
       e.withColumn("cell", model.cell(col("v")))
         .select(col("vec_id"), col("cell"), col("v"), V.norm(col("v")).as("n_nrm"))
@@ -743,7 +741,7 @@ object VectorQueries {
     val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val e = emb(spark, dir)
-      val model = IvfModel.get(spark, dir, k = 16)
+      val model = ivfModel(spark, dir, k = 16)
       // the persisted index (q252's), then the erasure lands
       e.withColumn("cell", model.cell(col("v")))
         .select(col("vec_id"), col("cell"), col("v"), V.norm(col("v")).as("n_nrm"))
@@ -781,7 +779,7 @@ object VectorQueries {
     * searched by the same surviving queries. */
   private[graft] def ivfRebuiltWithout(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val model = IvfModel.get(spark, dir, k = 16)
+    val model = ivfModel(spark, dir, k = 16)
     val postings = e.filter(!ivfErased(col("vec_id")))
       .withColumn("cell", model.cell(col("v")))
       .select(col("vec_id").as("n_id"), col("v").as("nv"), col("cell"),
@@ -808,7 +806,7 @@ object VectorQueries {
     val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val e = emb(spark, dir)
-      val model = IvfModel.get(spark, dir, k = 16)
+      val model = ivfModel(spark, dir, k = 16)
       model.centroids.zipWithIndex.map { case (c, j) => (j, c) }
         .toDF("cell_id", "centroid")
         .write.parquet(s"$work/centroids")
@@ -943,17 +941,14 @@ object VectorQueries {
     math.max(semDedupCells, (n / semDedupTargetCell).toInt)
 
   /** The session's two-level SemDeDup quantizer, memoized per
-    * (corpus dir, k) like [[IvfModel]] — deterministic training, so
+    * (corpus dir, k) like [[ivfModel]] — deterministic training, so
     * the memo cannot change answers. */
-  private[graft] object SemDedupModel {
-    private val built = new java.util.concurrent.ConcurrentHashMap[
-      String, graft.similarity.IvfIndex.TwoLevelModel]()
-    def get(spark: SparkSession, dir: String, k: Int)
-        : graft.similarity.IvfIndex.TwoLevelModel =
-      built.computeIfAbsent(s"$dir|$k", _ =>
-        graft.similarity.IvfIndex.trainTwoLevel(emb(spark, dir), "v", k = k,
-          sampleIdCol = Some("vec_id")))
-  }
+  private def semDedupModel(spark: SparkSession, dir: String, k: Int)
+      : graft.similarity.IvfIndex.TwoLevelModel =
+    Artifacts.value(spark, "semdedup", dir, k) {
+      graft.similarity.IvfIndex.trainTwoLevel(emb(spark, dir), "v", k = k,
+        sampleIdCol = Some("vec_id"))
+    }
 
   /** The corpus with its global cell id and norm — ONE assignment
     * pass, shared by both sides of q87's candidate self-join (and by
@@ -967,7 +962,7 @@ object VectorQueries {
   private[graft] def semDedupAssigned(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val k = semDedupK(e.count())
-    val model = SemDedupModel.get(spark, dir, k)
+    val model = semDedupModel(spark, dir, k)
     graft.Lineage.cut(
       model.assignCells(
         e.withColumn("topcell", model.topCell(col("v"))), "topcell", "v", "cell")
@@ -982,19 +977,8 @@ object VectorQueries {
     * max_cos) verdict set to scratch parquet; q87 itself still
     * computes fresh (it IS the operator under test).
     */
-  private object SemVerdicts {
-    private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def path(spark: SparkSession, dir: String): String =
-      built.computeIfAbsent(dir, _ => {
-        val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-semv-")
-        semVerdictsOf(spark, dir).write.mode("overwrite").parquet(s"$work/verdicts")
-        s"$work/verdicts"
-      })
-  }
-
-  /** q87's verdicts served from the session's stored table. */
   private[queries] def semDedupVerdicts(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(SemVerdicts.path(spark, dir))
+    Artifacts.table(spark, "semv", dir)(semVerdictsOf(spark, dir))
 
   def q87_semdedup(spark: SparkSession, dir: String): DataFrame =
     semVerdictsOf(spark, dir).orderBy("dup_id")
@@ -1031,14 +1015,11 @@ object VectorQueries {
     * memo cannot change answers — PqIndexSpec pins fresh-train
     * determinism).
     */
-  private object PqModel {
-    private val built =
-      new java.util.concurrent.ConcurrentHashMap[String, graft.similarity.PqIndex.Model]()
-    def get(spark: SparkSession, dir: String): graft.similarity.PqIndex.Model =
-      built.computeIfAbsent(dir, _ =>
-        graft.similarity.PqIndex.train(emb(spark, dir), "v", m = 8, ksub = 16,
-          sampleIdCol = Some("vec_id")))
-  }
+  private def pqModel(spark: SparkSession, dir: String): graft.similarity.PqIndex.Model =
+    Artifacts.value(spark, "pq", dir) {
+      graft.similarity.PqIndex.train(emb(spark, dir), "v", m = 8, ksub = 16,
+        sampleIdCol = Some("vec_id"))
+    }
 
   /** Probed cells per query — 4 of the 16 coarse cells, q42's knob:
     * the ADC scan touches ~nProbe/k of the corpus instead of all of
@@ -1068,7 +1049,7 @@ object VectorQueries {
   /** The encoded corpus — shared by the fresh-train q112 path and the
     * stored-artifact lifecycle legs (q293–q295). */
   private[graft] def pqEncodedCorpus(spark: SparkSession, dir: String): DataFrame =
-    pqEncode(PqModel.get(spark, dir), IvfModel.get(spark, dir, k = 16),
+    pqEncode(pqModel(spark, dir), ivfModel(spark, dir, k = 16),
       emb(spark, dir))
 
   /** ADC shortlist over a GIVEN codes table and models — the
@@ -1106,7 +1087,7 @@ object VectorQueries {
 
   private[graft] def pqAdcCandidates(spark: SparkSession, dir: String): DataFrame =
     pqAdcCandidatesFrom(spark, dir,
-      PqModel.get(spark, dir), IvfModel.get(spark, dir, k = 16),
+      pqModel(spark, dir), ivfModel(spark, dir, k = 16),
       // the repartition is load-bearing twice over: (1) the exchange
       // MATERIALIZES the code arrays, so the ADC join's inner loop
       // reads a 4-byte-code attribute instead of re-evaluating the
@@ -1177,8 +1158,8 @@ object VectorQueries {
     * encoded corpus) to `work`. */
   private def persistPq(spark: SparkSession, dir: String, work: String): Unit = {
     import spark.implicits._
-    val model = PqModel.get(spark, dir)
-    val ivf = IvfModel.get(spark, dir, k = 16)
+    val model = pqModel(spark, dir)
+    val ivf = ivfModel(spark, dir, k = 16)
     model.codebooks.zipWithIndex.flatMap { case (book, sub) =>
       book.zipWithIndex.map { case (c, j) => (sub, j, c) }
     }.toDF("sub", "j", "centroid").write.parquet(s"$work/codebooks")
@@ -1278,8 +1259,8 @@ object VectorQueries {
     * codes re-encoded from the surviving vectors with the SAME frozen
     * models, searched by the same surviving queries. */
   private[graft] def pqRebuiltWithout(spark: SparkSession, dir: String): DataFrame = {
-    val model = PqModel.get(spark, dir)
-    val ivf = IvfModel.get(spark, dir, k = 16)
+    val model = pqModel(spark, dir)
+    val ivf = ivfModel(spark, dir, k = 16)
     val alive = !ivfErased(col("vec_id"))
     val codes = pqEncode(model, ivf, emb(spark, dir).filter(alive))
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1401,7 +1382,7 @@ object VectorQueries {
       val feed = Tables.load(spark, dir, "embeddings")
         .filter(pqIsBatch(col("vec_id")))
       CurationFlow.stageTwoBatches(spark, work, feed, "vec_id",
-        shareTag = Some(s"$dir|embeddings-pqbatch"))
+        feed = Some(dir -> "embeddings-pqbatch"))
       val stream = spark.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
       CurationFlow.withStreamShufflePartitions(spark) {

@@ -102,5 +102,14 @@ class IncrementalPipelineSpec extends SparkSpec {
     RunLog.write(spark, s"$root/log.json", log)
     assert(log.contains("\"last_processed_batch\": \"2025-12-03\""))
     assert(log.contains("incremental"))
+    // the escape covers every control char, the quote and the
+    // backslash: the whole log parses, and a hostile detail value
+    // parses back equal
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    parse(log)
+    val hostile = "tab\tcr\rsoh\u0001quote\"backslash\\"
+    val stage = RunLog.stageJson(Runner.StageReport("s", "t", "ok", Map("k" -> hostile)))
+    assert(parse(stage) \ "detail" \ "k" === JString(hostile))
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.SparkSpec
 import graft.meta.{Metadata, MetadataError}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 /** The declared-curation contract: q276's JSON-configured funnel must
   * reproduce q86's hand-composed one exactly (same constants → same
@@ -417,5 +418,152 @@ class CurationFlowSpec extends SparkSpec {
     bad("""{"curation": {"table": "documents", "id_column": "doc_id",
           | "text_column": "text", "report_by": "source", "stages": []}}""".stripMargin,
       "no stages")
+  }
+
+  // ---------- declared sinks + consolidation (q297, q299, q300) ----------
+
+  // The declared sink/consolidation path must produce the bytes its
+  // config promises: hive partition dirs, the bin-pack file bound,
+  // keep-LATEST across appends, and a read-back equal to the batch
+  // interpreter's survivors.
+
+  test("q297: written layout is partitioned + appended, consolidation keeps latest, read-back equals the batch funnel") {
+    import org.apache.hadoop.fs.Path
+    import graft.meta.Metadata
+    val dir = sf("sf0.001")
+    val cur = Metadata.parseCuration(CurationFlow.sinkCurationJson)
+    val stamps = Seq("2026-08-01", "2026-08-02")
+    val work = graft.io.Scratch.dir(spark, "graft-q297spec-")
+    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val report = CurationFlow.runSinksAt(spark, dir, cur, stamps, work)
+      // 1. the sink really is hive-partitioned by the declared column
+      val partDirs = fs.globStatus(new Path(s"$work/curated/source=*"))
+        .filter(_.isDirectory).map(_.getPath.getName)
+      assert(partDirs.nonEmpty, "no source=* partition directories written")
+      // 2. appends accumulated: the raw sink holds BOTH batch stamps
+      val raw = spark.read.parquet(s"$work/curated")
+      assert(raw.select("batch_date").distinct().count() === 2L,
+        "saveMode=append must accumulate both batch stamps")
+      // 3. consolidation kept exactly the LATEST batch, one row per doc
+      val cons = spark.read.parquet(s"$work/consolidated")
+      assert(cons.count() === raw.count() / 2)
+      assert(cons.filter(col("batch_date") =!= stamps.last).count() === 0L,
+        "keep-latest must retain only the newest stamp")
+      assert(cons.groupBy(cur.idColumn).count().filter(col("count") > 1).count() === 0L)
+      // 4. read-back report equals the batch interpreter's survivors:
+      //    the same config through run() — final-stage count and token
+      //    sum per group (n_<laststage> and tokens_final)
+      val lastStage = s"n_${cur.stages.last.name}"
+      val batch = CurationFlow.run(spark, dir, cur)
+        .select(col(cur.reportBy), col(lastStage).as("n_docs"), col("tokens_final").as("tokens"))
+        .filter(col("n_docs") > 0)
+      val got = report.select(col(cur.reportBy), col("n_docs"), col("tokens"))
+      assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty,
+        "sink read-back diverged from the batch interpreter's survivors")
+      // 5. the report's consolidation invariants
+      assert(report.filter(col("n_batches") =!= 1L).count() === 0L)
+      assert(report.filter(col("newest_batch") =!= stamps.last).count() === 0L)
+      // 6. the bin-pack bound: files per partition dir <= that
+      //    partition's ceil(bytes/target) bins PER APPEND is hard to
+      //    recompute post-hoc; what the layout must never show is the
+      //    blowup it exists to prevent — more files in a directory
+      //    than (appends x upstream shuffle width)
+      val maxFiles = partDirs.map { d =>
+        fs.globStatus(new Path(s"$work/curated/source=${d.stripPrefix("source=")}/*.parquet")).length
+      }.max
+      val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      assert(maxFiles <= 2 * width,
+        s"$maxFiles files in one partition dir — compaction not applied?")
+    } finally fs.delete(new Path(work), true)
+  }
+
+  test("q299: overwrite snapshot keeps only the newest stamp while the append history keeps all three") {
+    import org.apache.hadoop.fs.Path
+    import graft.meta.Metadata
+    val dir = sf("sf0.001")
+    val cur = Metadata.parseCuration(CurationFlow.multiSinkCurationJson)
+    val stamps = Seq("2026-08-01", "2026-08-08", "2026-08-15")
+    val work = graft.io.Scratch.dir(spark, "graft-q299spec-")
+    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val report = CurationFlow.runSinksAt(spark, dir, cur, stamps, work)
+      // saveMode semantics per sink: the flat snapshot was overwritten
+      // by every batch (newest stamp only, survivor-count rows); the
+      // partitioned history accumulated all three appends
+      val latest = spark.read.parquet(s"$work/latest")
+      assert(latest.select("batch_date").distinct().collect()
+        .map(_.getString(0)).toSeq === Seq(stamps.last))
+      val history = spark.read.parquet(s"$work/history")
+      assert(history.select("batch_date").distinct().count() === 3L)
+      assert(history.count() === latest.count() * 3)
+      // consolidation read the HISTORY sink and collapsed it to the
+      // newest stamp — equal to the snapshot, row for row
+      val cons = spark.read.parquet(s"$work/consolidated")
+        .select(latest.columns.map(col): _*)
+      assert(cons.exceptAll(latest).isEmpty && latest.exceptAll(cons).isEmpty,
+        "consolidated history must equal the overwrite snapshot")
+      // partitioned-by-lang layout on the history sink
+      assert(fs.globStatus(new Path(s"$work/history/lang=*")).nonEmpty)
+      assert(report.count() > 0)
+    } finally fs.delete(new Path(work), true)
+  }
+
+  test("q300: streamed survivors land partitioned, once each, equal to the batch funnel's keep set") {
+    import org.apache.hadoop.fs.Path
+    import graft.meta.{Metadata, MetadataError}
+    val dir = sf("sf0.001")
+    val cur = Metadata.parseCuration(CurationFlow.streamSinkCurationJson)
+    val work = graft.io.Scratch.dir(spark, "graft-q300spec-")
+    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val report = CurationFlow.runStreamSinksAt(spark, dir, cur, None, work)
+      val landed = spark.read.parquet(s"$work/curated_stream")
+      // exactly once: every landed doc_id unique (each row arrives in
+      // one micro-batch and appends once)
+      assert(landed.groupBy(cur.idColumn).count().filter(col("count") > 1).count() === 0L)
+      // the landed set IS the batch interpreter's survivor set
+      val batch = CurationFlow.run(spark, dir, cur)
+        .select(col(cur.reportBy),
+          col(s"n_${cur.stages.last.name}").as("n_docs"),
+          col("tokens_final").as("tokens"))
+        .filter(col("n_docs") > 0)
+      val got = report.select(col(cur.reportBy), col("n_docs"), col("tokens"))
+      assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty,
+        "stream-landed read-back diverged from the batch survivors")
+      // declared hive layout on the landed bytes
+      assert(fs.globStatus(new Path(s"$work/curated_stream/lang=*")).nonEmpty)
+    } finally fs.delete(new Path(work), true)
+    // contract failures: overwrite sinks and consolidation are refused
+    // BEFORE any stream starts
+    val ow = Metadata.parseCuration(CurationFlow.streamSinkCurationJson
+      .replace("\"saveMode\": \"append\"", "\"saveMode\": \"overwrite\""))
+    val e1 = intercept[MetadataError](CurationFlow.runStreamSinks(spark, dir, ow))
+    assert(e1.getMessage.contains("must append"))
+    val cons = Metadata.parseCuration(CurationFlow.streamSinkCurationJson.replace(
+      "    \"sinks\": [",
+      """    "consolidation": {"enabled": true, "ok_records": {
+        |      "input_pattern": "{out}/curated_stream", "output_path": "{out}/c",
+        |      "deduplication": {"enabled": true, "key_column": "doc_id",
+        |        "order_by": "batch_date", "order_direction": "DESC"}}},
+        |    "sinks": [""".stripMargin))
+    val e2 = intercept[MetadataError](CurationFlow.runStreamSinks(spark, dir, cons))
+    assert(e2.getMessage.contains("batch pass over the sink"))
+  }
+
+  test("q297 grammar: consolidation without sinks, and a foreign dedup key, fail at parse time") {
+    import graft.meta.{Metadata, MetadataError}
+    val noSinks = CurationFlow.sinkCurationJson.replace(
+      """"sinks": [
+        |      {"input": "survivors", "name": "curated", "path": "{out}/curated",
+        |       "format": "parquet", "saveMode": "append",
+        |       "partitionBy": ["source"], "targetFileMB": 4}
+        |    ],""".stripMargin, "")
+    val e1 = intercept[MetadataError](Metadata.parseCuration(noSinks))
+    assert(e1.getMessage.contains("no sinks"))
+    val wrongKey = CurationFlow.sinkCurationJson
+      .replace("\"key_column\": \"doc_id\"", "\"key_column\": \"source\"")
+    val e2 = intercept[MetadataError](Metadata.parseCuration(wrongKey))
+    assert(e2.getMessage.contains("row identity"))
   }
 }
