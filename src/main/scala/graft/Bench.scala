@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.pipeline.RuntimeConfig
 
 /** Per-round benchmark main (driver contract): one JSON line with
   * total + per-query wall seconds on SPARK_GRAFT_SF_DIR.
@@ -13,40 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_CONF: optional declarative runtime config — same
-    // contract as Verify; absent means the env-var defaults below
-    val base = sys.env.get("SPARK_GRAFT_CONF")
-      .map(p => graft.pipeline.RuntimeConfig.load(p).sessionBuilder())
-      .getOrElse(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        // see Verify: heap-derived Tungsten page size caps at 64 MB
-        // under a big local heap and page-zeroing dominates small
-        // tasks; pin it locally (cluster deploys tune via conf)
-        .config("spark.buffer.pageSize", "4m"))
-    val spark = base
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.adaptive.enabled", true)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", true)
-      // guide §2.2: with parallelismFirst (the Spark default) AQE only
-      // coalesces post-shuffle partitions down to the core count, so a
-      // KB-sized aggregate still runs 32 reduce tasks — pure scheduling
-      // overhead on the iterative loops' node-sized tables. false makes
-      // AQE honor advisoryPartitionSizeInBytes (the documented
-      // recommendation for real clusters too, so this is not a local-
-      // only tune). Overridable for A/B via env.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      // partition-size target AQE coalesces toward once parallelismFirst
-      // is off: 8m locally (tiny SF inputs; a 256m target would serialize
-      // every mid-size stage onto one core), production 64-256m — declare
-      // via SPARK_GRAFT_CONF / this env on a cluster.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "8m"))
-      .getOrCreate()
+    val spark = RuntimeConfig.fromEnv().sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // A failed warm-up is not fatal (its cost moves into the timed
@@ -109,8 +76,8 @@ object Bench {
     // itself, so a contaminated leg can never enter the committed
     // perf record looking normal (SURVEY §20's r11–r13 seesaw class).
     // The core budget comes from the RESOLVED session, not the raw
-    // env default — a SPARK_GRAFT_CONF-built session can carry a
-    // different master than local[$cpus]
+    // env — a SPARK_GRAFT_CONF-built session can carry a different
+    // master than local[$SPARK_GRAFT_CPUS]
     val coreBudget = spark.sparkContext.defaultParallelism
     val contaminated = loadAvg > coreBudget * 1.25
     val line =

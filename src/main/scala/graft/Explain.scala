@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.pipeline.RuntimeConfig
 
 /** Plan-inspection utility: prints the formatted executed plan of one
   * or all SparkEntry queries. Used for the explain-audit loop
@@ -45,15 +45,7 @@ object Explain {
     // in the streaming/temp-dir queries stay on; see [[Lineage]]) —
     // unless --as-benched asked for the executed shape
     if (!asBenched) System.setProperty("graft.keepLineage", "true")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same extensions as Bench — without them the audit would print
-      // the declarative plans, not the rule-rewritten ones benchmarked
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = RuntimeConfig.fromEnv().sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val targets = SparkEntry.queries
       .filter { case (n, _) => which.forall(_.contains(n)) }.toSeq.sortBy(_._1)

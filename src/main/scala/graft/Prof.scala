@@ -1,7 +1,7 @@
 package graft
 
+import graft.pipeline.RuntimeConfig
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level profiling utility (tooling, like [[Explain]] — not part
   * of the bench harness): runs one query under the Bench session
@@ -17,17 +17,7 @@ object Prof {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args(1)
     val repeat = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.adaptive.enabled", true)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", true)
-      .getOrCreate()
+    val spark = RuntimeConfig.fromEnv().sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.pipeline.RuntimeConfig
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-up harness: writes a `factor`× replica of a testdata
@@ -40,13 +41,7 @@ object ScaleUp {
     // wrap and silently recreate the exact-duplicate corpus this
     // harness exists to avoid
     require(factor >= 1 && factor <= 26, s"factor must be in [1, 26], got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = RuntimeConfig.fromEnv().sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def off(c: String): Column = col(c) * factor // + k added per replica
@@ -142,13 +137,7 @@ object TextScaleUp {
     val (src, dst) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 100
     require(factor >= 1, s"factor must be positive, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = RuntimeConfig.fromEnv().sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     import org.apache.hadoop.fs.{FileUtil, Path}
@@ -176,7 +165,7 @@ object TextScaleUp {
         .withColumn("text",
           translate(col("text"), lower + lower.toUpperCase, p + p.toUpperCase))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(spark.sparkContext.defaultParallelism)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")
     println(s"scaled documents x$factor")
     spark.stop()
@@ -190,13 +179,7 @@ object AnnScaleUp {
     val (src, dst) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 100
     require(factor >= 1, s"factor must be positive, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = RuntimeConfig.fromEnv().sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def flips(k: Int): Seq[Double] =
@@ -223,7 +206,7 @@ object AnnScaleUp {
         zip_with(col("embedding"), array(flips(k).map(lit): _*),
           (x, s) => x * s).cast("array<float>"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(spark.sparkContext.defaultParallelism)
       .write.mode("overwrite").parquet(s"$dst/embeddings.parquet")
     println(s"scaled embeddings x$factor")
     spark.stop()

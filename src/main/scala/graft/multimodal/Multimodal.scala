@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * [[StubDecoders]]); schema, partitioning, batch shape, and the
   * expression-level metadata path are real.
   */
-object Multimodal {
+object Multimodal extends graft.QueryFamily {
 
   /** Typed record for the partition-level decode path. */
   final case class MediaRecord(doc_id: Long, payload: Array[Byte], mime: String)

@@ -10,6 +10,8 @@ import org.apache.spark.sql.SparkSession
   * (flat java-properties syntax instead of YAML: zero added
   * dependencies, same "declare the environment in data" contract).
   * One jar runs across environments by swapping this file, not code.
+  * This is the only place graft's mains build a SparkSession
+  * ([[RuntimeConfig.fromEnv]] → [[sessionBuilder]]).
   *
   * Values may reference environment variables as `${NAME}` or
   * `${NAME:-default}`. A reference to an unset variable WITHOUT a
@@ -41,11 +43,21 @@ final case class RuntimeConfig(
     metadataPath: Option[String],
     substitutions: Map[String, String]) {
 
-  /** A session builder carrying every spark.* setting in this config. */
+  /** Every setting a session built from this config carries: graft's
+    * [[RuntimeConfig.defaults]] first, then the master, app name,
+    * shuffle partitions and spark.conf.* declared here. Declared values
+    * always win.
+    */
+  def settings: Map[String, String] =
+    RuntimeConfig.defaults ++
+      Map("spark.master" -> master, "spark.app.name" -> appName) ++
+      shufflePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString) ++
+      sparkConf
+
+  /** The one session builder of graft's mains: carries [[settings]]. */
   def sessionBuilder(): SparkSession.Builder = {
-    val b = SparkSession.builder().master(master).appName(appName)
-    shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n))
-    sparkConf.foreach { case (k, v) => b.config(k, v) }
+    val b = SparkSession.builder()
+    settings.foreach { case (k, v) => b.config(k, v) }
     b
   }
 
@@ -67,6 +79,45 @@ final case class RuntimeConfig(
 }
 
 object RuntimeConfig {
+
+  /** graft's measured session confs, applied under every declared one. */
+  val defaults: Map[String, String] = Map(
+    // results are compared cell for cell with DuckDB's: UTC everywhere
+    "spark.sql.session.timeZone" -> "UTC",
+    // the rule-rewritten plans, not the declarative ones
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.ui.enabled" -> "false",
+    // guide §2.2: with parallelismFirst (the Spark default) AQE only
+    // coalesces post-shuffle partitions down to the core count, so a
+    // KB-sized aggregate still runs 32 reduce tasks — pure scheduling
+    // overhead on the iterative loops' node-sized tables. false makes
+    // AQE honor advisoryPartitionSizeInBytes (the documented
+    // recommendation for real clusters too, so this is not a local-
+    // only tune).
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    // partition-size target AQE coalesces toward once parallelismFirst
+    // is off: 8m locally (tiny SF inputs; a 256m target would serialize
+    // every mid-size stage onto one core), production 64-256m — declare
+    // it as spark.conf.spark.sql.adaptive.advisoryPartitionSizeInBytes.
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m",
+    // Tungsten's default page size is heap/slots-derived and hits its
+    // 64 MB cap under a large local driver heap — then every small
+    // hash-agg/sort task pays 64 MB of page zeroing, which dominates
+    // tiny-partition local runs (measured 2× on the whole suite). A
+    // cluster deploy declares its own.
+    "spark.buffer.pageSize" -> "4m")
+
+  /** The config every graft main runs under: the file named by
+    * SPARK_GRAFT_CONF when set; otherwise `local[$SPARK_GRAFT_CPUS]`
+    * with that many shuffle partitions, the cpus defaulting to this
+    * machine's processor count.
+    */
+  def fromEnv(env: Map[String, String] = sys.env): RuntimeConfig =
+    env.get("SPARK_GRAFT_CONF").map(load(_, env)).getOrElse {
+      val cpus = env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString)
+      parse(s"spark.master = local[$cpus]\nspark.shuffle_partitions = $cpus", env)
+    }
 
   private val EnvRef = """\$\{([A-Za-z_][A-Za-z0-9_]*)(?::-([^}]*))?\}""".r
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * non-deterministic, so floating-point sums would not even be stable
   * run-to-run.
   */
-object Analytics {
+object Analytics extends graft.QueryFamily {
 
   private val dec18 = DecimalType(18, 2)
   private val dec4 = DecimalType(4, 2)

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * against an independent recomputation, the non-increasing
   * pair-count invariant, and cross-run determinism.
   */
-object BpeTrain {
+object BpeTrain extends graft.QueryFamily {
 
   val bpeMerges = 10
 

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.DecimalType
   * versions, the lakehouse CDF operation expressed as one
   * key-equi full-outer join.
   */
-object ChangeCapture {
+object ChangeCapture extends graft.QueryFamily {
 
   /** Snapshot diff → changelog: consolidate the pre-1998 orders
     * (snapshot v1 — same split as q07), consolidate all orders

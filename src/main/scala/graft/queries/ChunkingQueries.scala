@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Determinism policy (SURVEY §4): all hashes are md5-derived, all
   * ratios are integer DIV — bit-identical to the DuckDB oracles.
   */
-object ChunkingQueries {
+object ChunkingQueries extends graft.QueryFamily {
 
   // ---------- q214: content-defined chunk dedup ----------
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-13 cross-table consistency audits (SURVEY §2 #241–#242): the
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * union of one-row summaries — |relations| rows total, no
   * corpus-sized state on the driver.
   */
-object ConsistencyQueries {
+object ConsistencyQueries extends graft.QueryFamily {
 
   // ---------- q241: referential integrity ----------
 

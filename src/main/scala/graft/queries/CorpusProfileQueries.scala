@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Determinism policy (SURVEY §4): md5 everywhere, integer DIV
   * ratios, ties broken by token/doc_id — bit-identical to DuckDB.
   */
-object CorpusProfileQueries {
+object CorpusProfileQueries extends graft.QueryFamily {
 
   // ---------- q245: exact-prefix dedup ----------
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** Additional corpus/statistics operators (SURVEY §2 #32–#35).
   */
-object CorpusQueries {
+object CorpusQueries extends graft.QueryFamily {
 
   // ---------- q32: exact per-group quantiles ----------
 
@@ -181,7 +181,6 @@ object CorpusQueries {
     "window big merge", "hash value window")
 
   def q37_contamination(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{HashFunctions => H}
     import spark.implicits._
     // explode + broadcast-join instead of per-row array_intersect: the
     // filtered intersect form re-evaluates the shingle pipeline inside
@@ -365,7 +364,6 @@ object CorpusQueries {
     * pairs that already share a shingle, never all pairs.
     */
   def q44_fuzzy_match(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{HashFunctions => H}
     val d = Tables.load(spark, dir, "documents")
       .filter(col("doc_id") < 500)
       .select(col("doc_id"), col("text"),

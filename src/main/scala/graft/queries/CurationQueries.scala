@@ -3,14 +3,13 @@ package graft.queries
 import graft.Tables
 import graft.functions.{TextFunctions => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation outputs (SURVEY §2 #60–#61): the
   * operators that APPLY the dedup and quality analyses — what a
   * training-data pipeline actually writes out.
   */
-object CurationQueries {
+object CurationQueries extends graft.QueryFamily {
 
   // ---------- q60: near-dup removal applied ----------
 
@@ -166,7 +165,6 @@ object CurationQueries {
   val vocabK = 20
 
   def q64_oov_rate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // Aggregate to per-(source, token) counts FIRST, then persist only
     // that: it is |sources|·|vocab| rows — independent of corpus
     // length — where persisting the exploded token table would cache
@@ -225,7 +223,6 @@ object CurationQueries {
     * streams the full-text side once.
     */
   def q67_decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{HashFunctions => H}
     import spark.implicits._
     val bench = CorpusQueries.benchmarkShingles.toDF("s")
     val flagged = Tables.load(spark, dir, "documents")

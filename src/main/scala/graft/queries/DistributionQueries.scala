@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Distribution / window-frame analytics (SURVEY §2 #56–#59).
   */
-object DistributionQueries {
+object DistributionQueries extends graft.QueryFamily {
 
   private val dec18 = DecimalType(18, 2)
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * cohort retention — the two canonical product-analytics queries over
   * an event stream.
   */
-object EventQueries {
+object EventQueries extends graft.QueryFamily {
 
   // ---------- q65: funnel conversion ----------
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.DecimalType
 /** GROUPING SETS, set operators, and SCD2 history
   * (SURVEY §2 #53–#55).
   */
-object ExtendedAnalytics {
+object ExtendedAnalytics extends graft.QueryFamily {
 
   private val dec18 = DecimalType(18, 2)
 

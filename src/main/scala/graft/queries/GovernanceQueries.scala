@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * outside the engine (reference tests/test_pipeline_motor.py);
   * here it is engine metadata like everything else.
   */
-object GovernanceQueries {
+object GovernanceQueries extends graft.QueryFamily {
 
   // ---------- q99: declarative expectations over the warehouse ----------
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Sizing, Tables}
 import graft.io.Artifacts
-import graft.operators.{ConnectedComponents, Dedup, Merge}
+import graft.operators.{Dedup, Merge}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DecimalType
 /** Cluster resolution, MERGE upsert, and bloom-pruned joins
   * (SURVEY §2 #47–#49).
   */
-object GraphQueries {
+object GraphQueries extends graft.QueryFamily {
 
   private val dec18 = DecimalType(18, 2)
 

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * is independent of aggregation order (q83's rational-arithmetic
   * rule).
   */
-object LanguageModel {
+object LanguageModel extends graft.QueryFamily {
 
   private val scale = 1000000L
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.pipeline.RuntimeConfig
 import org.apache.spark.sql.functions._
 
 /** Measures THE scale knob of the hyperplane-LSH vector family
@@ -27,14 +27,7 @@ object LshPlaneSweep {
     require(args.nonEmpty, "usage: LshPlaneSweep <sfDir> [planes]")
     val dir = args(0)
     val planeCounts = args.lift(1).getOrElse("8,12,16").split(",").map(_.trim.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = RuntimeConfig.fromEnv().sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.functions.{VectorFunctions => V}
 

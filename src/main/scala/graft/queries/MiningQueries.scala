@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DecimalType
   * heavy hitters with exact recount, per-group OLS on exact moments,
   * and theta-sketch set algebra across sources.
   */
-object MiningQueries {
+object MiningQueries extends graft.QueryFamily {
 
   private val dec18 = DecimalType(18, 2)
 

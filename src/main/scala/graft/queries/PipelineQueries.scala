@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.io.BatchDiscovery
 import graft.meta._
 import graft.operators.{AddFields, Consolidator, Dedup, Validator}
 import graft.pipeline.Runner
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
   * from the same `ValidationDef`s the Spark side executes, so both
   * engines share one definition of the semantics.
   */
-object PipelineQueries {
+object PipelineQueries extends graft.QueryFamily {
 
   // ---------- shared rule → DuckDB SQL generation ----------
 

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.DecimalType
   * keep/drop verdict is bit-identical to DuckDB regardless of float
   * accumulation order; doubles appear only in final output casts.
   */
-object RelationalQueries {
+object RelationalQueries extends graft.QueryFamily {
   private val dec18 = DecimalType(18, 2)
   private val dec4 = DecimalType(4, 2)
 

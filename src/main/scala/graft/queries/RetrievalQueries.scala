@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * scores are scaled-integer rationals, never summed doubles), and
   * oracle SQL generated from the same Scala constants.
   */
-object RetrievalQueries {
+object RetrievalQueries extends graft.QueryFamily {
 
   // ---------- q81: span-level exact dedup ----------
 

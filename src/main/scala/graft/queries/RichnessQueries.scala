@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * domain-bounded axis windows — nothing corpus-sized ever sorts in
   * one task.
   */
-object RichnessQueries {
+object RichnessQueries extends graft.QueryFamily {
 
   // ---------- q196: lexical richness (hapax / type-token) ----------
 

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * both engines) — the oracle then proves the scrub logic, not the
   * corpus content.
   */
-object ScrubQueries {
+object ScrubQueries extends graft.QueryFamily {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")

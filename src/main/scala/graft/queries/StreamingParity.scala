@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
   * streams' final emitted state covers exactly the batch answer.
   * Sentinels themselves stay open/unclosed and are never emitted.
   */
-object StreamingParity {
+object StreamingParity extends graft.QueryFamily {
 
   private val cutoff = "2024-01-15 00:00:00" // mid-corpus: both splits non-empty
 

@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.functions.{HashFunctions => H, TextFunctions => T}
 import graft.io.Artifacts
-import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2 #19–#27). All per-document work is narrow expressions;
   * only candidate-pair generation shuffles, and only by LSH bucket.
   */
-object TextQueries {
+object TextQueries extends graft.QueryFamily {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
@@ -546,7 +545,7 @@ object TextQueries {
     finally base.unpersist()
   }
 
-  private def q69Verify(base: DataFrame, width: Int = q69Width): DataFrame = {
+  private def q69Verify(base: DataFrame, width: Int): DataFrame = {
     val cand = simhashProbePairs(base, width)
     // stage 1: size-ratio prefilter over a narrow (id, count) table —
     // a NECESSARY condition of j >= 0.8, integer-exact, no arrays moved.
@@ -1567,8 +1566,6 @@ object TextQueries {
     def side(p: String) = idx.select(
       col("doc_id").as(s"${p}_id") +: col("skd").as(s"${p}_skd") +:
         sigCols.map(c => col(c).as(s"${p}_$c")): _*)
-    val matches = sigCols.map(c =>
-      when(col(s"a_$c") === col(s"b_$c"), 1L).otherwise(0L)).reduce(_ + _)
     pairs.join(side("a"), "a_id").join(side("b"), "b_id")
       .withColumn("est_ppm",
         expr(s"(${sigCols.map(c => s"CASE WHEN a_$c = b_$c THEN 1 ELSE 0 END")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 /** Embedding similarity-search and near-dup operators
   * (SURVEY §2 #28–#30).
   */
-object VectorQueries {
+object VectorQueries extends graft.QueryFamily {
 
   val nPlanes = 8
   val dim = 64
@@ -683,7 +683,6 @@ object VectorQueries {
     */
   def q252_ivf_erasure(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    import spark.implicits._
     val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q252-")
     val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
@@ -736,7 +735,6 @@ object VectorQueries {
     */
   def q287_ivf_compact(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    import spark.implicits._
     val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q287-")
     val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {

@@ -11,12 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", false)
-    .getOrCreate()
+  /** The mains' session builder at local[4]: specs run Bench's confs. */
+  lazy val session: SparkSession = graft.pipeline.RuntimeConfig.parse(
+    "spark.master = local[4]\nspark.app_name = graft-test\nspark.shuffle_partitions = 4")
+    .sessionBuilder().getOrCreate()
 }

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * delta-append ≡ from-scratch, tombstone-erasure ≡ rebuild-on-
   * retained, compacted ≡ delta-form — exceptAll both ways each);
   * q306's maximal-run report must equal an independent driver-side
-  * reference on the real corpus; q307's attribution must reconcile
-  * with q288's funnel counts; and q308's greedy k-center must be
+  * reference on the real corpus; and q308's greedy k-center must be
   * deterministic, cluster-covering, and within the published 2×
   * of the brute-force optimal radius.
   */
@@ -96,45 +95,6 @@ class Round16bOpsSpec extends SparkSpec {
         r.getLong(4), r.getLong(5))).toSeq
     assert(expected.nonEmpty, "degenerate corpus: no shared runs at all")
     assert(got === expected)
-  }
-
-  // ---------- q307: loss attribution ----------
-
-  test("q307 attribution reconciles with q288's funnel counts") {
-    val dir = sf("sf0.001")
-    val att = CurationFlow.q307_declared_attrition(spark, dir)
-      .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
-    val funnelRows = CurationFlow.q288_declared_curation_multi(spark, dir).collect()
-    val lastStage = "bench_b"
-    funnelRows.foreach { r =>
-      val src = r.getString(0)
-      val nRaw = r.getLong(r.fieldIndex("n_raw"))
-      val nLast = r.getLong(r.fieldIndex(s"n_$lastStage"))
-      val attTotal = att.collect { case ((s, _), n) if s == src => n }.sum
-      assert(attTotal === nRaw, s"$src: attribution mass $attTotal != n_raw $nRaw")
-      assert(att.getOrElse((src, "survived"), 0L) === nLast,
-        s"$src: survived attribution != final-stage survivor count")
-    }
-  }
-
-  test("q310 attribution reconciles with the budget funnel under a binding budget") {
-    val dir = sf("sf0.001")
-    // q291's config with the budget tightened so the window member
-    // actually FIRES at fixture scale (the committed 2000-token budget
-    // binds only from sf0.1 up — the driver's oracle gates that)
-    val cur = graft.meta.Metadata.parseCuration(
-      CurationFlow.budgetCurationJson.replace("\"budget\": 2000", "\"budget\": 120"))
-    val att = CurationFlow.runAttrition(spark, dir, cur)
-      .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
-    assert(att.keys.exists(_._2 == "budget"),
-      "no document attributed to the budget stage — the window member is untested")
-    CurationFlow.run(spark, dir, cur).collect().foreach { r =>
-      val src = r.getString(0)
-      val attTotal = att.collect { case ((s, _), n) if s == src => n }.sum
-      assert(attTotal === r.getLong(r.fieldIndex("n_raw")))
-      assert(att.getOrElse((src, "survived"), 0L) ===
-        r.getLong(r.fieldIndex("n_budget")))
-    }
   }
 
   test("q311 scrub ledger is consistent with q306's coverage report") {
@@ -239,32 +199,6 @@ class Round16bOpsSpec extends SparkSpec {
     // squared distances: the 2x radius guarantee is 4x on squares
     assert(radius(picks) <= 4.0 * opt + 1e-9,
       s"greedy radius^2 ${radius(picks)} exceeds 4x optimal $opt")
-  }
-
-  test("q313: the full-grammar config is a monotone funnel and honors its declared budget") {
-    val dir = sf("sf0.01")
-    val stages = Seq("exact", "neardup", "quality", "bench", "mix", "train", "budget")
-    // the budget member admits every doc that STARTS under the cap
-    // (cum - n_toks < budget), so tokens_final may legitimately
-    // overshoot by up to the last admitted doc's length — assert the
-    // operator's ACTUAL invariant, not a tighter one that only holds
-    // when the budget doesn't bind mid-document on this fixture
-    import org.apache.spark.sql.functions._
-    val maxToks = graft.Tables.load(spark, dir, "documents")
-      .groupBy("source")
-      .agg(max(size(graft.functions.TextFunctions.tokens(col("text"))))
-        .cast("long").as("mx"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    CurationFlow.q313_declared_full_grammar(spark, dir).collect().foreach { r =>
-      val counts = r.getLong(r.fieldIndex("n_raw")) +:
-        stages.map(s => r.getLong(r.fieldIndex(s"n_$s")))
-      assert(counts.zip(counts.tail).forall { case (a, b) => b <= a },
-        s"${r.getString(0)}: stage survivor counts not monotone: $counts")
-      val tf = r.getLong(r.fieldIndex("tokens_final"))
-      assert(tf < 1500L + maxToks(r.getString(0)),
-        s"${r.getString(0)}: tokens_final $tf exceeds budget 1500 by more " +
-          s"than one document (max doc ${maxToks(r.getString(0))} tokens)")
-    }
   }
 
   test("q312: every vector assigned, all centers self-covered, radius bounded by the last pick distance") {

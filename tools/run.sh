@@ -1,6 +1,7 @@
 #!/bin/bash
 # Run a graft main class directly (after `sbt compile`), with the same
-# JVM flags build.sbt uses for forked runs. Usage:
+# JVM flags build.sbt uses for forked runs (the Spark confs are the
+# session builder's, graft.pipeline.RuntimeConfig). Usage:
 #   tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/vout
 #   SPARK_GRAFT_CPUS=32 tools/run.sh graft.Bench
 cd "$(dirname "$0")/.." || exit 1
@@ -13,9 +14,7 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -Duser.timezone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-8g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-24g}" \
   -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "$@"
