@@ -73,11 +73,17 @@ object Artifacts {
       work
     }
 
-  /** `build` written once to scratch parquet, read back on every call. */
+  /** `build` written once to scratch parquet, read back on every call.
+    * The schema is inferred once, at the build, so that a hit reads with
+    * it and runs no schema-inference job. */
   def table(spark: SparkSession, kind: String, corpusDir: String, params: Any*)(
       build: => DataFrame): DataFrame = {
-    val work = dir(spark, kind, corpusDir, params: _*)(w => build.write.parquet(s"$w/$kind"))
-    spark.read.parquet(s"$work/$kind")
+    val (path, schema) = value(spark, kind, corpusDir, params: _*) {
+      val path = s"${Scratch.dirAutoCleaned(spark, s"graft-$kind-")}/$kind"
+      build.write.parquet(path)
+      (path, spark.read.parquet(path).schema)
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   /** MD5 over the sorted (relative path, length, mtime) lines of the

@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions._
   * the reference round-trips through a temp view + SELECT per field;
   * here n added fields cost one narrow projection fused into
   * whole-stage codegen.
+  *
+  * Each field is wrapped in `batch_constant` ([[graft.plans.BatchConstant]]),
+  * so a batch's date and timestamp reach generated code by reference
+  * and the next batch reuses the compiled classes. `add_fields`
+  * therefore needs `graft.plans.GraftExtensions` in the session, as
+  * graft's text operators do; every session built by
+  * [[graft.pipeline.RuntimeConfig]] has it.
   */
 object AddFields {
 
@@ -23,7 +30,7 @@ object AddFields {
   def resolve(function: String, ctx: BatchContext): Column = function match {
     case "current_timestamp" => current_timestamp()
     case "batch_id"          => ctx.batchId.map(lit(_)).getOrElse(lit(null).cast("string"))
-    case "batch_date"        => ctx.batchId.map(d => to_date(lit(d))).getOrElse(lit(null).cast("date"))
+    case "batch_date"        => ctx.batchId.map(lit(_)).getOrElse(lit(null)).cast("date")
     case "run_id"            => ctx.runId.map(lit(_)).getOrElse(lit(null).cast("string"))
     case other if other.startsWith("literal:") => lit(other.stripPrefix("literal:"))
     case other =>
@@ -33,5 +40,7 @@ object AddFields {
   }
 
   def apply(df: DataFrame, fields: Seq[(String, String)], ctx: BatchContext): DataFrame =
-    df.withColumns(fields.map { case (name, fn) => name -> resolve(fn, ctx) }.toMap)
+    df.withColumns(fields.map { case (name, fn) =>
+      name -> call_function("batch_constant", resolve(fn, ctx))
+    }.toMap)
 }

@@ -58,17 +58,17 @@ object Consolidator {
     // consolidation silently degrades to new-batches-only and
     // overwrites the existing dataset. A pre-created-but-empty dir
     // (mkdir -p, lone _SUCCESS) fails schema inference and IS a first
-    // run; restore any snapshot stranded by a crashed swap first.
+    // run; restore any snapshot stranded by a crashed swap first. A
+    // snapshot with zero rows is read as one: it unions as no rows, so
+    // no job is spent probing for them.
     val outPath = new org.apache.hadoop.fs.Path(cfg.outputPath)
     val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.io.SnapshotSwap.recover(fs, outPath)
     val existing =
       if (!fs.exists(outPath)) None
       else
-        try {
-          val df = spark.read.format(format).option("mode", "PERMISSIVE").load(cfg.outputPath)
-          if (df.isEmpty) None else Some(df)
-        } catch {
+        try Some(spark.read.format(format).option("mode", "PERMISSIVE").load(cfg.outputPath))
+        catch {
           // ONLY the no-data-files condition means first run; any other
           // analysis failure (wrong format, corrupt snapshot) must
           // fail loudly — degrading would consolidate new batches

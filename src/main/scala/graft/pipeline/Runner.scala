@@ -13,13 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Differences from the reference, on purpose:
   *   - intermediate results live in a local name→DataFrame catalog,
   *     not global temp views — flows are isolated and re-entrant;
-  *   - no `count()` per stage by default. The reference forces an
-  *     action (a full job) after every source/transform/sink purely
-  *     for logging; at 100 TB that multiplies cost by the stage count.
-  *     Counts are opt-in (`collectCounts=true`), and sinks report the
-  *     written row count for free via `observe` metrics if needed.
+  *   - no `count()` per stage. The reference forces an action (a full
+  *     job) after every source/transform/sink purely for logging; at
+  *     100 TB that multiplies cost by the stage count.
   *   - everything stays one lazy Catalyst plan until a sink forces it,
   *     so filter/projection pushdown crosses stage boundaries.
+  *   - a flow's sinks write concurrently ([[SinkWriter.writeAll]]).
+  *     If one fails, runFlow raises its error only after every other
+  *     sink's write has ended, so nothing still writes when it throws;
+  *     sinks that succeeded keep their output.
   */
 object Runner {
 
@@ -86,14 +88,14 @@ object Runner {
               "ok_view" -> s"${name}_ok", "ko_view" -> s"${name}_ko"))
     }
 
-    for (sink <- flow.sinks) {
-      val df = require_(sink.input, sink.name)
-      if (writeSinks) {
-        val path = SinkWriter.write(df, sink, ctx.subs)
+    val sinkInputs = flow.sinks.map(sink => require_(sink.input, sink.name) -> sink)
+    if (writeSinks) {
+      val paths = SinkWriter.writeAll(sinkInputs, ctx.subs)
+      flow.sinks.zip(paths).foreach { case (sink, path) =>
         report += StageReport(sink.name, "sink", "success", Map("path" -> path))
-      } else {
-        report += StageReport(sink.name, "sink", "skipped", Map("reason" -> "dry-run"))
       }
+    } else flow.sinks.foreach { sink =>
+      report += StageReport(sink.name, "sink", "skipped", Map("reason" -> "dry-run"))
     }
 
     FlowResult(catalog.toMap, report.toSeq)

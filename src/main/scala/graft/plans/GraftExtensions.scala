@@ -179,6 +179,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           org.apache.spark.sql.types.LongType)
         IntersectCount(Cast(children.head, lng), Cast(children(1), lng))
       }))
+    // batch_constant(value): a foldable value that generated code reads
+    // by reference, not as an inlined literal; add_fields wraps every
+    // added field in it so that a batch's date and timestamp leave the
+    // generated source unchanged (see BatchConstant)
+    ext.injectFunction((
+      new FunctionIdentifier("batch_constant"),
+      new ExpressionInfo(classOf[BatchConstant].getName, "batch_constant"),
+      (children: Seq[Expression]) => BatchConstant(children.head)))
     // bloom_might_contain(serialized_bloom, long_key): Spark's own
     // codegen'd BloomFilterMightContain (the expression behind AQE's
     // runtime row-level bloom), exposed for EXPLICIT bloom pruning —

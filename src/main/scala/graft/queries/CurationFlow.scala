@@ -445,9 +445,10 @@ object CurationFlow {
   }
 
   /** Config-to-BYTES: run the declared funnel, WRITE the survivors
-    * through the declared sinks (one append per batch stamp, each
-    * through [[graft.io.SinkWriter]]'s partitioned + bin-packed
-    * layout), run the declared consolidation (keep-latest by the
+    * through the declared sinks (stamps in order; one stamp's sinks
+    * write together through [[graft.io.SinkWriter.writeAll]], each in
+    * its partitioned + bin-packed layout), run the declared
+    * consolidation (keep-latest by the
     * funnel's id, the reference's `consolidation` block lowered onto
     * [[graft.operators.Consolidator]]), then read the consolidated
     * output BACK from disk and report on it — the
@@ -487,7 +488,7 @@ object CurationFlow {
       val surv = survivors(cur, batchFunnel(spark, dir, cur)).localCheckpoint()
       batchStamps.foreach { stamp =>
         val batch = surv.withColumn("batch_date", lit(stamp))
-        cur.sinks.foreach(s => graft.io.SinkWriter.write(batch, s, subs))
+        graft.io.SinkWriter.writeAll(cur.sinks.map(batch -> _), subs)
       }
       val (finalPath, fmt) = cur.consolidation.filter(_.enabled) match {
         case Some(cons) =>
@@ -1297,7 +1298,7 @@ object CurationFlow {
         .writeStream
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          cur.sinks.foreach(s => graft.io.SinkWriter.write(batch, s, subs))
+          graft.io.SinkWriter.writeAll(cur.sinks.map(batch -> _), subs)
           ()
         }
         .option("checkpointLocation", s"$work/ckpt")

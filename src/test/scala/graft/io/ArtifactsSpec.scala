@@ -5,6 +5,8 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The session-artifact registry over cheap builds: one build per key
   * under concurrency, nested builds, and failed builds retried (the
@@ -71,5 +73,25 @@ class ArtifactsSpec extends SparkSpec {
     // now memoized: no third build
     assert(Artifacts.dir(spark, "spec-retry", dir)(works += _) === built)
     assert(works.size === 2)
+  }
+
+  test("a table hit creates its DataFrame without a Spark job") {
+    val dir = corpus()
+    val s = spark
+    import s.implicits._
+    def table = Artifacts.table(spark, "spec-hit-table", dir)(Seq(1L, 2L).toDF("id"))
+    val built = table
+    val jobs = new AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    val hit =
+      try { val h = table; ListenerBusDrain(spark.sparkContext); h }
+      finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs.get === 0)
+    assert(hit.schema === built.schema)
+    assert(hit.as[Long].collect().sorted.toSeq === Seq(1L, 2L))
   }
 }
