@@ -7,22 +7,24 @@ import org.apache.spark.sql.DataFrame
   * cached upstream can be released, or so an iterative consumer does
   * not re-run the producing pipeline once per action).
   *
-  * `localCheckpoint()` replaces the logical plan with a `LogicalRDD`
-  * scan, which blinds the plan audit ([[Explain]]) to every exchange
-  * and join beneath it. Setting `-Dgraft.keepLineage=true` (done by
-  * Explain itself) turns these cuts into no-ops so the full plan is
-  * visible; execution stays correct either way, only slower, because
-  * every [[cut]] site is a pure performance materialization.
-  *
-  * Checkpoints that are CORRECTNESS-critical — results that must be
-  * materialized before a temp work dir is deleted
-  * (PipelineQueries/StreamingParity) — call `localCheckpoint()`
-  * directly and are never disabled.
+  * graft cuts lineage in three ways, one per reason:
+  *   - performance: [[cut]]. `localCheckpoint()` replaces the logical
+  *     plan with a `LogicalRDD` scan, which blinds the plan audit
+  *     ([[Explain]]) to every exchange and join beneath it. Setting
+  *     `-Dgraft.keepLineage=true` (done by Explain itself) turns these
+  *     cuts into no-ops so the full plan is visible; execution stays
+  *     correct either way, only slower.
+  *   - loop rounds: [[graft.operators.Fixpoint]] cuts every round of
+  *     an iterative operator with `localCheckpoint()` and is never
+  *     disabled: an uncut round re-runs all the rounds before it.
+  *   - correctness: results that must be materialized before a temp
+  *     work dir is deleted (PipelineQueries/StreamingParity) call
+  *     `localCheckpoint()` directly and are never disabled.
   *
   * Fault-tolerance trade at cluster scale: `localCheckpoint` DROPS the
   * RDD lineage, so losing an executor that holds checkpoint blocks
   * fails the job instead of recomputing. The session conf
-  * `spark.graft.lineageCut` picks the strategy:
+  * `spark.graft.lineageCut` picks the strategy of [[cut]]:
   *   - `local` (default) — `localCheckpoint()`: cheapest, right for
   *     local[32] where there is no executor loss;
   *   - `disk` — `persist(StorageLevel.DISK_ONLY)` + eager

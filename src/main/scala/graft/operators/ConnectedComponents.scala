@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * one shuffle of the LABEL table (|vertices in any pair| rows — at
   * most a few % of the corpus, never the corpus itself).
   *
-  * Lineage is truncated per round with localCheckpoint — without it
-  * the plan doubles per iteration. On a cluster, reliable
-  * checkpointing (sc.setCheckpointDir + checkpoint) or writing rounds
-  * to storage replaces this for fault tolerance. For adversarial
+  * Both loops run through [[Fixpoint]], which cuts lineage every
+  * round (without it the plan doubles per iteration) and reads the
+  * round's convergence count from that cut. On a cluster, reliable checkpointing
+  * replaces the local cut for fault tolerance. For adversarial
   * graphs whose diameter exceeds the propagation budget (long chains),
   * [[run]] falls back to [[starContract]] — the large-star/small-star
   * contraction of Kiveris et al., "Connected Components in MapReduce
@@ -38,35 +38,35 @@ object ConnectedComponents {
       .union(edges.select(col(dst).as("u"), col(src).as("v")))
       .distinct()
       .persist()
-
-    var labels = und.select(col("u").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint()
-    var changed = true
-    var iter = 0
-    while (changed && iter < maxIter) {
-      val nbrMin = und.join(labels, und("v") === labels("id"))
-        .groupBy(col("u"))
-        .agg(min("component").as("nbr_min"))
-      val next = labels.join(nbrMin, labels("id") === nbrMin("u"), "left")
-        .select(col("id"), col("component"),
-          least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("next_component"))
-        .localCheckpoint()
-      // convergence needs EXISTENCE of a changed label, not its count:
-      // isEmpty is a limit-1 probe over the just-checkpointed blocks,
-      // so the common (non-converged) round stops at the first changed
-      // row instead of scanning the whole label table per round
-      changed = !next.filter(col("next_component") =!= col("component")).isEmpty
-      labels = next.select(col("id"), col("next_component").as("component"))
-      iter += 1
-    }
-    und.unpersist()
+    val labels =
+      try {
+        val init = Fixpoint.cut(und.select(col("u").as("id")).distinct()
+          .withColumn("component", col("id")))
+        Some(Fixpoint.untilStable("connected components", maxIter)(init) { labels =>
+          val (next, changed) = Fixpoint.cutCount(propagate(und, labels),
+            col("next_component") =!= col("component"))
+          (next.select(col("id"), col("next_component").as("component")), changed == 0)
+        })
+      } catch { case _: Fixpoint.NotConverged => None }
+      finally und.unpersist()
     // an unconverged result is silently WRONG (split clusters → under-
     // deduplication downstream) — finish with the O(log n) contraction
     // instead of either failing or returning it
-    if (changed) starContract(edges, src, dst)
-    else labels
+    labels.getOrElse(starContract(edges, src, dst))
+  }
+
+  /** One propagation round over the undirected edge set `und` (u, v):
+    * (id, component, next_component), where next_component is the min
+    * of the vertex's label and its neighbors' labels.
+    */
+  private[operators] def propagate(und: DataFrame, labels: DataFrame): DataFrame = {
+    val nbrMin = und.join(labels, und("v") === labels("id"))
+      .groupBy(col("u"))
+      .agg(min("component").as("nbr_min"))
+    labels.join(nbrMin, labels("id") === nbrMin("u"), "left")
+      .select(col("id"), col("component"),
+        least(col("component"), coalesce(col("nbr_min"), col("component")))
+          .as("next_component"))
   }
 
   /** Connected components by alternating large-star/small-star
@@ -90,43 +90,32 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint()
     // canonical (u, v) with u > v; self-loops carry no connectivity
-    var e = edges
+    val init = Fixpoint.cutCount(edges
       .select(greatest(col(src), col(dst)).as("u"), least(col(src), col(dst)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    var eCount = e.count()
-    var converged = eCount == 0
-    var round = 0
-    while (!converged && round < maxRounds) {
-      // large-star: every neighbor b > a links to m(a) = min(Γ(a) ∪ {a})
-      val adj = e.select(col("u").as("a"), col("v").as("b"))
-        .union(e.select(col("v").as("a"), col("u").as("b")))
-      val mins = adj.groupBy("a").agg(min(col("b")).as("mn"))
-      val large = adj.join(mins, "a")
-        .filter(col("b") > col("a"))
-        .select(col("b").as("u"), least(col("mn"), col("a")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
-      // small-star: u and its smaller neighbors all link to their min
-      val smallMins = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val hubEdges = smallMins.select(col("u"), col("m").as("v"))
-      val nbrEdges = large.join(smallMins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-      val next = hubEdges.union(nbrEdges).distinct().localCheckpoint()
-      val nextCount = next.count()
-      // canonical distinct sets: equal iff same size and no new edges
-      // (isEmpty = limit-1 probe, early-exits on the first new edge)
-      converged = nextCount == eCount && next.except(e).isEmpty
-      e = next
-      eCount = nextCount
-      round += 1
+      .distinct())
+    val (e, _) = Fixpoint.untilStable("star contraction", maxRounds)(init) {
+      case (e, eCount) =>
+        // large-star: every neighbor b > a links to m(a) = min(Γ(a) ∪ {a})
+        val adj = e.select(col("u").as("a"), col("v").as("b"))
+          .union(e.select(col("v").as("a"), col("u").as("b")))
+        val mins = adj.groupBy("a").agg(min(col("b")).as("mn"))
+        val large = Fixpoint.cut(adj.join(mins, "a")
+          .filter(col("b") > col("a"))
+          .select(col("b").as("u"), least(col("mn"), col("a")).as("v"))
+          .filter(col("u") =!= col("v"))
+          .distinct())
+        // small-star: u and its smaller neighbors all link to their min
+        val smallMins = large.groupBy(col("u")).agg(min(col("v")).as("m"))
+        val hubEdges = smallMins.select(col("u"), col("m").as("v"))
+        val nbrEdges = large.join(smallMins, "u")
+          .select(col("v").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v"))
+        val (next, nextCount) = Fixpoint.cutCount(hubEdges.union(nbrEdges).distinct())
+        // canonical distinct sets: equal iff same size and no new edges
+        // (isEmpty = limit-1 probe, early-exits on the first new edge)
+        ((next, nextCount), nextCount == eCount && next.except(e).isEmpty)
     }
-    if (!converged && eCount > 0)
-      throw new IllegalStateException(
-        s"star contraction did not converge in $maxRounds rounds")
     // fixpoint is a star forest: (leaf, root) edges; roots label themselves
     verts.join(e, verts("id") === e("u"), "left")
       .select(col("id"), coalesce(col("v"), col("id")).as("component"))

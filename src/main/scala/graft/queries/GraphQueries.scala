@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Sizing, Tables}
 import graft.io.Artifacts
-import graft.operators.{Dedup, Merge}
+import graft.operators.{Dedup, Fixpoint, Merge}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -303,8 +303,8 @@ object GraphQueries extends graft.QueryFamily {
   /** The fixed-point iteration core, factored so PageRankSpec can
     * drive it on hand graphs against an independent local replica of
     * the same integer recursion. Input is the UNDIRECTED edge list
-    * (both directions present); output (node, pr) is materialized
-    * (localCheckpoint) so the caller holds rows, not a 10-join plan.
+    * (both directions present); output (node, pr) is the last round's
+    * [[Fixpoint]] cut, so the caller holds rows, not a 10-join plan.
     *
     * `forceShuffledRanks`: None = auto (node count vs
     * [[prBroadcastMaxNodes]]); Some(b) = the spec's handle to pin
@@ -336,8 +336,8 @@ object GraphQueries extends graft.QueryFamily {
       val adj = und.join(deg, "src")
         .repartition(adjParts, if (shuffled) col("src") else col("dst")).persist()
       try {
-        var ranks = deg.select(col("src").as("node"), lit(prScale).as("pr"))
-        for (_ <- 1 to iters) {
+        val ranks0 = deg.select(col("src").as("node"), lit(prScale).as("pr"))
+        Fixpoint.rounds(iters)(ranks0) { (ranks, _) =>
           val joined =
             if (shuffled)
               adj.join(ranks.hint("shuffle_hash"), adj("src") === ranks("node"))
@@ -348,9 +348,8 @@ object GraphQueries extends graft.QueryFamily {
           // the whole tree each round — O(iters²) planning that costs
           // more than the node-sized jobs themselves. With it each
           // round is one small job over (persisted adj × materialized
-          // ranks); values are identical (same ConnectedComponents
-          // pattern; on a cluster, reliable checkpoint replaces this).
-          ranks = joined
+          // ranks); values are identical.
+          Fixpoint.cut(joined
             .select(col("dst"), expr("pr DIV deg").as("contrib"))
             .groupBy("dst")
             .agg(sum("contrib").as("mass"))
@@ -359,10 +358,8 @@ object GraphQueries extends graft.QueryFamily {
                 s"+ 85 * CAST(mass AS DECIMAL(38,0))) DIV 100 AS BIGINT)").as("pr"))
             // node-sized blocks for the checkpoint (and the next
             // round's broadcast collect), not one per adj partition
-            .coalesce(rankParts)
-            .localCheckpoint()
+            .coalesce(rankParts))
         }
-        ranks
       } finally adj.unpersist()
     } finally deg.unpersist()
   }
@@ -478,14 +475,6 @@ object GraphQueries extends graft.QueryFamily {
 
   // ---------- q125: k-core (iterative peeling) ----------
 
-  /** Peeling rounds after which an unconverged run FAILS (and the
-    * oracle's unroll depth — extra rounds past the fixpoint are
-    * identity, so early convergence never mismatches). Peeling depth
-    * is the graph's degeneracy ordering length at threshold k — single
-    * digits on co-occurrence graphs; 30 is a generous ceiling.
-    */
-  private val kcoreMaxRounds = 30
-
   /** k-core extraction over the q122 supplier co-occurrence graph —
     * the density filter of graph curation: iteratively peel vertices
     * with degree < k (removals cascade — losing a neighbor can drop a
@@ -500,11 +489,11 @@ object GraphQueries extends graft.QueryFamily {
     *
     * Scale shape: each round is one degree aggregation (partial-agg
     * shuffle keyed by vertex) + two anti-joins dropping peeled
-    * endpoints, with per-round localCheckpoint (the q117/CC lineage
-    * rule); the edge set only shrinks, so round cost is monotone
-    * decreasing. An ITERATIVE algorithm stays oracle-checkable the
-    * q117 way: the oracle unrolls [[kcoreMaxRounds]] rounds as plain
-    * CTEs — identity once the fixpoint is reached.
+    * endpoints, cut per round by [[Fixpoint]]; the edge set only
+    * shrinks, so round cost is monotone decreasing. The number of
+    * rounds is the data's: a path of n vertices peels two per round.
+    * The oracle runs to the same fixpoint as one recursive CTE that
+    * carries the peeled set as a list.
     */
   def q125_kcore(spark: SparkSession, dir: String): DataFrame = {
     kcore(tradeSupplierPairs(spark, dir))
@@ -513,66 +502,50 @@ object GraphQueries extends graft.QueryFamily {
   }
 
   /** Peels `e0` (canonical u < v edges) at k = ⌈2|E|/|V|⌉; returns
-    * (id, core_deg) for the surviving subgraph. Factored for
-    * KCoreSpec's hand graphs.
+    * (id, core_deg) for the surviving subgraph. Factored for the hand
+    * graphs of KCoreSpec and FixpointSpec.
     */
-  private[queries] def kcore(e0In: DataFrame): DataFrame = {
+  private[graft] def kcore(e0In: DataFrame): DataFrame = {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
         .groupBy("id").agg(count(lit(1)).as("dg"))
-    var edges = e0In.localCheckpoint()
+    val e0 = Fixpoint.cut(e0In)
     val (nE, nV) = {
       // coalesce: sum() over zero rows is NULL — an empty edge set
       // (e.g. a date window with no orders) must hit the nV == 0
       // early return, not a NULL unboxing error
-      val d = degrees(edges)
+      val d = degrees(e0)
         .agg(count(lit(1)).as("v"), coalesce(sum("dg"), lit(0L)).as("e2"))
         .collect()(0)
       (d.getLong(1) / 2, d.getLong(0))
     }
-    if (nV == 0) return degrees(edges).select(col("id"), col("dg").as("core_deg"))
+    if (nV == 0) return degrees(e0).select(col("id"), col("dg").as("core_deg"))
     val k = (22 * nE + 16 * nV - 1) / (16 * nV) // ⌈(11/16)·2E/V⌉, exact integers
-    var converged = false
-    var round = 0
-    while (!converged && round < kcoreMaxRounds) {
+    // every round that does not converge peels at least one vertex, so
+    // round nV + 1 at the latest finds nothing left to peel
+    val core = Fixpoint.untilStable("k-core peeling", nV + 1)(e0) { edges =>
       // peel set, not keep set: after the first round only a few
       // vertices fall per round, so LOW is the small side — the
       // anti-joins below go broadcast under AQE instead of shuffling
       // the surviving edge set against a |V|-sized keep list; the
       // materialization also means degrees aggregate once per round,
       // not once per join
-      val low = degrees(edges).filter(col("dg") < k).select("id")
-        .localCheckpoint()
-      if (low.isEmpty) converged = true
-      else {
-        edges = edges
-          .join(low.select(col("id").as("u")), Seq("u"), "left_anti")
-          .join(low.select(col("id").as("v")), Seq("v"), "left_anti")
-          .select("u", "v")
-          .localCheckpoint()
-      }
-      round += 1
+      val (low, nLow) = Fixpoint.cutCount(degrees(edges).filter(col("dg") < k).select("id"))
+      if (nLow == 0) (edges, true)
+      else (Fixpoint.cut(edges
+        .join(low.select(col("id").as("u")), Seq("u"), "left_anti")
+        .join(low.select(col("id").as("v")), Seq("v"), "left_anti")
+        .select("u", "v")), false)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"k-core peeling did not converge in $kcoreMaxRounds rounds")
-    degrees(edges).select(col("id"), col("dg").as("core_deg"))
+    degrees(core).select(col("id"), col("dg").as("core_deg"))
   }
 
-  val q125_oracle: String = {
-    // MATERIALIZED: each round references its predecessor several
-    // times — inlining would re-expand the whole chain exponentially
-    val round = (i: Int) => {
-      val prev = s"e${i - 1}"
-      s"""d$i AS MATERIALIZED (SELECT vtx, count(*) AS dg FROM (
-         |  SELECT u AS vtx FROM $prev UNION ALL SELECT v FROM $prev) GROUP BY vtx),
-         |keep$i AS MATERIALIZED (SELECT vtx FROM d$i, kk WHERE dg >= kk.k),
-         |e$i AS MATERIALIZED (SELECT u, v FROM $prev
-         |  WHERE u IN (SELECT vtx FROM keep$i) AND v IN (SELECT vtx FROM keep$i))""".stripMargin
-    }
-    val rounds = (1 to kcoreMaxRounds).map(round).mkString(",\n")
-    val last = s"e$kcoreMaxRounds"
-    s"""WITH os AS MATERIALIZED (
+  val q125_oracle: String =
+    // peel(r, gone): the vertices peeled in rounds 1..r. Each step
+    // aggregates the degrees of the edges that survive `gone` and
+    // appends the vertices below k; the recursion ends with the first
+    // round that peels nothing
+    """WITH RECURSIVE os AS MATERIALIZED (
        |  SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
        |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
        |  WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
@@ -584,11 +557,24 @@ object GraphQueries extends graft.QueryFamily {
        |             SELECT u AS vtx FROM e0 UNION ALL SELECT v FROM e0)) - 1)
        |       // (16 * (SELECT count(DISTINCT vtx) FROM (
        |             SELECT u AS vtx FROM e0 UNION ALL SELECT v FROM e0))) AS k),
-       |$rounds
+       |peel(r, gone) AS (
+       |  SELECT 0, []::BIGINT[]
+       |  UNION ALL
+       |  SELECT p.r + 1, list_concat(p.gone, d.low)
+       |  FROM peel p JOIN (
+       |    SELECT r, list(vtx) FILTER (WHERE dg < k) AS low
+       |    FROM (SELECT r, vtx, count(*) AS dg FROM (
+       |            SELECT q.r, unnest([e0.u, e0.v]) AS vtx FROM peel q, e0
+       |            WHERE NOT list_contains(q.gone, e0.u)
+       |              AND NOT list_contains(q.gone, e0.v))
+       |          GROUP BY r, vtx), kk
+       |    GROUP BY r) d ON d.r = p.r
+       |  WHERE len(d.low) > 0)
        |SELECT vtx AS s_suppkey, CAST(count(*) AS BIGINT) AS core_deg FROM (
-       |  SELECT u AS vtx FROM $last UNION ALL SELECT v FROM $last)
+       |  SELECT unnest([e0.u, e0.v]) AS vtx
+       |  FROM e0, (SELECT gone FROM peel ORDER BY r DESC LIMIT 1) g
+       |  WHERE NOT list_contains(g.gone, e0.u) AND NOT list_contains(g.gone, e0.v))
        |GROUP BY vtx ORDER BY vtx""".stripMargin
-  }
 
   // ---------- q133: label-propagation communities ----------
 
@@ -614,9 +600,9 @@ object GraphQueries extends graft.QueryFamily {
     * Scale shape: each round is one shuffle join of the edge list
     * against the vertex-sized label table (partial-agg collapses the
     * (dst, label) counts map-side) and one vertex-partitioned
-    * row_number window — never an edge² blowup; per-round
-    * localCheckpoint cuts the 4-deep self-referential lineage (the
-    * q117/q125 iteration rule). At billion-edge scale each round is
+    * row_number window — never an edge² blowup; [[Fixpoint]] cuts the
+    * 4-deep self-referential lineage per round (the q117/q125
+    * iteration rule). At billion-edge scale each round is
     * the same two exchanges GraphX/Pregel would pay.
     */
   def q133_label_prop(spark: SparkSession, dir: String): DataFrame = {
@@ -630,7 +616,7 @@ object GraphQueries extends graft.QueryFamily {
 
   /** `rounds` synchronous label-propagation rounds over a canonical
     * (u < v, distinct) edge list; returns (id, lab). Factored for
-    * LabelPropSpec's hand graphs.
+    * PageRankSpec's hand graphs.
     */
   private[queries] def labelPropagation(e0In: DataFrame, rounds: Int): DataFrame = {
     val e0 = e0In.localCheckpoint()
@@ -639,20 +625,17 @@ object GraphQueries extends graft.QueryFamily {
     val edges = e0.select(col("u").as("s"), col("v").as("d"))
       .union(e0.select(col("v").as("s"), col("u").as("d")))
       .localCheckpoint()
-    var labels = edges.select(col("s").as("id")).distinct()
-      .withColumn("lab", col("id"))
-      .localCheckpoint()
+    val labels0 = Fixpoint.cut(edges.select(col("s").as("id")).distinct()
+      .withColumn("lab", col("id")))
     val w = Window.partitionBy("id").orderBy(col("c").desc, col("lab").asc)
-    for (_ <- 1 to rounds) {
-      labels = edges.join(labels.select(col("id").as("s"), col("lab")), "s")
+    Fixpoint.rounds(rounds)(labels0) { (labels, _) =>
+      Fixpoint.cut(edges.join(labels.select(col("id").as("s"), col("lab")), "s")
         .groupBy(col("d").as("id"), col("lab"))
         .agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-        .select("id", "lab")
-        .localCheckpoint()
+        .select("id", "lab"))
     }
-    labels
   }
 
   val q133_oracle: String = {
@@ -703,44 +686,43 @@ object GraphQueries extends graft.QueryFamily {
   private val hitsScale = 1000000000000L
 
   /** The iteration core on any directed (c, s) edge list, factored so
-    * HitsSpec can drive hand graphs against a sequential BigInt
+    * BasketWinsorHitsSpec (hand graph) and GenerativeOpsSpec (random
+    * bipartite graphs) can drive it against a sequential BigInt
     * replica. Returns (node_type, key, score_scaled).
     *
     * Scale shape: per half-round = one shuffle join of edges against
     * the node-sized score table (partial agg collapses (node, score)
     * map-side) + one 1-row total that broadcasts back — no edge²
-    * term, no driver collect; per-round localCheckpoint cuts the
-    * self-referential lineage (the q117/q125/q133 iteration rule).
+    * term, no driver collect; [[Fixpoint]] cuts the self-referential
+    * lineage after each half-round (the q117/q125/q133 iteration rule).
     * Edges persist once; each iteration moves only node-sized state.
     */
   private[queries] def hitsLoop(edges: DataFrame, rounds: Int): DataFrame = {
     val dec38 = "decimal(38,0)"
     val e = edges.select(col("c"), col("s")).persist()
     try {
-      var hub = e.select("c").distinct()
-        .withColumn("h", lit(1000000L)).localCheckpoint()
-      var auth: DataFrame = null
-      for (_ <- 1 to rounds) {
-        // persist the raw rollup: it feeds BOTH the 1-row normalizer
-        // broadcast and the probe side — unpersisted, the edge join +
-        // aggregation ran twice per half-round (r18 opt: the broadcast
-        // subtree is its own stage, so Spark cannot share the scan)
-        val araw = e.join(hub, "c")
-          .groupBy("s").agg(sum(col("h").cast(dec38)).as("ar")).persist()
-        val asum = araw.agg(sum(col("ar")).as("asum"))
-        auth = araw.crossJoin(broadcast(asum))
-          .select(col("s"),
-            expr(s"CAST((ar * $hitsScale) DIV asum AS BIGINT)").as("a"))
-          .localCheckpoint()
-        araw.unpersist()
-        val hraw = e.join(auth, "s")
-          .groupBy("c").agg(sum(col("a").cast(dec38)).as("hr")).persist()
-        val hsum = hraw.agg(sum(col("hr")).as("hsum"))
-        hub = hraw.crossJoin(broadcast(hsum))
-          .select(col("c"),
-            expr(s"CAST((hr * $hitsScale) DIV hsum AS BIGINT)").as("h"))
-          .localCheckpoint()
-        hraw.unpersist()
+      // one half-round: the `to` side's scores from the `from` side's
+      // `score` column, rescaled so they sum to hitsScale. The raw
+      // rollup is persisted because it feeds BOTH the 1-row normalizer
+      // broadcast and the probe side — unpersisted, the edge join +
+      // aggregation ran twice per half-round (r18 opt: the broadcast
+      // subtree is its own stage, so Spark cannot share the scan)
+      def half(scores: DataFrame, from: String, to: String, score: String,
+          out: String): DataFrame = {
+        val raw = e.join(scores, from)
+          .groupBy(to).agg(sum(col(score).cast(dec38)).as("raw")).persist()
+        try {
+          val total = raw.agg(sum(col("raw")).as("total"))
+          Fixpoint.cut(raw.crossJoin(broadcast(total))
+            .select(col(to),
+              expr(s"CAST((raw * $hitsScale) DIV total AS BIGINT)").as(out)))
+        } finally raw.unpersist()
+      }
+      val hub0 = Fixpoint.cut(e.select("c").distinct().withColumn("h", lit(1000000L)))
+      // state (hubs, authorities): round 1 replaces the placeholder
+      val (hub, auth) = Fixpoint.rounds(rounds)((hub0, hub0)) { case ((hub, _), _) =>
+        val auth = half(hub, "c", "s", "h", "a")
+        (half(auth, "s", "c", "a", "h"), auth)
       }
       auth.select(lit("supplier").as("node_type"), col("s").as("key"),
           col("a").as("score_scaled"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{HashFunctions => H, TextFunctions => T}
+import graft.operators.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -745,14 +746,14 @@ object RetrievalQueries extends graft.QueryFamily {
       .localCheckpoint()
     val wPick = Window.partitionBy("query_id")
       .orderBy(col("mmr_ppm").desc, col("doc_id"))
-    var picked = cand
+    val picked1 = Fixpoint.cut(cand
       .withColumn("penalty_ppm", lit(0L))
       .withColumn("mmr_ppm", col("rel_ppm"))
       .withColumn("rn", row_number().over(wPick))
       .filter(col("rn") === 1).drop("rn")
-      .withColumn("mmr_rank", lit(1))
-      .localCheckpoint()
-    for (i <- 2 to mmrK) {
+      .withColumn("mmr_rank", lit(1)))
+    // round r picks the (r + 1)-th result
+    val picked = Fixpoint.rounds(mmrK - 1)(picked1) { (picked, r) =>
       val rem = cand.join(picked.select("query_id", "doc_id"),
         Seq("query_id", "doc_id"), "left_anti")
       val pen = sims
@@ -764,8 +765,8 @@ object RetrievalQueries extends graft.QueryFamily {
         .withColumn("mmr_ppm", col("rel_ppm") - col("penalty_ppm"))
         .withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1).drop("rn")
-        .withColumn("mmr_rank", lit(i))
-      picked = picked.unionByName(pick).localCheckpoint()
+        .withColumn("mmr_rank", lit(r + 1))
+      Fixpoint.cut(picked.unionByName(pick))
     }
     picked
       .select("query_id", "mmr_rank", "doc_id", "rel_ppm", "penalty_ppm", "mmr_ppm")

@@ -60,4 +60,15 @@ class ConnectedComponentsSpec extends SparkSpec {
       .select("id").as[Long].collect().toSet
     assert(ids == Set(5L, 6L))
   }
+
+  test("a failing run leaves no cached edge set behind") {
+    spark.catalog.clearCache()
+    // a range, not a local Seq: the optimizer would evaluate a
+    // projection of local rows (and raise) before the run starts
+    val edges = spark.range(1, 4).select(col("id").as("a"),
+      when(col("id") === 2L, raise_error(lit("bad edge"))).otherwise(col("id") + 1).as("b"))
+    val err = intercept[Exception](ConnectedComponents.run(edges, "a", "b"))
+    assert(err.getMessage.contains("bad edge"))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

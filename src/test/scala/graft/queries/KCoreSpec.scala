@@ -66,4 +66,13 @@ class KCoreSpec extends SparkSpec {
     }.filter(e => e._1 != e._2).distinct
     assert(run(edges) === localKcore(edges))
   }
+
+  test("a 64-vertex path peels to empty over 32 rounds") {
+    // E = 63, V = 64 → k = 2: each round peels the two current ends,
+    // so the path needs 32 rounds
+    val path = (0L until 63L).map(i => (i, i + 1))
+    val got = run(path)
+    assert(got.isEmpty)
+    assert(got === localKcore(path))
+  }
 }

@@ -5,7 +5,9 @@ import graft.SparkSpec
 /** q117's fixed-point recursion against an independent local replica:
   * the distributed loop must match the sequential integer recursion
   * node for node, bit for bit — that's the whole point of integer
-  * PageRank (no float drift, no partition-order sensitivity).
+  * PageRank (no float drift, no partition-order sensitivity). Also
+  * q133's label propagation against hand-traced rounds, including the
+  * synchronous 2-cycle a fixed round count must determinize.
   */
 class PageRankSpec extends SparkSpec {
 
@@ -78,5 +80,27 @@ class PageRankSpec extends SparkSpec {
     // DIV floors shed at most a few units per node per iteration
     assert(total <= ideal && total > ideal - 4L * 10 * 100,
       s"mass drifted: $total vs $ideal")
+  }
+
+  // ---------- q133: label propagation ----------
+
+  test("q133: disjoint triangles converge to their min labels") {
+    import spark.implicits._
+    val e0 = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (10L, 12L), (11L, 12L))
+      .toDF("u", "v")
+    val got = GraphQueries.labelPropagation(e0, GraphQueries.lpRounds)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
+  }
+
+  test("q133: synchronous 2-cycle on a path is determinized by the fixed round count") {
+    import spark.implicits._
+    // path 1–2–3 oscillates under synchronous LPA; hand-traced rounds:
+    // r1: (1→2, 2→1, 3→2)  r2: (1→1, 2→2, 3→1)
+    // r3: (1→2, 2→1, 3→2)  r4: (1→1, 2→2, 3→1)
+    val e0 = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
+    val got = GraphQueries.labelPropagation(e0, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 1L))
   }
 }

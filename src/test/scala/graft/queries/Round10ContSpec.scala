@@ -4,12 +4,11 @@ import graft.SparkSpec
 import java.security.MessageDigest
 import java.sql.Timestamp
 
-/** Pins for the round-10 continuation operators (q132–q137):
-  * exact-invariant corpora for DSIR, hand-traced label-propagation
-  * rounds (including the synchronous 2-cycle a fixed round count must
-  * determinize), replica tertiles, hand-computed decay weights incl.
-  * the shift clamp, CMS no-underestimate/no-collision exactness, and
-  * the domain-blocklist decile rule on a planted junk source.
+/** Pins for the round-10 continuation operators (q132, q134–q139):
+  * exact-invariant corpora for DSIR, replica tertiles, hand-computed
+  * decay weights incl. the shift clamp, CMS no-underestimate/
+  * no-collision exactness, and the domain-blocklist decile rule on a
+  * planted junk source.
   */
 class Round10ContSpec extends SparkSpec {
 
@@ -47,28 +46,6 @@ class Round10ContSpec extends SparkSpec {
     val got = CurationQueries.q132_dsir(spark, dir).collect()
     assert(got.map(_.getLong(0)).toSeq === Seq(1L, 2L))
     assert(got.forall(r => r.getLong(3) == 0L && !r.getBoolean(4)))
-  }
-
-  // ---------- q133 ----------
-
-  test("q133: disjoint triangles converge to their min labels") {
-    import spark.implicits._
-    val e0 = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (10L, 12L), (11L, 12L))
-      .toDF("u", "v")
-    val got = GraphQueries.labelPropagation(e0, GraphQueries.lpRounds)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
-  }
-
-  test("q133: synchronous 2-cycle on a path is determinized by the fixed round count") {
-    import spark.implicits._
-    // path 1–2–3 oscillates under synchronous LPA; hand-traced rounds:
-    // r1: (1→2, 2→1, 3→2)  r2: (1→1, 2→2, 3→1)
-    // r3: (1→2, 2→1, 3→2)  r4: (1→1, 2→2, 3→1)
-    val e0 = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
-    val got = GraphQueries.labelPropagation(e0, 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 1L))
   }
 
   // ---------- q134 ----------
