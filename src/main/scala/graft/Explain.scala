@@ -42,8 +42,7 @@ object Explain {
       positional.drop(1).headOption.map(_.split(",").toSet)
     // disable the perf-only localCheckpoint lineage cuts so the audit
     // sees the full plan beneath them (loop-round cuts and the
-    // correctness-critical checkpoints in the streaming/temp-dir
-    // queries stay on; see [[Lineage]]) —
+    // temp-dir cut of Scratch.scoped stay on; see [[Lineage]]) —
     // unless --as-benched asked for the executed shape
     if (!asBenched) System.setProperty("graft.keepLineage", "true")
     val spark = RuntimeConfig.fromEnv().sessionBuilder().getOrCreate()

@@ -17,9 +17,10 @@ import org.apache.spark.sql.DataFrame
   *   - loop rounds: [[graft.operators.Fixpoint]] cuts every round of
   *     an iterative operator with `localCheckpoint()` and is never
   *     disabled: an uncut round re-runs all the rounds before it.
-  *   - correctness: results that must be materialized before a temp
-  *     work dir is deleted (PipelineQueries/StreamingParity) call
-  *     `localCheckpoint()` directly and are never disabled.
+  *   - correctness: a query that stages data in a temp work dir runs
+  *     in [[graft.io.Scratch.scoped]], which cuts the result with
+  *     `localCheckpoint()` before the dir is deleted; that cut is never
+  *     disabled.
   *
   * Fault-tolerance trade at cluster scale: `localCheckpoint` DROPS the
   * RDD lineage, so losing an executor that holds checkpoint blocks

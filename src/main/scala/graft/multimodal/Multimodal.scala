@@ -163,11 +163,8 @@ object Multimodal extends graft.QueryFamily {
     * a bounded per-batch delta — no global recompute per arrival.
     */
   def q335_stream_media_manifest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.Trigger
-    val work = graft.io.Scratch.dir(spark, "graft-q335-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q335-") { work =>
       val d = Tables.load(spark, dir, "documents")
       graft.queries.CurationFlow.stageTwoBatches(spark, work, d, "doc_id",
         feed = Some(dir -> "documents"))
@@ -187,8 +184,7 @@ object Multimodal extends graft.QueryFamily {
       }
       graft.io.BatchLog.read(spark, s"$work/manifest")
         .orderBy("doc_id", "frame_idx")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   val q89_oracle: String =

@@ -45,7 +45,8 @@ object Consolidator {
   }
 
   /** Path-based entry matching the reference flow: glob-read per-batch
-    * outputs, read existing consolidated output if present.
+    * outputs, read existing consolidated output if present (see
+    * [[graft.io.SnapshotSwap.read]] for what counts as present).
     */
   def consolidateFromPaths(
       spark: SparkSession,
@@ -53,30 +54,7 @@ object Consolidator {
       format: String,
       tieBreaker: String): Result = {
     val batches = spark.read.format(format).option("mode", "PERMISSIVE").load(cfg.inputPattern)
-    // only a genuinely absent/empty output means "first run" — a
-    // transient read error must propagate, or incremental
-    // consolidation silently degrades to new-batches-only and
-    // overwrites the existing dataset. A pre-created-but-empty dir
-    // (mkdir -p, lone _SUCCESS) fails schema inference and IS a first
-    // run; restore any snapshot stranded by a crashed swap first. A
-    // snapshot with zero rows is read as one: it unions as no rows, so
-    // no job is spent probing for them.
-    val outPath = new org.apache.hadoop.fs.Path(cfg.outputPath)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.io.SnapshotSwap.recover(fs, outPath)
-    val existing =
-      if (!fs.exists(outPath)) None
-      else
-        try Some(spark.read.format(format).option("mode", "PERMISSIVE").load(cfg.outputPath))
-        catch {
-          // ONLY the no-data-files condition means first run; any other
-          // analysis failure (wrong format, corrupt snapshot) must
-          // fail loudly — degrading would consolidate new batches
-          // alone and the caller's swap would delete the real snapshot
-          case e: org.apache.spark.sql.AnalysisException
-              if Option(e.getCondition).exists(_.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-            None
-        }
+    val existing = graft.io.SnapshotSwap.read(spark, cfg.outputPath, format)
     consolidate(batches, existing, cfg, tieBreaker)
   }
 }

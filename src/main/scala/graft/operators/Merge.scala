@@ -26,9 +26,9 @@ object Merge {
     *
     * '''Precondition''': each side must be unique per `keys`. SQL MERGE
     * errors when multiple source rows match one target row; a full-outer
-    * join instead silently fans out (m×n rows per duplicated key). All
-    * in-repo callers dedup first (q48, StreamingConsolidation run
-    * [[Dedup.keepNewest]] upstream). Pass `assertUniqueKeys = true` to
+    * join instead silently fans out (m×n rows per duplicated key). The
+    * in-repo caller, q48, dedups both sides first with
+    * [[Dedup.keepNewest]]. Pass `assertUniqueKeys = true` to
     * pay one aggregation per side and fail fast instead — off by
     * default because the check is a full shuffle of both inputs.
     *

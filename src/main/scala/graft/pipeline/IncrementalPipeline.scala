@@ -69,14 +69,8 @@ object IncrementalPipeline {
       // overwrite-in-place would read and clobber the same path; write
       // via a temp dir then swap (same pattern as the reference's
       // consolidated bucket rewrite, made atomic-ish for Hadoop FS) —
-      // see SnapshotSwap for the crash-window guarantees. The matching
-      // SnapshotSwap.recover runs inside consolidateFromPaths, before
-      // the existing snapshot is read.
-      import org.apache.hadoop.fs.Path
-      val dst = new Path(out)
-      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      result.df.write.mode("overwrite").parquet(graft.io.SnapshotSwap.tmpPath(dst).toString)
-      graft.io.SnapshotSwap.promote(fs, dst)
+      // see SnapshotSwap for the crash-window guarantees
+      graft.io.SnapshotSwap.replace(result.df, out)
       s"${result.mode} -> $out"
     }
 

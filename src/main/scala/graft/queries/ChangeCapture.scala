@@ -132,11 +132,8 @@ object ChangeCapture extends graft.QueryFamily {
     * read path (footer-stats row-group skipping under a pushed range
     * predicate) runs against the real written artifact.
     */
-  def q90_layout_prune(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q90-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q90_layout_prune(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q90-") { work =>
       graft.io.Layout.writeRangeClustered(
         Tables.load(spark, dir, "documents").select("doc_id", "source", "n_chars"),
         s"$work/docs", numFiles = 8, "doc_id")
@@ -146,9 +143,7 @@ object ChangeCapture extends graft.QueryFamily {
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).cast("long").as("total_chars"))
         .orderBy("source")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q90_oracle: String =
     """SELECT source, count(*) AS n_docs,
@@ -174,11 +169,8 @@ object ChangeCapture extends graft.QueryFamily {
     * the one blessed sort column" and "fast queries on every clustered
     * dimension".
     */
-  def q101_zorder(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q101-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q101_zorder(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q101-") { work =>
       graft.io.Layout.writeZOrdered(
         Tables.load(spark, dir, "documents").select("doc_id", "source", "n_chars"),
         s"$work/docs", numFiles = 16, "doc_id", "n_chars")
@@ -189,9 +181,7 @@ object ChangeCapture extends graft.QueryFamily {
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).cast("long").as("total_chars"))
         .orderBy("source")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q101_oracle: String =
     """SELECT source, count(*) AS n_docs,
@@ -224,10 +214,7 @@ object ChangeCapture extends graft.QueryFamily {
     */
   def q115_version_diff(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q115-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q115-") { work =>
       val table = s"$work/orders_cdf"
       val orders = Tables.load(spark, dir, "orders")
       val cutoff = to_timestamp(lit("1998-01-01 00:00:00"))
@@ -245,8 +232,7 @@ object ChangeCapture extends graft.QueryFamily {
           col("o_orderdate").as("new_ts"), col("o_totalprice").as("new_price"))
       deltaChangelog(state1, deltaWin)
         .orderBy("o_custkey")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** The O(delta) changelog core, factored so DeltaChangelogSpec can
@@ -315,10 +301,7 @@ object ChangeCapture extends graft.QueryFamily {
     */
   def q121_delete_feed(spark: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q121-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q121-") { work =>
       val table = s"$work/orders_erasure"
       val orders = Tables.load(spark, dir, "orders")
       val cutoff = to_timestamp(lit("1998-01-01 00:00:00"))
@@ -348,8 +331,7 @@ object ChangeCapture extends graft.QueryFamily {
       deltaChangelog(state1, deltaWin)
         .select("op", "o_custkey", "old_orderkey", "old_date", "old_price")
         .orderBy("o_custkey")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   val q121_oracle: String =
@@ -421,20 +403,15 @@ object ChangeCapture extends graft.QueryFamily {
     * must never change answers, which is exactly what the shared
     * oracle checks.
     */
-  def q124_bucket_join(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q124-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q124_bucket_join(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q124-") { work =>
       bucketedOrdersCustomer(spark, dir, work)
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double")
             .as("revenue"))
         .orderBy("c_mktsegment")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q124_oracle: String =
     """SELECT c_mktsegment, count(*) AS n_orders,
@@ -461,11 +438,8 @@ object ChangeCapture extends graft.QueryFamily {
     * granularity, so the scan cost follows the NEW spec for new data
     * without rewriting old data — the entire point of spec evolution.
     */
-  def q159_partition_evolution(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q159-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q159_partition_evolution(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q159-") { work =>
       val docs = Tables.load(spark, dir, "documents")
         .withColumn("day", (col("doc_id") % 7).cast("int"))
       docs.filter(col("doc_id") % 2 === 0)
@@ -480,9 +454,7 @@ object ChangeCapture extends graft.QueryFamily {
           sum(col("n_chars")).cast("long").as("total_chars"),
           sum(col("doc_id")).cast("long").as("id_sum"))
         .orderBy("source")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** Both generations' read paths, for the spec's plan assertions. */
   private[queries] def partitionEvolutionPlans(

@@ -5,6 +5,7 @@ import graft.functions.{HashFunctions => H, TextFunctions => T}
 import graft.io.Artifacts
 import graft.meta._
 import graft.operators.RangeRank
+import graft.streaming.FileFeed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -465,13 +466,9 @@ object CurationFlow {
     */
   def runSinks(
       spark: SparkSession, dir: String, cur: CurationDef,
-      batchStamps: Seq[String]): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-cursink-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try runSinksAt(spark, dir, cur, batchStamps, work)
-    finally fs.delete(new Path(work), true)
-  }
+      batchStamps: Seq[String]): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-cursink-")(
+      runSinksAt(spark, dir, cur, batchStamps, _))
 
   /** [[runSinks]] against a caller-owned work dir (no cleanup) — the
     * spec drives this form so the written layout can be audited. */
@@ -512,7 +509,6 @@ object CurationFlow {
           max(col("batch_date")).as("newest_batch"),
           sum(col("n_toks")).as("tokens"))
         .orderBy(cur.reportBy)
-        .localCheckpoint() // materialize before the work dir is deleted
     }
   }
 
@@ -1139,11 +1135,8 @@ object CurationFlow {
       index: Option[String],
       report: (CurationDef, DataFrame, Option[String]) => DataFrame =
         runStream(_, _, _)): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val work = graft.io.Scratch.dir(spark, "graft-curstream-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-curstream-") { work =>
       val docs = Tables.load(spark, dir, cur.table)
       stageTwoBatches(spark, work, docs, cur.idColumn,
         feed = Some(dir -> cur.table))
@@ -1164,8 +1157,7 @@ object CurationFlow {
       }
       spark.read.parquet(s"$work/out")
         .orderBy(cur.reportBy)
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to
@@ -1206,45 +1198,22 @@ object CurationFlow {
     */
   private[graft] def stageTwoBatches(
       spark: SparkSession, work: String, docs: DataFrame,
-      idColumn: String, feed: Option[(String, String)] = None): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(work).getFileSystem(conf)
-    fs.mkdirs(new Path(s"$work/incoming"))
-    val t0 = System.currentTimeMillis()
+      idColumn: String, feed: Option[(String, String)] = None): Unit =
     feed match {
       case Some((dir, name)) =>
         val src = Artifacts.dir(spark, "2batch", dir, name, idColumn) { store =>
-          writeTwoBatchFiles(spark, store, docs, idColumn)
+          writeTwoBatchFiles(store, docs, idColumn)
         }
-        Seq("b0", "b1").zipWithIndex.foreach { case (name, i) =>
-          val target = new Path(s"$work/incoming/$name.parquet")
-          org.apache.hadoop.fs.FileUtil.copy(
-            fs, new Path(s"$src/$name.parquet"), fs, target, false, conf)
-          fs.setTimes(target, t0 + i * 1000L, -1)
-        }
-      case None => writeTwoBatchFiles(spark, s"$work/incoming", docs, idColumn)
+        FileFeed.arrive(spark, Seq(s"$src/b0.parquet", s"$src/b1.parquet"),
+          s"$work/incoming")
+      case None => writeTwoBatchFiles(s"$work/incoming", docs, idColumn)
     }
-  }
 
   private def writeTwoBatchFiles(
-      spark: SparkSession, outDir: String, docs: DataFrame,
-      idColumn: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(outDir))
+      outDir: String, docs: DataFrame, idColumn: String): Unit = {
     val half =
       substring(md5(concat(lit("sb|"), col(idColumn).cast("string"))), 1, 1) < "8"
-    val t0 = System.currentTimeMillis()
-    Seq(("b0", docs.filter(half)), ("b1", docs.filter(!half)))
-      .zipWithIndex.foreach { case ((name, df), i) =>
-        df.coalesce(1).write.parquet(s"$outDir/stage_$name")
-        val part = fs.globStatus(new Path(s"$outDir/stage_$name/part-*.parquet")).head.getPath
-        val target = new Path(s"$outDir/$name.parquet")
-        require(fs.rename(part, target), s"failed to stage $name")
-        fs.setTimes(target, t0 + i * 1000L, -1)
-        fs.delete(new Path(s"$outDir/stage_$name"), true)
-      }
+    FileFeed.write(outDir, Seq("b0" -> docs.filter(half), "b1" -> docs.filter(!half)))
   }
 
   /** Stream-to-BYTES: the declared funnel over a stream whose
@@ -1262,13 +1231,9 @@ object CurationFlow {
     */
   def runStreamSinks(
       spark: SparkSession, dir: String, cur: CurationDef,
-      index: Option[String] = None): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-curstreamsink-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try runStreamSinksAt(spark, dir, cur, index, work)
-    finally fs.delete(new Path(work), true)
-  }
+      index: Option[String] = None): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-curstreamsink-")(
+      runStreamSinksAt(spark, dir, cur, index, _))
 
   /** [[runStreamSinks]] against a caller-owned work dir (no cleanup) —
     * the spec drives this form so the landed layout can be audited. */
@@ -1309,7 +1274,6 @@ object CurationFlow {
         .groupBy(cur.reportBy)
         .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("tokens"))
         .orderBy(cur.reportBy)
-        .localCheckpoint() // materialize before the work dir is deleted
     }
   }
 

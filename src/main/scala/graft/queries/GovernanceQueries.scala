@@ -402,10 +402,7 @@ object GovernanceQueries extends graft.QueryFamily {
     import graft.io.Versioned
     import graft.meta.{ConsolidationDef, DedupDef}
     import graft.operators.Consolidator
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q103-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q103-") { work =>
       val table = s"$work/orders_mor"
       val orders = Tables.load(spark, dir, "orders")
       val cutoff = to_timestamp(lit("1998-01-01 00:00:00"))
@@ -425,8 +422,7 @@ object GovernanceQueries extends graft.QueryFamily {
           .select(lit(v).cast("int").as("version"),
             col("n_customers"), col("latest_total"), col("max_date"))
       summary(v1).unionAll(summary(v2)).orderBy("version")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   val q103_oracle: String =

@@ -181,18 +181,13 @@ object LanguageModel extends graft.QueryFamily {
     * reopened index schema. Oracle: q104 verbatim (a persisted model
     * must reproduce the in-session one bit-identically).
     */
-  def q302_lm_index_persist(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q302-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q302_lm_index_persist(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q302-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       countsOf(docs).write.parquet(s"$work/lm_index")
       scoreWithCounts(docs, mergedCounts(spark, s"$work/lm_index"))
         .orderBy("doc_id")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q302_oracle: String = q104_oracle
 
@@ -204,11 +199,8 @@ object LanguageModel extends graft.QueryFamily {
     * from-scratch build: q104's oracle verbatim. Counts are additive,
     * so append IS the correct merge — no read-modify-write.
     */
-  def q303_lm_index_update(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q303-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q303_lm_index_update(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q303-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       val isBatch =
         substring(md5(concat(lit("lm303|"), col("doc_id").cast("string"))), 1, 1)
@@ -218,9 +210,7 @@ object LanguageModel extends graft.QueryFamily {
         .write.mode("append").parquet(s"$work/lm_index")
       scoreWithCounts(docs, mergedCounts(spark, s"$work/lm_index"))
         .orderBy("doc_id")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q303_oracle: String = q104_oracle
 
@@ -231,19 +221,14 @@ object LanguageModel extends graft.QueryFamily {
     * log must equal a from-scratch rebuild on the retained corpus —
     * the oracle recomputes exactly that.
     */
-  def q304_lm_index_erasure(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q304-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q304_lm_index_erasure(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q304-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       buildErasedLog(docs, s"$work/lm_index")
       scoreWithCounts(docs.filter(!lmErased),
           mergedCounts(spark, s"$work/lm_index"))
         .orderBy("doc_id")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q304_oracle: String = lmOracleSql(s" WHERE NOT ($lmErasedSql)")
 
@@ -255,11 +240,8 @@ object LanguageModel extends graft.QueryFamily {
     * Round16bOpsSpec additionally pins compacted ≡ delta-form row
     * for row and that the erased eighth is genuinely gone.
     */
-  def q305_lm_index_compact(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q305-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q305_lm_index_compact(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q305-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       buildErasedLog(docs, s"$work/lm_index")
       mergedCounts(spark, s"$work/lm_index")
@@ -267,9 +249,7 @@ object LanguageModel extends graft.QueryFamily {
       scoreWithCounts(docs.filter(!lmErased),
           spark.read.parquet(s"$work/lm_index_compact"))
         .orderBy("doc_id")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q305_oracle: String = q304_oracle
 
@@ -291,11 +271,8 @@ object LanguageModel extends graft.QueryFamily {
     * double-counting (BatchLogSpec pins it).
     */
   def q309_stream_lm_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.Trigger
-    val work = graft.io.Scratch.dir(spark, "graft-q309-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q309-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       CurationFlow.stageTwoBatches(spark, work, docs, "doc_id",
         feed = Some(dir -> "documents"))
@@ -314,8 +291,7 @@ object LanguageModel extends graft.QueryFamily {
       }
       scoreWithCounts(docs, mergedLog(spark, s"$work/lm_index"))
         .orderBy("doc_id")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   val q309_oracle: String = q104_oracle
@@ -334,11 +310,8 @@ object LanguageModel extends graft.QueryFamily {
     * stored artifact.
     */
   def q318_stream_lm_erasure(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.Trigger
-    val work = graft.io.Scratch.dir(spark, "graft-q318-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q318-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       graft.io.BatchLog.base(countsOf(docs), s"$work/lm_index")
       // the erased eighth plays the request FEED, arriving in two
@@ -362,8 +335,7 @@ object LanguageModel extends graft.QueryFamily {
       scoreWithCounts(docs.filter(!lmErased),
           mergedLog(spark, s"$work/lm_index"))
         .orderBy("doc_id")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** q304's oracle verbatim — see [[q318_stream_lm_erasure]]. */
@@ -380,11 +352,8 @@ object LanguageModel extends graft.QueryFamily {
     * hash-matches the oracle recomputing the same ledger from the
     * raw corpus.
     */
-  def q319_lm_log_health(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q319-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q319_lm_log_health(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q319-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       buildErasedLog(docs, s"$work/lm_index")
       val log = spark.read.parquet(s"$work/lm_index")
@@ -399,9 +368,7 @@ object LanguageModel extends graft.QueryFamily {
       rows.crossJoin(net)
         .withColumn("dead_ppm",
           expr("(n_dead * 1000000) DIV (n_live + n_dead)"))
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q319_oracle: String = {
     val toks = T.tokensSql("lower(text)")
@@ -478,11 +445,8 @@ object LanguageModel extends graft.QueryFamily {
     * Scale shape: the decision is a 1-row aggregate; compaction is
     * q305's one vocab-bounded fold; nothing touches the corpus.
     */
-  def q322_lm_auto_compact(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q322-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q322_lm_auto_compact(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q322-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       buildErasedLog(docs, s"$work/log_erased")
       countsOf(docs).write.parquet(s"$work/log_clean")
@@ -509,9 +473,7 @@ object LanguageModel extends graft.QueryFamily {
         }
         .reduce(_ unionByName _)
         .orderBy("leg")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** The policy recomputed from the raw corpus: per leg, the ledger
     * q319 derives, the threshold decision, and the after-state the
@@ -583,25 +545,6 @@ object LanguageModel extends graft.QueryFamily {
     } else false
   }
 
-  /** Stage `parts` as single-file micro-batches in arrival order
-    * (file mtimes force the order, the q74-family staging shape). */
-  private def stageBatches(
-      spark: SparkSession, work: String, parts: Seq[DataFrame]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$work/incoming"))
-    val t0 = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (df, i) =>
-      df.coalesce(1).write.parquet(s"$work/stage_$i")
-      val part = fs.globStatus(new Path(s"$work/stage_$i/part-*.parquet"))
-        .head.getPath
-      val target = new Path(s"$work/incoming/b$i.parquet")
-      require(fs.rename(part, target), s"failed to stage batch $i")
-      fs.setTimes(target, t0 + i * 1000L, -1)
-      fs.delete(new Path(s"$work/stage_$i"), true)
-    }
-  }
-
   /** q325's flow against a caller-owned work dir, returning the final
     * retained-corpus scoring AND how many times the policy folded the
     * log mid-stream (the spec pins ≥ 1 — the composition claim is
@@ -616,11 +559,11 @@ object LanguageModel extends graft.QueryFamily {
       substring(md5(concat(lit("sb|"), col("doc_id").cast("string"))), 1, 1) < "8"
     val erasedHalf =
       substring(md5(concat(lit("sb2|"), col("doc_id").cast("string"))), 1, 1) < "8"
-    stageBatches(spark, work, Seq(
-      docs.filter(half).withColumn("feed", lit("ingest")),
-      docs.filter(!half).withColumn("feed", lit("ingest")),
-      docs.filter(lmErased && erasedHalf).withColumn("feed", lit("erase")),
-      docs.filter(lmErased && !erasedHalf).withColumn("feed", lit("erase"))))
+    graft.streaming.FileFeed.write(s"$work/incoming", Seq(
+      "b0" -> docs.filter(half).withColumn("feed", lit("ingest")),
+      "b1" -> docs.filter(!half).withColumn("feed", lit("ingest")),
+      "b2" -> docs.filter(lmErased && erasedHalf).withColumn("feed", lit("erase")),
+      "b3" -> docs.filter(lmErased && !erasedHalf).withColumn("feed", lit("erase"))))
     // incremented on the stream-execution thread, read on the caller
     // thread after awaitTermination — atomic for a sound happens-before
     val folds = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -665,13 +608,8 @@ object LanguageModel extends graft.QueryFamily {
     * policy's 1-row decision; a fold is one vocab-bounded rewrite —
     * amortized exactly as an LSM store amortizes it.
     */
-  def q325_stream_lm_maintain(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q325-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try q325Flow(spark, dir, work)._1.localCheckpoint()
-    finally fs.delete(new Path(work), true)
-  }
+  def q325_stream_lm_maintain(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q325-")(q325Flow(spark, dir, _)._1)
 
   /** Rebuild-on-retained, q304's oracle verbatim. */
   val q325_oracle: String = q304_oracle

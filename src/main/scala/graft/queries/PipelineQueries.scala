@@ -308,29 +308,18 @@ object PipelineQueries extends graft.QueryFamily {
     * sink's union+keepNewest merge is order-aware: any batch split of
     * the same rows converges to the same snapshot.
     */
-  def q71_stream_consolidate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q71-")
-    val watchDir = s"$work/incoming"
-    val snapshot = s"$work/snapshot"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q71_stream_consolidate(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q71-") { work =>
+      val watchDir = s"$work/incoming"
+      val snapshot = s"$work/snapshot"
       val orders = Tables.load(spark, dir, "orders")
       val cutoff = to_timestamp(lit("1998-01-01 00:00:00"))
       // stage q07's batches as single files the stream can pick up
-      // one-at-a-time (coalesce(1) is harness plumbing, not the operator)
-      fs.mkdirs(new Path(watchDir))
-      Seq(
+      // one-at-a-time (one file per batch is harness plumbing, not the
+      // operator)
+      graft.streaming.FileFeed.write(watchDir, Seq(
         "b0" -> orders.filter(col("o_orderdate") < cutoff),
-        "b1" -> orders.filter(col("o_orderdate") >= cutoff)
-      ).foreach { case (name, batch) =>
-        batch.coalesce(1).write.parquet(s"$work/$name")
-        val part = fs.globStatus(new Path(s"$work/$name/part-*.parquet")).head.getPath
-        // Hadoop rename reports failure as false, not by throwing — a
-        // silently missing batch would surface only as a wrong snapshot
-        require(fs.rename(part, new Path(s"$watchDir/$name.parquet")),
-          s"failed to stage $part into $watchDir")
-      }
+        "b1" -> orders.filter(col("o_orderdate") >= cutoff)))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(watchDir)
@@ -343,9 +332,7 @@ object PipelineQueries extends graft.QueryFamily {
           col("o_custkey"), col("o_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("latest_order_date"))
         .orderBy("o_custkey")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   // ---------- q97: schema evolution across batch generations ----------
 
@@ -366,11 +353,8 @@ object PipelineQueries extends graft.QueryFamily {
     * lake this is the difference between "re-write every historical
     * batch on schema change" and "just read it".
     */
-  def q97_schema_evolution(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q97-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q97_schema_evolution(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q97-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       // generation b0: written before the producer knew about `lang`
       docs.filter(col("doc_id") % 2 === 0)
@@ -388,9 +372,7 @@ object PipelineQueries extends graft.QueryFamily {
           count(lit(1)).as("n_docs"),
           sum(col("n_chars")).cast("long").as("total_chars"))
         .orderBy("batch", "source", "lang")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q97_oracle: String =
     """SELECT CASE WHEN doc_id % 2 = 0 THEN 'b0' ELSE 'b1' END AS batch,
@@ -561,11 +543,8 @@ object PipelineQueries extends graft.QueryFamily {
     * writes (the partitioned leg shuffles only into its partition
     * dirs), one labeled union on read-back.
     */
-  def q271_multi_sink(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q271-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q271_multi_sink(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q271-") { work =>
       val meta = Metadata.parse(
         s"""{
            |"dataflows": [{
@@ -596,9 +575,7 @@ object PipelineQueries extends graft.QueryFamily {
         .select(col("doc_id"), col("lang").cast("string").as("lang"),
           lit("ko").as("leg"))
       ok.unionByName(ko).orderBy("doc_id")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   def q271OracleSql: String =
     s"""SELECT doc_id, lang,

@@ -293,12 +293,9 @@ object RetrievalQueries extends graft.QueryFamily {
     * work never re-runs per query.
     */
   def q84_bm25_index_persist(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val work = graft.io.Scratch.dir(spark, "graft-q84-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q84-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       val terms = docs
         .select(col("doc_id"), T.tokens(col("text")).as("tk"))
@@ -340,8 +337,7 @@ object RetrievalQueries extends graft.QueryFamily {
         .filter(col("rnk") <= bm25TopK)
         .select("query_id", "doc_id", "score", "rnk")
         .orderBy("query_id", "rnk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** Identical to [[q83_oracle]] on purpose: the stored index must
@@ -902,12 +898,9 @@ object RetrievalQueries extends graft.QueryFamily {
     * batch", like q73/q94.
     */
   def q224_bm25_index_update(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val work = graft.io.Scratch.dir(spark, "graft-q224-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q224-") { work =>
       val isBatch =
         substring(md5(concat(lit("b73|"), col("doc_id").cast("string"))), 1, 1)
           .isin("0", "1")
@@ -975,8 +968,7 @@ object RetrievalQueries extends graft.QueryFamily {
         .filter(col("rnk") <= bm25TopK)
         .select("query_id", "doc_id", "score", "rnk")
         .orderBy("query_id", "rnk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** q83's oracle verbatim — see [[q224_bm25_index_update]]. */
@@ -998,13 +990,10 @@ object RetrievalQueries extends graft.QueryFamily {
     * against generated SQL (signature q317, LM q309, BM25 here).
     */
   def q316_stream_bm25_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val work = graft.io.Scratch.dir(spark, "graft-q316-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q316-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       CurationFlow.stageTwoBatches(spark, work, docs, "doc_id",
         feed = Some(dir -> "documents"))
@@ -1061,8 +1050,7 @@ object RetrievalQueries extends graft.QueryFamily {
         .filter(col("rnk") <= bm25TopK)
         .select("query_id", "doc_id", "score", "rnk")
         .orderBy("query_id", "rnk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** q83's oracle verbatim — see [[q316_stream_bm25_ingest]]. */
@@ -1092,12 +1080,9 @@ object RetrievalQueries extends graft.QueryFamily {
     * request, matching q229.
     */
   def q230_bm25_erasure(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val work = graft.io.Scratch.dir(spark, "graft-q230-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q230-") { work =>
       // build (q84's artifact over the full corpus)
       val docs = Tables.load(spark, dir, "documents")
       val terms = docs
@@ -1163,8 +1148,7 @@ object RetrievalQueries extends graft.QueryFamily {
         .filter(col("rnk") <= bm25TopK)
         .select("query_id", "doc_id", "score", "rnk")
         .orderBy("query_id", "rnk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** q83's scoring over the surviving documents — the rebuild-without
@@ -1203,12 +1187,9 @@ object RetrievalQueries extends graft.QueryFamily {
     * versions are vocab-sized / 1-row and carry over unchanged.
     */
   def q286_bm25_compact(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val work = graft.io.Scratch.dir(spark, "graft-q286-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q286-") { work =>
       // build (q84's artifact) + erase (q230's tombstones and deltas)
       val docs = Tables.load(spark, dir, "documents")
       val terms = docs
@@ -1274,8 +1255,7 @@ object RetrievalQueries extends graft.QueryFamily {
         .filter(col("rnk") <= bm25TopK)
         .select("query_id", "doc_id", "score", "rnk")
         .orderBy("query_id", "rnk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** Compaction ≡ masked read, by construction and by gate (q261's
@@ -1355,14 +1335,8 @@ object RetrievalQueries extends graft.QueryFamily {
       .orderBy("leg")
   }
 
-  def q324_bm25_auto_compact(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dir(spark, "graft-q324-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try q324Flow(spark, dir, work)
-      .localCheckpoint() // materialize before the work dir is deleted
-    finally fs.delete(new Path(work), true)
-  }
+  def q324_bm25_auto_compact(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q324-")(q324Flow(spark, dir, _))
 
   /** The policy recomputed from the raw corpus: posting rows are the
     * distinct (term, doc_id) pairs, tombstoned rows those of the

@@ -4,8 +4,7 @@ import java.sql.Timestamp
 
 import graft.Tables
 import graft.io.Artifacts
-import graft.streaming.EventsStreaming
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.streaming.{EventsStreaming, FileFeed}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,7 +41,6 @@ object StreamingParity extends graft.QueryFamily {
     */
   private def stagedSplits(spark: SparkSession, dir: String): String =
     Artifacts.dir(spark, "evsplit", dir) { work =>
-      val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val events = eventCols(spark, dir)
       val cutoffTs = lit(cutoff).cast("timestamp")
       val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
@@ -60,21 +58,14 @@ object StreamingParity extends graft.QueryFamily {
       // the advanced watermark would drop it as late instead of the
       // dedup state matching it
       val redelivered = b0.filter(col("ts") >= cutoffTs - expr("INTERVAL 1 HOUR"))
-      Seq(
+      FileFeed.write(work, Seq(
         "b0" -> b0,
         "b1" -> b1,
         "b1_redelivered" -> b1.unionAll(redelivered),
         "sent_tumbling" -> sentinel(4 * 3600 * 1000L,
           spark.range(1).select(lit(-1L).as("user_id"))),
         "sent_sessions" -> sentinel(3600 * 1000L,
-          events.select(col("user_id")).distinct()))
-        .foreach { case (name, df) =>
-          df.coalesce(1).write.parquet(s"$work/$name")
-          val part = fs.globStatus(new Path(s"$work/$name/part-*.parquet")).head.getPath
-          require(fs.rename(part, new Path(s"$work/$name.parquet")),
-            s"failed to finalize staged split $name")
-          fs.delete(new Path(s"$work/$name"), true)
-        }
+          events.select(col("user_id")).distinct())))
     }
 
   /** Stage prebuilt batch files into watchDir with strictly increasing
@@ -83,19 +74,10 @@ object StreamingParity extends graft.QueryFamily {
     * session's [[stagedSplits]]; no Spark job runs here.
     */
   private def stageBatches(
-      spark: SparkSession, dir: String,
-      fs: FileSystem, watchDir: String,
+      spark: SparkSession, dir: String, watchDir: String,
       batches: Seq[String]): Unit = {
     val splits = stagedSplits(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    fs.mkdirs(new Path(watchDir))
-    val t0 = System.currentTimeMillis()
-    batches.zipWithIndex.foreach { case (name, i) =>
-      val staged = new Path(s"$watchDir/b$i.parquet")
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, new Path(s"$splits/$name.parquet"), fs, staged, false, conf)
-      fs.setTimes(staged, t0 + i * 1000L, -1)
-    }
+    FileFeed.arrive(spark, batches.map(name => s"$splits/$name.parquet"), watchDir)
   }
 
   private def eventCols(spark: SparkSession, dir: String): DataFrame =
@@ -113,12 +95,10 @@ object StreamingParity extends graft.QueryFamily {
     * the strict-mode check — Complete mode would bypass watermark
     * semantics entirely.
     */
-  def q74_stream_tumbling(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q74-")
-    val watchDir = s"$work/incoming"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      stageBatches(spark, dir, fs, watchDir,
+  def q74_stream_tumbling(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q74-") { work =>
+      val watchDir = s"$work/incoming"
+      stageBatches(spark, dir, watchDir,
         Seq("b0", "b1", "sent_tumbling"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -140,9 +120,7 @@ object StreamingParity extends graft.QueryFamily {
           date_format(col("hour_start"), "yyyy-MM-dd HH:mm").as("hour_start"),
           col("event_type"), col("n_events"), col("total_value"))
         .orderBy("hour_start", "event_type")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q74_oracle: String = Analytics.q17_oracle
 
@@ -158,12 +136,10 @@ object StreamingParity extends graft.QueryFamily {
     * batch sums decimal(18,2) — boundary and count parity is the
     * sessionization semantics; summing is q17/q18's job.
     */
-  def q75_stream_sessionize(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q75-")
-    val watchDir = s"$work/incoming"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      stageBatches(spark, dir, fs, watchDir,
+  def q75_stream_sessionize(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q75-") { work =>
+      val watchDir = s"$work/incoming"
+      stageBatches(spark, dir, watchDir,
         Seq("b0", "b1", "sent_sessions"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -191,9 +167,7 @@ object StreamingParity extends graft.QueryFamily {
           date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
           date_format(col("session_end"), "yyyy-MM-dd HH:mm:ss").as("session_end"))
         .orderBy("user_id", "session_id")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** q18's session derivation with the value column dropped (see
     * [[q75_stream_sessionize]] for why).
@@ -238,12 +212,10 @@ object StreamingParity extends graft.QueryFamily {
     * streaming-dedup posture that survives — an unbounded
     * dropDuplicates grows state forever.
     */
-  def q88_stream_dedup(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q88-")
-    val watchDir = s"$work/incoming"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      stageBatches(spark, dir, fs, watchDir,
+  def q88_stream_dedup(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q88-") { work =>
+      val watchDir = s"$work/incoming"
+      stageBatches(spark, dir, watchDir,
         Seq("b0", "b1_redelivered"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -266,9 +238,7 @@ object StreamingParity extends graft.QueryFamily {
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
           col("user_id"), col("event_type"), col("value"))
         .orderBy("event_id")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** Every source event exactly once — redeliveries invisible. */
   val q88_oracle: String =
@@ -299,12 +269,10 @@ object StreamingParity extends graft.QueryFamily {
     * oracle is the plain batch interval join over the whole events
     * table — streaming and batch must agree row for row.
     */
-  def q102_stream_join(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q102-")
-    val watchDir = s"$work/incoming"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      stageBatches(spark, dir, fs, watchDir, Seq("b0", "b1"))
+  def q102_stream_join(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q102-") { work =>
+      val watchDir = s"$work/incoming"
+      stageBatches(spark, dir, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       CurationFlow.withStreamShufflePartitions(spark) {
         val stream = spark.readStream.schema(schema)
@@ -336,9 +304,7 @@ object StreamingParity extends graft.QueryFamily {
           date_format(col("view_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("view_ts"),
           date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("click_ts"))
         .orderBy("click_id", "view_id")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** The batch attribution join — streaming must reproduce it exactly. */
   val q102_oracle: String =
@@ -368,12 +334,10 @@ object StreamingParity extends graft.QueryFamily {
     * merge never overwrites a dir it is reading, the same
     * crash-safe-publish discipline as io/Versioned.
     */
-  def q161_stream_decay(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q161-")
-    val watchDir = s"$work/incoming"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      stageBatches(spark, dir, fs, watchDir, Seq("b0", "b1"))
+  def q161_stream_decay(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q161-") { work =>
+      val watchDir = s"$work/incoming"
+      stageBatches(spark, dir, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -403,9 +367,7 @@ object StreamingParity extends graft.QueryFamily {
       }
       spark.read.parquet(latest.get())
         .orderBy("user_id")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** Shared constant on purpose: the incremental stream must be
     * indistinguishable from q135's one-shot batch aggregate. */
@@ -423,12 +385,10 @@ object StreamingParity extends graft.QueryFamily {
     * Oracle = q141's verbatim: the monitor must be indistinguishable
     * from the one-shot scan.
     */
-  def q179_stream_drift(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q179-")
-    val watchDir = s"$work/incoming"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      stageBatches(spark, dir, fs, watchDir, Seq("b0", "b1"))
+  def q179_stream_drift(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q179-") { work =>
+      val watchDir = s"$work/incoming"
+      stageBatches(spark, dir, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -456,9 +416,7 @@ object StreamingParity extends graft.QueryFamily {
         query.awaitTermination()
       }
       DistributionQueries.ksFromCounts(spark.read.parquet(latest.get()))
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** Shared constant on purpose: incremental ≡ one-shot scan. */
   val q179_oracle: String = DistributionQueries.oracles("q141_ks_drift")
@@ -477,12 +435,10 @@ object StreamingParity extends graft.QueryFamily {
     * final state with user_id tie-break. The oracle is the one-shot
     * batch top-K verbatim: replay ≡ rescan.
     */
-  def q250_stream_topk(spark: SparkSession, dir: String): DataFrame = {
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q250-")
-    val watchDir = s"$work/incoming"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      stageBatches(spark, dir, fs, watchDir, Seq("b0", "b1"))
+  def q250_stream_topk(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q250-") { work =>
+      val watchDir = s"$work/incoming"
+      stageBatches(spark, dir, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -512,9 +468,7 @@ object StreamingParity extends graft.QueryFamily {
       spark.read.parquet(latest.get())
         .orderBy(col("n_events").desc, col("user_id"))
         .limit(topkK)
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q250_oracle: String =
     s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
@@ -547,28 +501,13 @@ object StreamingParity extends graft.QueryFamily {
     * each refresh shuffles |state| + |batch| on the key — q250's
     * exact-state regime with deletes riding the same merge.
     */
-  def q260_stream_cdc(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q260-")
-    val watchDir = s"$work/incoming"
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q260_stream_cdc(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q260-") { work =>
+      val watchDir = s"$work/incoming"
       val orders = Tables.load(spark, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           col("o_orderdate"), col("o_totalprice"))
       val cut = to_timestamp(lit(cdcSplitTs))
-      fs.mkdirs(new Path(watchDir))
-      // stage each batch as ONE plain file (the file source lists
-      // files, not directories) with strictly increasing mtimes —
-      // stagedSplits' recipe
-      def stage(name: String, df: DataFrame, mtime: Long): Unit = {
-        df.coalesce(1).write.parquet(s"$work/$name")
-        val part = fs.globStatus(new Path(s"$work/$name/part-*.parquet")).head.getPath
-        val target = new Path(s"$watchDir/$name.parquet")
-        require(fs.rename(part, target), s"failed to stage $name")
-        fs.delete(new Path(s"$work/$name"), true)
-        fs.setTimes(target, mtime, -1)
-      }
       val tombstones = Tables.load(spark, dir, "orders")
         .groupBy("o_custkey")
         .agg(max(col("o_orderdate")).as("last_ts"))
@@ -577,11 +516,9 @@ object StreamingParity extends graft.QueryFamily {
           lit(null).cast("long").as("o_orderkey"),
           to_timestamp(lit(cdcTombTs)).as("o_orderdate"),
           lit(null).cast("double").as("o_totalprice"))
-      val t0 = System.currentTimeMillis()
-      stage("b0", orders.filter(col("o_orderdate") < cut), t0)
-      stage("b1",
-        orders.filter(col("o_orderdate") >= cut).unionByName(tombstones),
-        t0 + 1000L)
+      FileFeed.write(watchDir, Seq(
+        "b0" -> orders.filter(col("o_orderdate") < cut),
+        "b1" -> orders.filter(col("o_orderdate") >= cut).unionByName(tombstones)))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
       CurationFlow.withStreamShufflePartitions(spark) {
@@ -595,7 +532,7 @@ object StreamingParity extends graft.QueryFamily {
                 spark.read.parquet(prev).unionByName(batch)
               case None => batch
             }
-            val state = Dedup.keepNewest(merged, key = col("o_custkey"),
+            val state = graft.operators.Dedup.keepNewest(merged, key = col("o_custkey"),
               orderBy = col("o_orderdate"), tieBreaker = col("o_orderkey"))
             val out = s"$work/state_b$id"
             state.write.mode("overwrite").parquet(out)
@@ -612,9 +549,7 @@ object StreamingParity extends graft.QueryFamily {
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("latest_order_date"),
           col("o_totalprice"))
         .orderBy("o_custkey")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   val q260_oracle: String =
     s"""WITH dormant AS (

@@ -841,11 +841,8 @@ object TextQueries extends graft.QueryFamily {
     * bucket by doc_id so downstream joins skip the shuffle; the
     * lifecycle (write → reopen → query) is the part under test here.
     */
-  def q76_sig_index_persist(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q76-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q76_sig_index_persist(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q76-") { work =>
       sigTable(spark, dir)
         .withColumn("skd", array_distinct(H.shingleKeys(col("sh"))))
         .drop("sh")
@@ -854,9 +851,7 @@ object TextQueries extends graft.QueryFamily {
       // the exact read path lshPairs runs against the session index
       pairsFromIndex(spark.read.parquet(s"$work/sig_index"))
         .orderBy("a_id", "b_id")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** q25's oracle verbatim: q76 builds a FRESH index in its own temp
     * dir and must reproduce the q25 pairs bit-identically — same
@@ -883,11 +878,8 @@ object TextQueries extends graft.QueryFamily {
     * the appended partition are non-empty (an empty side would make
     * the equality trivial).
     */
-  def q94_sig_index_update(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q94-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q94_sig_index_update(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q94-") { work =>
       val isBatch =
         substring(md5(concat(lit("b73|"), col("doc_id").cast("string"))), 1, 1)
           .isin("0", "1")
@@ -900,9 +892,7 @@ object TextQueries extends graft.QueryFamily {
       sigs(isBatch).write.mode("append").parquet(s"$work/sig_index") // ingest
       pairsFromIndex(spark.read.parquet(s"$work/sig_index"))
         .orderBy("a_id", "b_id")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** q317: q94's ingest leg as a STREAM — each arriving micro-batch's
     * signatures land as appended parquet files (foreachBatch; a
@@ -915,11 +905,8 @@ object TextQueries extends graft.QueryFamily {
     * end-to-end against generated SQL.
     */
   def q317_stream_sig_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.Trigger
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q317-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q317-") { work =>
       val d = docs(spark, dir)
       CurationFlow.stageTwoBatches(spark, work, d, "doc_id",
         feed = Some(dir -> "documents"))
@@ -945,8 +932,7 @@ object TextQueries extends graft.QueryFamily {
       }
       pairsFromIndex(graft.io.BatchLog.read(spark, s"$work/sig_index"))
         .orderBy("a_id", "b_id")
-        .localCheckpoint()
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** q25's oracle — see [[q317_stream_sig_ingest]]. */
@@ -1737,11 +1723,8 @@ object TextQueries extends graft.QueryFamily {
     * full pass — exactly what a compaction costs by definition);
     * every read after it drops the per-query anti-join.
     */
-  def q261_index_compact(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q261-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q261_index_compact(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q261-") { work =>
       val erased =
         substring(md5(concat(lit("del|"), col("doc_id").cast("string"))), 1, 1)
           .isin("0", "1")
@@ -1751,9 +1734,7 @@ object TextQueries extends graft.QueryFamily {
         .write.parquet(s"$work/compacted")
       pairsFromIndex(spark.read.parquet(s"$work/compacted"))
         .orderBy("a_id", "b_id")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** Compaction ≡ masked read, by construction and by gate. */
   val q261_oracle: String = q229_oracle

@@ -526,11 +526,8 @@ object VectorQueries extends graft.QueryFamily {
     * VERSION bump (a new index generation), not an in-place retrain.
     */
   def q227_ivf_index_update(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q227-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q227-") { work =>
       val e = emb(spark, dir)
       val isBatch =
         substring(md5(concat(lit("b73|"), col("vec_id").cast("string"))), 1, 1)
@@ -571,8 +568,7 @@ object VectorQueries extends graft.QueryFamily {
         .filter(col("rk") <= 3)
         .select("q_id", "rk", "n_id", "cos")
         .orderBy("q_id", "rk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** q320: IVF ingest as a STREAM — q227's frozen-quantizer append
@@ -592,12 +588,9 @@ object VectorQueries extends graft.QueryFamily {
     * the search is q42's bounded probe unchanged.
     */
   def q320_stream_ivf_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q320-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q320-") { work =>
       val e = emb(spark, dir)
       val existing = e.filter(!pqIsBatch(col("vec_id")))
       // build: quantizer trained on the EXISTING corpus only, frozen
@@ -656,8 +649,7 @@ object VectorQueries extends graft.QueryFamily {
         .filter(col("rk") <= 3)
         .select("q_id", "rk", "n_id", "cos")
         .orderBy("q_id", "rk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** Erasure-set selector shared by [[q252_ivf_erasure]] and its
@@ -681,11 +673,8 @@ object VectorQueries extends graft.QueryFamily {
     * request-sized on the right; probe/search is q42's bounded
     * candidate plan unchanged.
     */
-  def q252_ivf_erasure(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q252-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q252_ivf_erasure(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q252-") { work =>
       val e = emb(spark, dir)
       val model = ivfModel(spark, dir, k = 16)
       // the persisted index: full corpus, frozen quantizer
@@ -713,9 +702,7 @@ object VectorQueries extends graft.QueryFamily {
         .filter(col("rk") <= 3)
         .select("q_id", "rk", "n_id", "cos")
         .orderBy("q_id", "rk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** COMPACTION for the vector index — q261's closing step applied to
     * IVF, finishing what q252 leaves open: the tombstone anti-join is
@@ -733,11 +720,8 @@ object VectorQueries extends graft.QueryFamily {
     * rewrite — cell ids are STORED, so the rewrite never re-runs the
     * quantizer; the probe is q42's bounded candidate plan unchanged.
     */
-  def q287_ivf_compact(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q287-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q287_ivf_compact(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q287-") { work =>
       val e = emb(spark, dir)
       val model = ivfModel(spark, dir, k = 16)
       // the persisted index (q252's), then the erasure lands
@@ -768,9 +752,7 @@ object VectorQueries extends graft.QueryFamily {
         .filter(col("rk") <= 3)
         .select("q_id", "rk", "n_id", "cos")
         .orderBy("q_id", "rk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** The rebuild-without-erased reference for the equivalence spec:
     * the SAME frozen quantizer over the corpus minus the erasure set,
@@ -798,11 +780,8 @@ object VectorQueries extends graft.QueryFamily {
   }
 
   def q96_ivf_index_persist(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q96-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q96-") { work =>
       val e = emb(spark, dir)
       val model = ivfModel(spark, dir, k = 16)
       model.centroids.zipWithIndex.map { case (c, j) => (j, c) }
@@ -832,8 +811,7 @@ object VectorQueries extends graft.QueryFamily {
         .filter(col("rk") <= 3)
         .select("q_id", "rk", "n_id", "cos")
         .orderBy("q_id", "rk")
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   // ---------- q79: int8-quantized similarity scoring ----------
@@ -1176,11 +1154,8 @@ object VectorQueries extends graft.QueryFamily {
     * (training is deterministic — Round15OpsSpec pins it). Rows-only
     * at the driver (k-means floats, q42's family).
     */
-  def q293_pq_index_persist(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q293-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q293_pq_index_persist(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q293-") { work =>
       persistPq(spark, dir, work)
       val (model, ivf) = reopenPq(spark, work)
       val codes = spark.read.parquet(s"$work/codes")
@@ -1188,9 +1163,7 @@ object VectorQueries extends graft.QueryFamily {
       pqRerank(spark, dir,
         pqAdcCandidatesFrom(spark, dir, model, ivf, codes, lit(true)),
         lit(true))
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** PQ index ERASURE — q252's tombstone discipline on the code
     * table: the request lands as a tombstone table, reads mask the
@@ -1201,11 +1174,8 @@ object VectorQueries extends graft.QueryFamily {
     * Round15OpsSpec pins that equivalence. The `er13|` eighth plays
     * the request, matching q252.
     */
-  def q294_pq_erasure(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q294-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q294_pq_erasure(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q294-") { work =>
       persistPq(spark, dir, work)
       emb(spark, dir).filter(ivfErased(col("vec_id")))
         .select(col("vec_id").as("t_id"))
@@ -1218,9 +1188,7 @@ object VectorQueries extends graft.QueryFamily {
       val alive = !ivfErased(col("vec_id"))
       pqRerank(spark, dir,
         pqAdcCandidatesFrom(spark, dir, model, ivf, masked, alive), alive)
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** PQ index COMPACTION — q287's closing step for the code table:
     * rewrite the codes WITHOUT the tombstoned rows (stored cell ids
@@ -1230,11 +1198,8 @@ object VectorQueries extends graft.QueryFamily {
     * This completes the build/append-or-persist/erase/compact matrix
     * for ALL FOUR index families.
     */
-  def q295_pq_compact(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q295-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+  def q295_pq_compact(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q295-") { work =>
       persistPq(spark, dir, work)
       emb(spark, dir).filter(ivfErased(col("vec_id")))
         .select(col("vec_id").as("t_id"))
@@ -1249,9 +1214,7 @@ object VectorQueries extends graft.QueryFamily {
       val alive = !ivfErased(col("vec_id"))
       pqRerank(spark, dir,
         pqAdcCandidatesFrom(spark, dir, model, ivf, compacted, alive), alive)
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
-  }
+    }
 
   /** Rebuild-without-erased reference for q294's equivalence spec:
     * codes re-encoded from the surviving vectors with the SAME frozen
@@ -1330,14 +1293,8 @@ object VectorQueries extends graft.QueryFamily {
     * under sustained ingest triggers a new index GENERATION (version
     * bump), never an in-place retrain — q227's operational rule.
     */
-  def q296_pq_index_update(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q296-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try pqUpdateFlow(spark, dir, work)
-      .localCheckpoint() // materialize before the work dir is deleted
-    finally fs.delete(new Path(work), true)
-  }
+  def q296_pq_index_update(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q296-")(pqUpdateFlow(spark, dir, _))
 
   /** q321: PQ ingest as a STREAM — the last of the five index
     * families to stream (LM q309, BM25 q316, signatures q317, IVF
@@ -1355,12 +1312,9 @@ object VectorQueries extends graft.QueryFamily {
     * file append; search is q112's bucket-bounded ADC plan unchanged.
     */
   def q321_stream_pq_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q321-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    graft.io.Scratch.scoped(spark, "graft-q321-") { work =>
       val e = emb(spark, dir)
       val existing = e.filter(!pqIsBatch(col("vec_id")))
       // build: BOTH model halves train on the EXISTING corpus, frozen
@@ -1406,8 +1360,7 @@ object VectorQueries extends graft.QueryFamily {
       pqRerank(spark, dir,
         pqAdcCandidatesFrom(spark, dir, stored, storedIvf, codes, lit(true)),
         lit(true))
-        .localCheckpoint() // materialize before the work dir is deleted
-    } finally fs.delete(new Path(work), true)
+    }
   }
 
   /** Single-shot rebuild reference for q296's equivalence spec: the
@@ -2102,13 +2055,8 @@ object VectorQueries extends graft.QueryFamily {
     * independent of corpus size, the property the funnel's
     * per-funnel q87 re-cluster lacks.
     */
-  def q333_incremental_semdedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val work = graft.io.Scratch.dirAutoCleaned(spark, "graft-q333-")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try semDedupIncrementalAt(spark, dir, work).localCheckpoint()
-    finally fs.delete(new Path(work), true)
-  }
+  def q333_incremental_semdedup(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Scratch.scoped(spark, "graft-q333-")(semDedupIncrementalAt(spark, dir, _))
 
   /** The rebuild-on-union reference for q333's equivalence spec: the
     * SAME frozen existing-trained quantizer assigns existing AND batch

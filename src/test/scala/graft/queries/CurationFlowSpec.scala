@@ -3,7 +3,7 @@ package graft.queries
 import graft.SparkSpec
 import graft.meta.{Metadata, MetadataError}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sum}
 
 /** The declared-curation contract: q276's JSON-configured funnel must
   * reproduce q86's hand-composed one exactly (same constants → same
@@ -629,6 +629,173 @@ class CurationFlowSpec extends SparkSpec {
       assert(tf < 1500L + maxToks(r.getString(0)),
         s"${r.getString(0)}: tokens_final $tf exceeds budget 1500 by more " +
           s"than one document (max doc ${maxToks(r.getString(0))} tokens)")
+    }
+  }
+
+  test("q323: the mixed-dedup funnel equals an independently hand-composed stage stack") {
+    import org.apache.spark.sql.functions._
+    val dir = sf("sf0.01")
+    val docs = graft.Tables.load(spark, dir, "documents")
+    val base = docs.withColumn("n_toks",
+      size(graft.functions.TextFunctions.tokens(col("text"))).cast("long"))
+    val exactKeep = docs.groupBy(md5(col("text")).as("h"))
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"), lit(1).as("k1"))
+    val nearDrop = graft.operators.ConnectedComponents.run(
+      TextQueries.lshPairs(spark, dir).select("a_id", "b_id"), "a_id", "b_id")
+      .filter(col("id") =!= col("component"))
+      .select(col("id").as("doc_id"), lit(1).as("d2"))
+    val semDrop = VectorQueries.q87_semdedup(spark, dir)
+      .select(col("dup_id").as("doc_id"), lit(1).as("d3"))
+    val staged = base
+      .join(exactKeep, Seq("doc_id"), "left")
+      .join(nearDrop, Seq("doc_id"), "left")
+      .join(semDrop, Seq("doc_id"), "left")
+      .withColumn("s1", col("k1").isNotNull)
+      .withColumn("s2", col("s1") && col("d2").isNull)
+      .withColumn("s3", col("s2") && col("d3").isNull)
+      .withColumn("s4", col("s3") && !(col("n_toks") < 10))
+    val expected = staged.groupBy("source").agg(
+      count(lit(1)).as("n_raw"),
+      count(when(col("s1"), 1)).as("n_exact"),
+      count(when(col("s2"), 1)).as("n_neardup"),
+      count(when(col("s3"), 1)).as("n_semdup"),
+      count(when(col("s4"), 1)).as("n_quality"),
+      sum(when(col("s4"), col("n_toks")).otherwise(0L)).as("tokens_final"))
+    val got = CurationFlow.q323_declared_semantic(spark, dir)
+    assert(sameRows(got, expected),
+      "declared mixed-dedup funnel diverged from the hand-composed stack")
+    val sums = got.agg(
+      sum(col("n_neardup")).cast("long"), sum(col("n_semdup")).cast("long"))
+      .head()
+    assert(sums.getLong(1) < sums.getLong(0),
+      "no document was dropped by dedup_semantic — the stage is inert")
+  }
+
+  test("dedup_semantic missing-policy: keep passes unembedded rows, drop removes exactly them; oracleSql refuses the render") {
+    import org.apache.spark.sql.functions._
+    val dir = sf("sf0.1") // 5000 docs, 2000 embeddings: 3000 unembedded
+    def cfg(missing: String) = graft.meta.Metadata.parseCuration(
+      s"""{"curation": {"table": "documents", "id_column": "doc_id",
+         |  "text_column": "text", "report_by": "source", "stages": [
+         |  {"type": "dedup_semantic", "name": "sem", "missing": "$missing"}]}}"""
+        .stripMargin)
+    def survivors(missing: String): Long =
+      CurationFlow.run(spark, dir, cfg(missing))
+        .agg(sum(col("n_sem")).cast("long")).head().getLong(0)
+    val docs = graft.Tables.load(spark, dir, "documents").select("doc_id")
+    val emb = graft.Tables.load(spark, dir, "embeddings")
+      .select(col("vec_id").as("doc_id"))
+    val unembedded = docs.join(emb, Seq("doc_id"), "left_anti").count()
+    assert(unembedded > 0, "degenerate fixture: every document embedded")
+    assert(survivors("keep") - survivors("drop") === unembedded,
+      "keep-vs-drop delta is not exactly the unembedded document count")
+    val ex = intercept[graft.meta.MetadataError](
+      CurationFlow.oracleSql(cfg("keep")))
+    assert(ex.getMessage.contains("dedup_semantic"),
+      "oracleSql rendered a config it cannot express")
+  }
+
+  test("q327: the mask pre-pass genuinely rewrites what every downstream stage reads") {
+    import graft.meta.{Metadata, MaskStageDef}
+    val dir = sf("sf0.01")
+    val cur = Metadata.parseCuration(CurationFlow.maskedCurationJson)
+    val masked = CurationFlow.run(spark, dir, cur)
+    // same funnel with the scrub removed: content hashes, quality
+    // metrics, shingles and budget weights all shift — if the two
+    // reports agree, the stage is decorative
+    val unmasked = CurationFlow.run(spark, dir,
+      cur.copy(stages = cur.stages.filterNot(_.isInstanceOf[MaskStageDef])))
+    assert(masked.drop("n_scrub_entities", "n_scrub_pairs")
+      .exceptAll(unmasked).count() > 0,
+      "masking changed nothing downstream")
+    // the second mask stage matches the FIRST stage's output
+    // ("<CUST> line") — dropping it must change the report, proving
+    // rewrites compose in declared order
+    val firstOnly = CurationFlow.run(spark, dir,
+      cur.copy(stages = cur.stages.filterNot {
+        case m: MaskStageDef => m.name == "scrub_pairs"
+        case _               => false
+      }))
+    assert(masked.drop("n_scrub_pairs")
+      .exceptAll(firstOnly).count() > 0,
+      "the composed second mask stage was a no-op")
+  }
+
+  test("q329: the span scrub pre-pass removes duplicated spans the downstream gates then read") {
+    import graft.meta.{Metadata, SpanScrubStageDef}
+    val dir = sf("sf0.01")
+    val cur = Metadata.parseCuration(CurationFlow.scrubCurationJson)
+    val scrubbed = CurationFlow.run(spark, dir, cur)
+    val unscrubbed = CurationFlow.run(spark, dir,
+      cur.copy(stages = cur.stages.filterNot(_.isInstanceOf[SpanScrubStageDef])))
+    // tokens_final must SHRINK somewhere: the corpus carries
+    // cross-document duplicated spans, and scrubbing them reduces the
+    // surviving token mass (equality would mean the stage never fired)
+    val tf = scrubbed.agg(sum(col("tokens_final"))).head().getLong(0)
+    val tfRaw = unscrubbed.agg(sum(col("tokens_final"))).head().getLong(0)
+    assert(tf < tfRaw,
+      s"span scrub removed no tokens ($tf vs $tfRaw) — decorative stage")
+  }
+
+  test("q330: containment drops the contained side and keeps the min-id representative") {
+    import graft.meta.{Metadata, ContainmentStageDef}
+    val dir = sf("sf0.01")
+    val cur = Metadata.parseCuration(CurationFlow.containmentCurationJson)
+    val rep = CurationFlow.run(spark, dir, cur).collect()
+    val repOff = CurationFlow.run(spark, dir,
+      cur.copy(stages = cur.stages.filterNot(_.isInstanceOf[ContainmentStageDef])))
+      .collect()
+    def m(rows: Array[org.apache.spark.sql.Row], col: String): Map[String, Long] =
+      rows.map(r => r.getString(0) -> r.getLong(r.fieldIndex(col))).toMap
+    val withStage = m(rep, "n_contained")
+    val exactOnly = m(rep, "n_exact")
+    // the stage genuinely drops documents beyond exact dedup...
+    assert(withStage.values.sum < exactOnly.values.sum,
+      "containment dropped nothing beyond dedup_exact")
+    // ...and removing it changes the downstream budget stage
+    assert(m(rep, "n_budget") != m(repOff, "n_budget"),
+      "the budget stage did not see containment's survivors")
+  }
+
+  test("mask grammar: misdeclared configs die at parse time") {
+    import graft.meta.{Metadata, MetadataError}
+    def cfg(stages: String): String =
+      s"""{"curation": {"table": "documents", "id_column": "doc_id",
+         |"text_column": "text", "report_by": "source",
+         |"stages": [$stages]}}""".stripMargin
+    // mask after a membership stage: the pre-pass contract is violated
+    intercept[MetadataError](Metadata.parseCuration(cfg(
+      """{"type": "dedup_exact", "name": "exact"},
+        |{"type": "mask", "name": "late", "rules": [
+        |  {"pattern": "x", "replacement": "y"}]}""".stripMargin)))
+    // group references would mean different things in Spark and DuckDB
+    intercept[MetadataError](Metadata.parseCuration(cfg(
+      """{"type": "mask", "name": "refs", "rules": [
+        |  {"pattern": "(a)b", "replacement": "$1"}]}""".stripMargin)))
+    // a quote could escape the generated SQL literal
+    intercept[MetadataError](Metadata.parseCuration(cfg(
+      """{"type": "mask", "name": "quote", "rules": [
+        |  {"pattern": "a'b", "replacement": "x"}]}""".stripMargin)))
+    // an unparseable regex must not reach the executor
+    intercept[MetadataError](Metadata.parseCuration(cfg(
+      """{"type": "mask", "name": "bad", "rules": [
+        |  {"pattern": "(a", "replacement": "x"}]}""".stripMargin)))
+    // span_scrub is a pre-pass too: same ordering contract as mask
+    intercept[MetadataError](Metadata.parseCuration(cfg(
+      """{"type": "dedup_exact", "name": "exact"},
+        |{"type": "span_scrub", "name": "late", "span_len": 8}""".stripMargin)))
+    // out-of-range knobs die at parse time
+    intercept[MetadataError](Metadata.parseCuration(cfg(
+      """{"type": "span_scrub", "name": "tiny", "span_len": 1}""")))
+    intercept[MetadataError](Metadata.parseCuration(cfg(
+      """{"type": "containment", "name": "zero", "min_pct": 0}""")))
+    // a streamed config with a corpus-scan pre-pass fails fast
+    intercept[MetadataError] {
+      val cur = Metadata.parseCuration(cfg(
+        """{"type": "span_scrub", "name": "scrub", "span_len": 8}"""))
+      CurationFlow.runStream(cur,
+        graft.Tables.load(spark, sf("sf0.001"), "documents"))
     }
   }
 }

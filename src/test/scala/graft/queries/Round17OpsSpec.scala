@@ -47,70 +47,6 @@ class Round17OpsSpec extends SparkSpec {
       er.getLong(er.fieldIndex("n_rows_before")))
   }
 
-  test("q323: the mixed-dedup funnel equals an independently hand-composed stage stack") {
-    import org.apache.spark.sql.functions._
-    val dir = sf("sf0.01")
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val base = docs.withColumn("n_toks",
-      size(graft.functions.TextFunctions.tokens(col("text"))).cast("long"))
-    val exactKeep = docs.groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"), lit(1).as("k1"))
-    val nearDrop = graft.operators.ConnectedComponents.run(
-      TextQueries.lshPairs(spark, dir).select("a_id", "b_id"), "a_id", "b_id")
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as("doc_id"), lit(1).as("d2"))
-    val semDrop = VectorQueries.q87_semdedup(spark, dir)
-      .select(col("dup_id").as("doc_id"), lit(1).as("d3"))
-    val staged = base
-      .join(exactKeep, Seq("doc_id"), "left")
-      .join(nearDrop, Seq("doc_id"), "left")
-      .join(semDrop, Seq("doc_id"), "left")
-      .withColumn("s1", col("k1").isNotNull)
-      .withColumn("s2", col("s1") && col("d2").isNull)
-      .withColumn("s3", col("s2") && col("d3").isNull)
-      .withColumn("s4", col("s3") && !(col("n_toks") < 10))
-    val expected = staged.groupBy("source").agg(
-      count(lit(1)).as("n_raw"),
-      count(when(col("s1"), 1)).as("n_exact"),
-      count(when(col("s2"), 1)).as("n_neardup"),
-      count(when(col("s3"), 1)).as("n_semdup"),
-      count(when(col("s4"), 1)).as("n_quality"),
-      sum(when(col("s4"), col("n_toks")).otherwise(0L)).as("tokens_final"))
-    val got = CurationFlow.q323_declared_semantic(spark, dir)
-    assert(sameRows(got, expected),
-      "declared mixed-dedup funnel diverged from the hand-composed stack")
-    val sums = got.agg(
-      sum(col("n_neardup")).cast("long"), sum(col("n_semdup")).cast("long"))
-      .head()
-    assert(sums.getLong(1) < sums.getLong(0),
-      "no document was dropped by dedup_semantic — the stage is inert")
-  }
-
-  test("dedup_semantic missing-policy: keep passes unembedded rows, drop removes exactly them; oracleSql refuses the render") {
-    import org.apache.spark.sql.functions._
-    val dir = sf("sf0.1") // 5000 docs, 2000 embeddings: 3000 unembedded
-    def cfg(missing: String) = graft.meta.Metadata.parseCuration(
-      s"""{"curation": {"table": "documents", "id_column": "doc_id",
-         |  "text_column": "text", "report_by": "source", "stages": [
-         |  {"type": "dedup_semantic", "name": "sem", "missing": "$missing"}]}}"""
-        .stripMargin)
-    def survivors(missing: String): Long =
-      CurationFlow.run(spark, dir, cfg(missing))
-        .agg(sum(col("n_sem")).cast("long")).head().getLong(0)
-    val docs = graft.Tables.load(spark, dir, "documents").select("doc_id")
-    val emb = graft.Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id").as("doc_id"))
-    val unembedded = docs.join(emb, Seq("doc_id"), "left_anti").count()
-    assert(unembedded > 0, "degenerate fixture: every document embedded")
-    assert(survivors("keep") - survivors("drop") === unembedded,
-      "keep-vs-drop delta is not exactly the unembedded document count")
-    val ex = intercept[graft.meta.MetadataError](
-      CurationFlow.oracleSql(cfg("keep")))
-    assert(ex.getMessage.contains("dedup_semantic"),
-      "oracleSql rendered a config it cannot express")
-  }
-
   test("q324: the BM25 policy folds under the accumulated feed, leaves the clean index, and the folded bytes hold no erased doc") {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions._

@@ -69,109 +69,6 @@ class Round18OpsSpec extends SparkSpec {
     assert(batch.count() > 0, "empty manifest proves nothing")
   }
 
-  test("q327: the mask pre-pass genuinely rewrites what every downstream stage reads") {
-    import graft.meta.{Metadata, MaskStageDef}
-    val dir = sf("sf0.01")
-    val cur = Metadata.parseCuration(CurationFlow.maskedCurationJson)
-    val masked = CurationFlow.run(spark, dir, cur)
-    // same funnel with the scrub removed: content hashes, quality
-    // metrics, shingles and budget weights all shift — if the two
-    // reports agree, the stage is decorative
-    val unmasked = CurationFlow.run(spark, dir,
-      cur.copy(stages = cur.stages.filterNot(_.isInstanceOf[MaskStageDef])))
-    assert(masked.drop("n_scrub_entities", "n_scrub_pairs")
-      .exceptAll(unmasked).count() > 0,
-      "masking changed nothing downstream")
-    // the second mask stage matches the FIRST stage's output
-    // ("<CUST> line") — dropping it must change the report, proving
-    // rewrites compose in declared order
-    val firstOnly = CurationFlow.run(spark, dir,
-      cur.copy(stages = cur.stages.filterNot {
-        case m: MaskStageDef => m.name == "scrub_pairs"
-        case _               => false
-      }))
-    assert(masked.drop("n_scrub_pairs")
-      .exceptAll(firstOnly).count() > 0,
-      "the composed second mask stage was a no-op")
-  }
-
-  test("q329: the span scrub pre-pass removes duplicated spans the downstream gates then read") {
-    import graft.meta.{Metadata, SpanScrubStageDef}
-    val dir = sf("sf0.01")
-    val cur = Metadata.parseCuration(CurationFlow.scrubCurationJson)
-    val scrubbed = CurationFlow.run(spark, dir, cur)
-    val unscrubbed = CurationFlow.run(spark, dir,
-      cur.copy(stages = cur.stages.filterNot(_.isInstanceOf[SpanScrubStageDef])))
-    // tokens_final must SHRINK somewhere: the corpus carries
-    // cross-document duplicated spans, and scrubbing them reduces the
-    // surviving token mass (equality would mean the stage never fired)
-    val tf = scrubbed.agg(sum(col("tokens_final"))).head().getLong(0)
-    val tfRaw = unscrubbed.agg(sum(col("tokens_final"))).head().getLong(0)
-    assert(tf < tfRaw,
-      s"span scrub removed no tokens ($tf vs $tfRaw) — decorative stage")
-  }
-
-  test("q330: containment drops the contained side and keeps the min-id representative") {
-    import graft.meta.{Metadata, ContainmentStageDef}
-    val dir = sf("sf0.01")
-    val cur = Metadata.parseCuration(CurationFlow.containmentCurationJson)
-    val rep = CurationFlow.run(spark, dir, cur).collect()
-    val repOff = CurationFlow.run(spark, dir,
-      cur.copy(stages = cur.stages.filterNot(_.isInstanceOf[ContainmentStageDef])))
-      .collect()
-    def m(rows: Array[org.apache.spark.sql.Row], col: String): Map[String, Long] =
-      rows.map(r => r.getString(0) -> r.getLong(r.fieldIndex(col))).toMap
-    val withStage = m(rep, "n_contained")
-    val exactOnly = m(rep, "n_exact")
-    // the stage genuinely drops documents beyond exact dedup...
-    assert(withStage.values.sum < exactOnly.values.sum,
-      "containment dropped nothing beyond dedup_exact")
-    // ...and removing it changes the downstream budget stage
-    assert(m(rep, "n_budget") != m(repOff, "n_budget"),
-      "the budget stage did not see containment's survivors")
-  }
-
-  test("mask grammar: misdeclared configs die at parse time") {
-    import graft.meta.{Metadata, MetadataError}
-    def cfg(stages: String): String =
-      s"""{"curation": {"table": "documents", "id_column": "doc_id",
-         |"text_column": "text", "report_by": "source",
-         |"stages": [$stages]}}""".stripMargin
-    // mask after a membership stage: the pre-pass contract is violated
-    intercept[MetadataError](Metadata.parseCuration(cfg(
-      """{"type": "dedup_exact", "name": "exact"},
-        |{"type": "mask", "name": "late", "rules": [
-        |  {"pattern": "x", "replacement": "y"}]}""".stripMargin)))
-    // group references would mean different things in Spark and DuckDB
-    intercept[MetadataError](Metadata.parseCuration(cfg(
-      """{"type": "mask", "name": "refs", "rules": [
-        |  {"pattern": "(a)b", "replacement": "$1"}]}""".stripMargin)))
-    // a quote could escape the generated SQL literal
-    intercept[MetadataError](Metadata.parseCuration(cfg(
-      """{"type": "mask", "name": "quote", "rules": [
-        |  {"pattern": "a'b", "replacement": "x"}]}""".stripMargin)))
-    // an unparseable regex must not reach the executor
-    intercept[MetadataError](Metadata.parseCuration(cfg(
-      """{"type": "mask", "name": "bad", "rules": [
-        |  {"pattern": "(a", "replacement": "x"}]}""".stripMargin)))
-    // span_scrub is a pre-pass too: same ordering contract as mask
-    intercept[MetadataError](Metadata.parseCuration(cfg(
-      """{"type": "dedup_exact", "name": "exact"},
-        |{"type": "span_scrub", "name": "late", "span_len": 8}""".stripMargin)))
-    // out-of-range knobs die at parse time
-    intercept[MetadataError](Metadata.parseCuration(cfg(
-      """{"type": "span_scrub", "name": "tiny", "span_len": 1}""")))
-    intercept[MetadataError](Metadata.parseCuration(cfg(
-      """{"type": "containment", "name": "zero", "min_pct": 0}""")))
-    // a streamed config with a corpus-scan pre-pass fails fast
-    intercept[MetadataError] {
-      val cur = Metadata.parseCuration(cfg(
-        """{"type": "span_scrub", "name": "scrub", "span_len": 8}"""))
-      CurationFlow.runStream(cur,
-        graft.Tables.load(spark, sf("sf0.001"), "documents"))
-    }
-  }
-
   test("q333: stored-index incremental semantic dedup equals rebuild-on-union, row for row") {
     val dir = sf("sf0.001")
     val inc = VectorQueries.q333_incremental_semdedup(spark, dir)

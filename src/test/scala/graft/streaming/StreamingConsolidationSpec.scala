@@ -83,4 +83,36 @@ class StreamingConsolidationSpec extends SparkSpec {
       .select("user_id").collect().map(_.getLong(0)).toSet
     assert(users == Set(1L, 2L)) // user 1 survived the crash window
   }
+
+  test("a pre-created empty snapshot dir consolidates like no dir at all") {
+    val s = spark
+    import s.implicits._
+    implicit val sql = spark.sqlContext
+    def consolidate(preCreate: Boolean): Set[(Long, Long, Double)] = {
+      val dir = java.nio.file.Files.createTempDirectory("consolempty").toString
+      val snapshot = s"$dir/snapshot"
+      if (preCreate) assert(new java.io.File(snapshot).mkdirs())
+      val stream = MemoryStream[EventsStreaming.Event]
+      def runAvailable(): Unit = {
+        val q = StreamingConsolidation.sink(
+          stream.toDF(), snapshot,
+          keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      stream.addData(
+        ev(1, "2024-01-01 10:00:00", 1, 10.0),
+        ev(2, "2024-01-01 11:00:00", 1, 20.0),
+        ev(3, "2024-01-01 10:30:00", 2, 30.0))
+      runAvailable()
+      stream.addData(
+        ev(4, "2024-01-01 09:00:00", 1, 99.0),
+        ev(5, "2024-01-01 12:00:00", 2, 50.0))
+      runAvailable()
+      spark.read.parquet(snapshot).select("user_id", "event_id", "value")
+        .as[(Long, Long, Double)].collect().toSet
+    }
+    val fromNothing = consolidate(preCreate = false)
+    assert(fromNothing == Set((1L, 2L, 20.0), (2L, 5L, 50.0)))
+    assert(consolidate(preCreate = true) == fromNothing)
+  }
 }
