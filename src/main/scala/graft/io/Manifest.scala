@@ -1,6 +1,9 @@
 package graft.io
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
+
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -65,14 +68,21 @@ object Manifest {
   private def fs(spark: SparkSession, path: Path): FileSystem =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The manifest at `path`, `None` if there is none. A file that does
+    * not parse (empty, or cut short by a crash mid-write) raises an
+    * error naming the path: treating it as absent would reprocess every
+    * batch. */
   def load(spark: SparkSession, path: String): Option[Manifest] = {
     val p = new Path(path)
     val filesystem = fs(spark, p)
     if (!filesystem.exists(p)) None
     else {
       val in = filesystem.open(p)
-      try Some(fromJson(new String(in.readAllBytes(), StandardCharsets.UTF_8)))
-      finally in.close()
+      val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+      try Some(fromJson(json))
+      catch { case NonFatal(e) =>
+        throw new IOException(s"manifest $path cannot be parsed: ${e.getMessage}", e)
+      }
     }
   }
 

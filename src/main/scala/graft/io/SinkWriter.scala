@@ -1,8 +1,9 @@
 package graft.io
 
+import graft.Concurrently
 import graft.meta.{MetadataError, SinkDef}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Metadata-driven sink writing (reference pipeline/sink.py:write_df),
@@ -23,12 +24,11 @@ object SinkWriter {
     * file per batch), so writing the sinks one after the other leaves
     * the other cores idle.
     *
-    * Each sink writes on its own thread, created by the calling thread
-    * for this call only, so it inherits the caller's Spark local
-    * properties (job group, scheduler pool, a stream's batch ids). The
-    * call returns or raises only after every write has ended. On
-    * failure it raises the first failing sink's error in declared
-    * order, with the other sinks' errors attached as suppressed.
+    * Each sink writes on its own thread ([[graft.Concurrently]]), which
+    * inherits the caller's Spark local properties. The call returns or
+    * raises only after every write has ended. On failure it raises the
+    * first failing sink's error in declared order, with the other
+    * sinks' errors attached as suppressed.
     *
     * Two sinks whose resolved paths are equal or nested are refused
     * before anything is written: concurrent Hadoop commits into one
@@ -36,35 +36,9 @@ object SinkWriter {
     */
   def writeAll(sinks: Seq[(DataFrame, SinkDef)], subs: SourceReader.Substitutions): Seq[String] = {
     requireDisjoint(sinks, subs)
-    val outcomes = new Array[Either[Throwable, String]](sinks.size)
-    val threads = sinks.zipWithIndex.map { case ((df, sink), i) =>
-      new Thread(() => outcomes(i) =
-        try Right(write(df, sink, subs)) catch { case t: Throwable => Left(t) },
-        s"graft-sink-${sink.name}")
-    }
-    threads.foreach(_.start())
-    joinAll(threads)
-    val failures = outcomes.toSeq.collect { case Left(t) => t }
-    failures.headOption.foreach { first =>
-      failures.tail.foreach(first.addSuppressed)
-      throw first
-    }
-    outcomes.toSeq.collect { case Right(path) => path }
-  }
-
-  /** Joins every thread even if the caller is interrupted meanwhile: the
-    * interrupt is passed on to the writers and raised once all ended. */
-  private def joinAll(threads: Seq[Thread]): Unit = {
-    var interrupted = false
-    threads.foreach { t =>
-      while (t.isAlive)
-        try t.join()
-        catch { case _: InterruptedException =>
-          interrupted = true
-          threads.foreach(_.interrupt())
-        }
-    }
-    if (interrupted) throw new InterruptedException("interrupted while writing sinks")
+    Concurrently.results(Concurrently.attempt(sinks.map { case (df, sink) =>
+      s"graft-sink-${sink.name}" -> (() => write(df, sink, subs))
+    }))
   }
 
   private def requireDisjoint(
@@ -72,17 +46,27 @@ object SinkWriter {
     val resolved = sinks.map { case (df, sink) =>
       val raw = subs(sink.path)
       require(raw.nonEmpty, "sink path must be a non-empty string")
-      val p = new Path(raw)
-      val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      sink -> fs.makeQualified(p).toString.stripSuffix("/")
+      sink -> qualified(df.sparkSession, raw)
     }
     resolved.combinations(2).foreach { case Seq((a, pa), (b, pb)) =>
-      if (pa == pb || pa.startsWith(pb + "/") || pb.startsWith(pa + "/"))
+      if (overlaps(pa, pb))
         throw new MetadataError(s"sinks '${a.name}' ($pa) and '${b.name}' ($pb) " +
           "write to the same or nested paths; sinks of one batch write concurrently " +
           "and must not share a directory")
     }
   }
+
+  /** `path` qualified by its filesystem, without a trailing slash: the
+    * form [[overlaps]] compares. */
+  private[graft] def qualified(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+      .stripSuffix("/")
+  }
+
+  /** Whether two [[qualified]] paths are equal or one lies under the other. */
+  private[graft] def overlaps(a: String, b: String): Boolean =
+    a == b || a.startsWith(b + "/") || b.startsWith(a + "/")
 
   def write(df: DataFrame, sink: SinkDef, subs: SourceReader.Substitutions): String = {
     val path = subs(sink.path)

@@ -324,7 +324,7 @@ object PipelineQueries extends graft.QueryFamily {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(watchDir)
       val query = graft.streaming.StreamingConsolidation
-        .sink(stream, snapshot, "o_custkey", "o_orderdate", "o_orderkey")
+        .sink(stream, snapshot, s"$work/checkpoint", "o_custkey", "o_orderdate", "o_orderkey")
         .start()
       query.awaitTermination() // AvailableNow: returns once both files are consumed
       spark.read.parquet(snapshot)

@@ -28,16 +28,20 @@ import org.apache.spark.sql.Row
 object StreamingConsolidation {
 
   /** Attach the consolidation sink to a streaming DataFrame. Caller
-    * starts/stops the returned writer.
+    * starts/stops the returned writer. The stream's progress lives in
+    * `checkpointLocation`: a query started again on it reads only what
+    * arrived since, and replays a micro-batch that did not commit.
     */
   def sink(
       stream: DataFrame,
       snapshotPath: String,
+      checkpointLocation: String,
       keyCol: String,
       orderByCol: String,
       tieBreakerCol: String): DataStreamWriter[Row] =
     stream.writeStream
       .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         upsertBatch(batch, snapshotPath, keyCol, orderByCol, tieBreakerCol)
       }

@@ -11,77 +11,81 @@ class StreamingConsolidationSpec extends SparkSpec {
     EventsStreaming.Event(id, Timestamp.valueOf(t), user, "click", v)
 
   test("micro-batches consolidate to keep-newest per key across the whole stream") {
-    val s = spark
-    import s.implicits._
-    implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("consol").toString
-    val snapshot = s"$dir/snapshot"
+    withTempDir("consol") { tmp =>
+      val s = spark
+      import s.implicits._
+      implicit val sql = spark.sqlContext
+      val dir = tmp.toString
+      val snapshot = s"$dir/snapshot"
 
-    val stream = MemoryStream[EventsStreaming.Event]
-    def runAvailable(): Unit = {
-      val q = StreamingConsolidation.sink(
-        stream.toDF(), snapshot,
-        keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
-      try q.processAllAvailable() finally q.stop()
+      val stream = MemoryStream[EventsStreaming.Event]
+      def runAvailable(): Unit = {
+        val q = StreamingConsolidation.sink(
+          stream.toDF(), snapshot, s"$dir/checkpoint",
+          keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+
+      // batch 1: users 1 and 2
+      stream.addData(
+        ev(1, "2024-01-01 10:00:00", 1, 10.0),
+        ev(2, "2024-01-01 11:00:00", 1, 20.0), // newer for user 1
+        ev(3, "2024-01-01 10:30:00", 2, 30.0))
+      runAvailable()
+
+      // batch 2: newer row for user 2, OLDER row for user 1 (must lose),
+      // and a new user 3
+      stream.addData(
+        ev(4, "2024-01-01 09:00:00", 1, 99.0), // older than event 2
+        ev(5, "2024-01-01 12:00:00", 2, 50.0),
+        ev(6, "2024-01-01 10:00:00", 3, 60.0))
+      runAvailable()
+
+      val out = spark.read.parquet(snapshot)
+        .select("user_id", "event_id", "value")
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      assert(out == Map(
+        1L -> (2L, 20.0), // batch-2 older row lost
+        2L -> (5L, 50.0), // batch-2 newer row won
+        3L -> (6L, 60.0)))
     }
-
-    // batch 1: users 1 and 2
-    stream.addData(
-      ev(1, "2024-01-01 10:00:00", 1, 10.0),
-      ev(2, "2024-01-01 11:00:00", 1, 20.0), // newer for user 1
-      ev(3, "2024-01-01 10:30:00", 2, 30.0))
-    runAvailable()
-
-    // batch 2: newer row for user 2, OLDER row for user 1 (must lose),
-    // and a new user 3
-    stream.addData(
-      ev(4, "2024-01-01 09:00:00", 1, 99.0), // older than event 2
-      ev(5, "2024-01-01 12:00:00", 2, 50.0),
-      ev(6, "2024-01-01 10:00:00", 3, 60.0))
-    runAvailable()
-
-    val out = spark.read.parquet(snapshot)
-      .select("user_id", "event_id", "value")
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(out == Map(
-      1L -> (2L, 20.0), // batch-2 older row lost
-      2L -> (5L, 50.0), // batch-2 newer row won
-      3L -> (6L, 60.0)))
   }
 
   test("a crash between move-aside and promote does not lose the snapshot") {
-    val s = spark
-    import s.implicits._
-    implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("consolcrash").toString
-    val snapshot = s"$dir/snapshot"
+    withTempDir("consolcrash") { tmp =>
+      val s = spark
+      import s.implicits._
+      implicit val sql = spark.sqlContext
+      val dir = tmp.toString
+      val snapshot = s"$dir/snapshot"
 
-    val stream = MemoryStream[EventsStreaming.Event]
-    def runAvailable(): Unit = {
-      val q = StreamingConsolidation.sink(
-        stream.toDF(), snapshot,
-        keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
-      try q.processAllAvailable() finally q.stop()
+      val stream = MemoryStream[EventsStreaming.Event]
+      def runAvailable(): Unit = {
+        val q = StreamingConsolidation.sink(
+          stream.toDF(), snapshot, s"$dir/checkpoint",
+          keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+
+      stream.addData(ev(1, "2024-01-01 10:00:00", 1, 10.0))
+      runAvailable()
+
+      // simulate the crash window: the previous snapshot was moved aside
+      // but the promote never happened
+      val fs = new org.apache.hadoop.fs.Path(snapshot)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.rename(
+        new org.apache.hadoop.fs.Path(snapshot),
+        new org.apache.hadoop.fs.Path(snapshot + "_old")))
+
+      // the replayed/next micro-batch must first recover user 1's state
+      stream.addData(ev(2, "2024-01-01 11:00:00", 2, 20.0))
+      runAvailable()
+
+      val users = spark.read.parquet(snapshot)
+        .select("user_id").collect().map(_.getLong(0)).toSet
+      assert(users == Set(1L, 2L)) // user 1 survived the crash window
     }
-
-    stream.addData(ev(1, "2024-01-01 10:00:00", 1, 10.0))
-    runAvailable()
-
-    // simulate the crash window: the previous snapshot was moved aside
-    // but the promote never happened
-    val fs = new org.apache.hadoop.fs.Path(snapshot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(snapshot),
-      new org.apache.hadoop.fs.Path(snapshot + "_old")))
-
-    // the replayed/next micro-batch must first recover user 1's state
-    stream.addData(ev(2, "2024-01-01 11:00:00", 2, 20.0))
-    runAvailable()
-
-    val users = spark.read.parquet(snapshot)
-      .select("user_id").collect().map(_.getLong(0)).toSet
-    assert(users == Set(1L, 2L)) // user 1 survived the crash window
   }
 
   test("a pre-created empty snapshot dir consolidates like no dir at all") {
@@ -89,30 +93,65 @@ class StreamingConsolidationSpec extends SparkSpec {
     import s.implicits._
     implicit val sql = spark.sqlContext
     def consolidate(preCreate: Boolean): Set[(Long, Long, Double)] = {
-      val dir = java.nio.file.Files.createTempDirectory("consolempty").toString
-      val snapshot = s"$dir/snapshot"
-      if (preCreate) assert(new java.io.File(snapshot).mkdirs())
-      val stream = MemoryStream[EventsStreaming.Event]
-      def runAvailable(): Unit = {
-        val q = StreamingConsolidation.sink(
-          stream.toDF(), snapshot,
-          keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
-        try q.processAllAvailable() finally q.stop()
+      withTempDir("consolempty") { tmp =>
+        val dir = tmp.toString
+        val snapshot = s"$dir/snapshot"
+        if (preCreate) assert(new java.io.File(snapshot).mkdirs())
+        val stream = MemoryStream[EventsStreaming.Event]
+        def runAvailable(): Unit = {
+          val q = StreamingConsolidation.sink(
+            stream.toDF(), snapshot, s"$dir/checkpoint",
+            keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
+          try q.processAllAvailable() finally q.stop()
+        }
+        stream.addData(
+          ev(1, "2024-01-01 10:00:00", 1, 10.0),
+          ev(2, "2024-01-01 11:00:00", 1, 20.0),
+          ev(3, "2024-01-01 10:30:00", 2, 30.0))
+        runAvailable()
+        stream.addData(
+          ev(4, "2024-01-01 09:00:00", 1, 99.0),
+          ev(5, "2024-01-01 12:00:00", 2, 50.0))
+        runAvailable()
+        spark.read.parquet(snapshot).select("user_id", "event_id", "value")
+          .as[(Long, Long, Double)].collect().toSet
       }
-      stream.addData(
-        ev(1, "2024-01-01 10:00:00", 1, 10.0),
-        ev(2, "2024-01-01 11:00:00", 1, 20.0),
-        ev(3, "2024-01-01 10:30:00", 2, 30.0))
-      runAvailable()
-      stream.addData(
-        ev(4, "2024-01-01 09:00:00", 1, 99.0),
-        ev(5, "2024-01-01 12:00:00", 2, 50.0))
-      runAvailable()
-      spark.read.parquet(snapshot).select("user_id", "event_id", "value")
-        .as[(Long, Long, Double)].collect().toSet
     }
     val fromNothing = consolidate(preCreate = false)
     assert(fromNothing == Set((1L, 2L, 20.0), (2L, 5L, 50.0)))
     assert(consolidate(preCreate = true) == fromNothing)
+  }
+
+  test("a stream restarted on its checkpoint reads only the files that arrived since") {
+    val s = spark
+    import s.implicits._
+    val file1 = Seq(
+      ev(1, "2024-01-01 10:00:00", 1, 10.0),
+      ev(2, "2024-01-01 11:00:00", 1, 20.0),
+      ev(3, "2024-01-01 10:30:00", 2, 30.0)).toDF()
+    val file2 = Seq(
+      ev(4, "2024-01-01 09:00:00", 1, 99.0),
+      ev(5, "2024-01-01 12:00:00", 2, 50.0)).toDF()
+    /** One AvailableNow run over `dir/incoming`; the rows it read. */
+    def runAvailable(dir: java.nio.file.Path): Long = {
+      val q = StreamingConsolidation.sink(
+        spark.readStream.schema(file1.schema).parquet(s"$dir/incoming"),
+        s"$dir/snapshot", s"$dir/checkpoint",
+        keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
+      try { q.awaitTermination(); q.recentProgress.map(_.numInputRows).sum }
+      finally q.stop()
+    }
+    def snapshot(dir: java.nio.file.Path) = spark.read.parquet(s"$dir/snapshot").collect().toSet
+    withTempDir("consolrestart") { restarted =>
+      FileFeed.write(s"$restarted/incoming", Seq("b0" -> file1))
+      assert(runAvailable(restarted) === 3L)
+      FileFeed.write(s"$restarted/incoming", Seq("b1" -> file2))
+      assert(runAvailable(restarted) === 2L)
+      withTempDir("consolonce") { once =>
+        FileFeed.write(s"$once/incoming", Seq("b0" -> file1, "b1" -> file2))
+        assert(runAvailable(once) === 5L)
+        assert(snapshot(restarted) === snapshot(once))
+      }
+    }
   }
 }
