@@ -162,30 +162,20 @@ object Multimodal extends graft.QueryFamily {
     * consumes the manifest log as it grows, and the manifest stays
     * a bounded per-batch delta — no global recompute per arrival.
     */
-  def q335_stream_media_manifest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def q335_stream_media_manifest(spark: SparkSession, dir: String): DataFrame =
     graft.io.Scratch.scoped(spark, "graft-q335-") { work =>
       val d = Tables.load(spark, dir, "documents")
       graft.queries.CurationFlow.stageTwoBatches(spark, work, d, "doc_id",
         feed = Some(dir -> "documents"))
-      val stream = spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      graft.queries.CurationFlow.withStreamShufflePartitions(spark) {
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.io.BatchLog.append(
-              frameManifestOf(batch), s"$work/manifest", batchId)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+      graft.streaming.FileFeed.drain(spark, s"$work/incoming", d.schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          graft.io.BatchLog.append(
+            frameManifestOf(batch), s"$work/manifest", batchId)
+          ()
+        })
       graft.io.BatchLog.read(spark, s"$work/manifest")
         .orderBy("doc_id", "frame_idx")
     }
-  }
 
   val q89_oracle: String =
     s"""SELECT doc_id, n_frames, frame_idx,

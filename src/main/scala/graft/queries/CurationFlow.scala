@@ -1135,47 +1135,22 @@ object CurationFlow {
       index: Option[String],
       report: (CurationDef, DataFrame, Option[String]) => DataFrame =
         runStream(_, _, _)): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.OutputMode
     graft.io.Scratch.scoped(spark, "graft-curstream-") { work =>
       val docs = Tables.load(spark, dir, cur.table)
       stageTwoBatches(spark, work, docs, cur.idColumn,
         feed = Some(dir -> cur.table))
-      withStreamShufflePartitions(spark) {
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-        val query = report(cur, stream, index)
+      FileFeed.drain(spark, s"$work/incoming", docs.schema, s"$work/ckpt")(
+        report(cur, _, index)
           .writeStream
-          .trigger(Trigger.AvailableNow())
           .outputMode(OutputMode.Complete())
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("overwrite").parquet(s"$work/out")
             ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+          })
       spark.read.parquet(s"$work/out")
         .orderBy(cur.reportBy)
     }
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to
-    * `spark.graft.stream.shufflePartitions` (default 8), restoring the
-    * old value after — the q74 rule, shared by every streaming leg:
-    * AQE cannot coalesce inside a streaming query, so a micro-batch
-    * aggregation otherwise runs (and a stateful operator COMMITS, and
-    * a foreachBatch delta append WRITES) one unit per session shuffle
-    * partition — 32-way task/fsync/file fan-out for KB-sized deltas.
-    * Pinned via conf so a cluster declares its own state parallelism.
-    */
-  private[graft] def withStreamShufflePartitions[T](
-      spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key,
-      spark.conf.getOption("spark.graft.stream.shufflePartitions").getOrElse("8"))
-    try body finally spark.conf.set(key, old)
   }
 
   /** Stage the corpus as two content-hash-split micro-batch files
@@ -1240,7 +1215,6 @@ object CurationFlow {
   private[queries] def runStreamSinksAt(
       spark: SparkSession, dir: String, cur: CurationDef,
       index: Option[String], work: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     require(cur.sinks.nonEmpty, "runStreamSinks needs a sink-bearing config")
     cur.sinks.foreach { s =>
       if (s.saveMode != "append")
@@ -1257,18 +1231,13 @@ object CurationFlow {
       val docs = Tables.load(spark, dir, cur.table)
       stageTwoBatches(spark, work, docs, cur.idColumn,
         feed = Some(dir -> cur.table))
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      val query = survivors(cur, interpret(cur, stream, index, streaming = true))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.io.SinkWriter.writeAll(cur.sinks.map(batch -> _), subs)
-          ()
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      query.awaitTermination()
+      FileFeed.drain(spark, s"$work/incoming", docs.schema, s"$work/ckpt")(
+        stream => survivors(cur, interpret(cur, stream, index, streaming = true))
+          .writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            graft.io.SinkWriter.writeAll(cur.sinks.map(batch -> _), subs)
+            ()
+          })
       val sink = cur.sinks.head
       spark.read.format(sink.format).load(subs(sink.path))
         .groupBy(cur.reportBy)

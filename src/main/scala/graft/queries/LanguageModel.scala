@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{TextFunctions => T}
+import graft.streaming.FileFeed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -270,29 +271,19 @@ object LanguageModel extends graft.QueryFamily {
     * — a re-delivered micro-batch rewrites identical bytes instead of
     * double-counting (BatchLogSpec pins it).
     */
-  def q309_stream_lm_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def q309_stream_lm_ingest(spark: SparkSession, dir: String): DataFrame =
     graft.io.Scratch.scoped(spark, "graft-q309-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       CurationFlow.stageTwoBatches(spark, work, docs, "doc_id",
         feed = Some(dir -> "documents"))
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.io.BatchLog.append(countsOf(batch), s"$work/lm_index", batchId)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+      FileFeed.drain(spark, s"$work/incoming", docs.schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          graft.io.BatchLog.append(countsOf(batch), s"$work/lm_index", batchId)
+          ()
+        })
       scoreWithCounts(docs, mergedLog(spark, s"$work/lm_index"))
         .orderBy("doc_id")
     }
-  }
 
   val q309_oracle: String = q104_oracle
 
@@ -309,34 +300,24 @@ object LanguageModel extends graft.QueryFamily {
     * story: both INGEST and ERASURE run as streams against the same
     * stored artifact.
     */
-  def q318_stream_lm_erasure(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def q318_stream_lm_erasure(spark: SparkSession, dir: String): DataFrame =
     graft.io.Scratch.scoped(spark, "graft-q318-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       graft.io.BatchLog.base(countsOf(docs), s"$work/lm_index")
       // the erased eighth plays the request FEED, arriving in two
       // micro-batches (the same split harness the ingest legs drive)
       CurationFlow.stageTwoBatches(spark, work, docs.filter(lmErased), "doc_id")
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.io.BatchLog.append(
-              countsOf(batch).withColumn("c_bigram", -col("c_bigram")),
-              s"$work/lm_index", batchId)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+      FileFeed.drain(spark, s"$work/incoming", docs.schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          graft.io.BatchLog.append(
+            countsOf(batch).withColumn("c_bigram", -col("c_bigram")),
+            s"$work/lm_index", batchId)
+          ()
+        })
       scoreWithCounts(docs.filter(!lmErased),
           mergedLog(spark, s"$work/lm_index"))
         .orderBy("doc_id")
     }
-  }
 
   /** q304's oracle verbatim — see [[q318_stream_lm_erasure]]. */
   val q318_oracle: String = q304_oracle
@@ -552,41 +533,32 @@ object LanguageModel extends graft.QueryFamily {
     */
   private[queries] def q325Flow(
       spark: SparkSession, dir: String, work: String): (DataFrame, Int) = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
     val half =
       substring(md5(concat(lit("sb|"), col("doc_id").cast("string"))), 1, 1) < "8"
     val erasedHalf =
       substring(md5(concat(lit("sb2|"), col("doc_id").cast("string"))), 1, 1) < "8"
-    graft.streaming.FileFeed.write(s"$work/incoming", Seq(
+    FileFeed.write(s"$work/incoming", Seq(
       "b0" -> docs.filter(half).withColumn("feed", lit("ingest")),
       "b1" -> docs.filter(!half).withColumn("feed", lit("ingest")),
       "b2" -> docs.filter(lmErased && erasedHalf).withColumn("feed", lit("erase")),
       "b3" -> docs.filter(lmErased && !erasedHalf).withColumn("feed", lit("erase"))))
     // incremented on the stream-execution thread, read on the caller
-    // thread after awaitTermination — atomic for a sound happens-before
+    // thread after drain returns — atomic for a sound happens-before
     val folds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stream = spark.readStream
-      .schema(docs.withColumn("feed", lit("")).schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-    CurationFlow.withStreamShufflePartitions(spark) {
-      val query = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val ing = countsOf(batch.filter(col("feed") === "ingest"))
-          val era = countsOf(batch.filter(col("feed") === "erase"))
-            .withColumn("c_bigram", -col("c_bigram"))
-          graft.io.BatchLog.append(
-            ing.unionByName(era), s"$work/lm_index", batchId)
-          if (maintainLogFold(spark, s"$work/lm_index",
-            autoCompactThresholdPpm)) folds.incrementAndGet()
-          ()
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      query.awaitTermination()
-    }
+    FileFeed.drain(spark, s"$work/incoming",
+        docs.withColumn("feed", lit("")).schema, s"$work/ckpt")(
+      _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val ing = countsOf(batch.filter(col("feed") === "ingest"))
+        val era = countsOf(batch.filter(col("feed") === "erase"))
+          .withColumn("c_bigram", -col("c_bigram"))
+        graft.io.BatchLog.append(
+          ing.unionByName(era), s"$work/lm_index", batchId)
+        if (maintainLogFold(spark, s"$work/lm_index",
+          autoCompactThresholdPpm)) folds.incrementAndGet()
+        ()
+      })
     (scoreWithCounts(docs.filter(!lmErased),
       mergedLog(spark, s"$work/lm_index")).orderBy("doc_id"), folds.get())
   }

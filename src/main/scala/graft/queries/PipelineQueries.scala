@@ -321,12 +321,10 @@ object PipelineQueries extends graft.QueryFamily {
         "b0" -> orders.filter(col("o_orderdate") < cutoff),
         "b1" -> orders.filter(col("o_orderdate") >= cutoff)))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(watchDir)
-      val query = graft.streaming.StreamingConsolidation
-        .sink(stream, snapshot, s"$work/checkpoint", "o_custkey", "o_orderdate", "o_orderkey")
-        .start()
-      query.awaitTermination() // AvailableNow: returns once both files are consumed
+      import graft.streaming.StreamingConsolidation.{fold, keepNewest}
+      graft.streaming.FileFeed.drain(spark, watchDir, schema, s"$work/checkpoint")(
+        _.writeStream.foreachBatch(
+          fold(snapshot)(keepNewest("o_custkey", "o_orderdate", "o_orderkey"))))
       spark.read.parquet(snapshot)
         .select(
           col("o_custkey"), col("o_orderkey"),

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{HashFunctions => H, TextFunctions => T}
 import graft.operators.Fixpoint
+import graft.streaming.FileFeed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -991,41 +992,32 @@ object RetrievalQueries extends graft.QueryFamily {
     */
   def q316_stream_bm25_ingest(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     graft.io.Scratch.scoped(spark, "graft-q316-") { work =>
       val docs = Tables.load(spark, dir, "documents")
       CurationFlow.stageTwoBatches(spark, work, docs, "doc_id",
         feed = Some(dir -> "documents"))
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val t = batch
-              .select(col("doc_id"), T.tokens(col("text")).as("tk"))
-              .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-                explode(col("tk")).as("term"))
-              .localCheckpoint()
-            // batchId-keyed idempotent appends: foreachBatch is
-            // at-least-once, and a replayed blind append would inflate
-            // df/tf AND the (n, l) stats — BatchLog makes both deltas
-            // overwrite-on-replay
-            graft.io.BatchLog.append(
-              t.groupBy("term", "doc_id")
-                .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl")),
-              s"$work/postings", batchId)
-            graft.io.BatchLog.append(
-              batch.agg(count(lit(1)).as("n"))
-                .crossJoin(t.agg(count(lit(1)).as("l"))),
-              s"$work/stats", batchId)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+      FileFeed.drain(spark, s"$work/incoming", docs.schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val t = batch
+            .select(col("doc_id"), T.tokens(col("text")).as("tk"))
+            .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
+              explode(col("tk")).as("term"))
+            .localCheckpoint()
+          // batchId-keyed idempotent appends: foreachBatch is
+          // at-least-once, and a replayed blind append would inflate
+          // df/tf AND the (n, l) stats — BatchLog makes both deltas
+          // overwrite-on-replay
+          graft.io.BatchLog.append(
+            t.groupBy("term", "doc_id")
+              .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl")),
+            s"$work/postings", batchId)
+          graft.io.BatchLog.append(
+            batch.agg(count(lit(1)).as("n"))
+              .crossJoin(t.agg(count(lit(1)).as("l"))),
+            s"$work/stats", batchId)
+          ()
+        })
       // merge-on-read: df derived from the merged postings, stats
       // deltas summed — then q84's probe verbatim
       val tf = graft.io.BatchLog.read(spark, s"$work/postings")

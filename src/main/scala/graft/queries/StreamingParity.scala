@@ -5,10 +5,11 @@ import java.sql.Timestamp
 import graft.Tables
 import graft.io.Artifacts
 import graft.streaming.{EventsStreaming, FileFeed}
+import graft.streaming.StreamingConsolidation.{fold, keepNewest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Batch-equivalence harness entries for the two stateful streaming
   * operators (q74/q75) — the same pattern q71 established for the
@@ -101,19 +102,12 @@ object StreamingParity extends graft.QueryFamily {
       stageBatches(spark, dir, watchDir,
         Seq("b0", "b1", "sent_tumbling"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(watchDir)
-        val query = EventsStreaming.tumblingCounts(stream)
+      FileFeed.drain(spark, watchDir, schema, s"$work/ckpt")(
+        EventsStreaming.tumblingCounts(_)
           .writeStream
-          .trigger(Trigger.AvailableNow())
           .outputMode(OutputMode.Append())
           .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+          .option("path", s"$work/out"))
       spark.read.parquet(s"$work/out")
         .filter(col("event_type") =!= "__sentinel__") // open forever; defensive
         .select(
@@ -142,21 +136,16 @@ object StreamingParity extends graft.QueryFamily {
       stageBatches(spark, dir, watchDir,
         Seq("b0", "b1", "sent_sessions"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(watchDir)
-          .as[EventsStreaming.Event](org.apache.spark.sql.Encoders.product)
-        val query = EventsStreaming
-          .sessionize(spark, stream, GroupStateTimeout.NoTimeout)
+      FileFeed.drain(spark, watchDir, schema, s"$work/ckpt") { stream =>
+        EventsStreaming
+          .sessionize(spark,
+            stream.as[EventsStreaming.Event](org.apache.spark.sql.Encoders.product),
+            GroupStateTimeout.NoTimeout)
           .toDF()
           .writeStream
-          .trigger(Trigger.AvailableNow())
           .outputMode(OutputMode.Append())
           .format("parquet")
           .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
       }
       val byStart = Window.partitionBy("user_id").orderBy("session_start")
       spark.read.parquet(s"$work/out")
@@ -218,21 +207,13 @@ object StreamingParity extends graft.QueryFamily {
       stageBatches(spark, dir, watchDir,
         Seq("b0", "b1_redelivered"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(watchDir)
-        val query = stream
-          .withWatermark("ts", "2 hours")
+      FileFeed.drain(spark, watchDir, schema, s"$work/ckpt")(
+        _.withWatermark("ts", "2 hours")
           .dropDuplicatesWithinWatermark("event_id")
           .writeStream
-          .trigger(Trigger.AvailableNow())
           .outputMode(OutputMode.Append())
           .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+          .option("path", s"$work/out"))
       spark.read.parquet(s"$work/out")
         .select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
@@ -274,9 +255,7 @@ object StreamingParity extends graft.QueryFamily {
       val watchDir = s"$work/incoming"
       stageBatches(spark, dir, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(watchDir)
+      FileFeed.drain(spark, watchDir, schema, s"$work/ckpt") { stream =>
         val views = stream.filter(col("event_type") === "view")
           .select(col("event_id").as("view_id"), col("ts").as("view_ts"),
             col("user_id").as("v_user"))
@@ -285,19 +264,15 @@ object StreamingParity extends graft.QueryFamily {
           .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
             col("user_id").as("user_id"))
           .withWatermark("click_ts", "2 hours")
-        val query = views.join(clicks,
+        views.join(clicks,
             expr("""v_user = user_id AND
                     view_ts <= click_ts AND
                     view_ts >= click_ts - INTERVAL 1 HOUR"""))
           .select("click_id", "view_id", "user_id", "view_ts", "click_ts")
           .writeStream
-          .trigger(Trigger.AvailableNow())
           .outputMode(OutputMode.Append())
           .format("parquet")
           .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
       }
       spark.read.parquet(s"$work/out")
         .select(col("click_id"), col("view_id"), col("user_id"),
@@ -330,42 +305,26 @@ object StreamingParity extends graft.QueryFamily {
     * incremental ≡ rescan, the q94/q107/q115 rule applied to the
     * feature-store score.
     *
-    * State versions write to fresh dirs (state_b0, state_b1, …) — the
-    * merge never overwrites a dir it is reading, the same
-    * crash-safe-publish discipline as io/Versioned.
+    * The state is q71's snapshot fold
+    * ([[graft.streaming.StreamingConsolidation.fold]]): each partial
+    * is added to the snapshot and the sum replaces it through
+    * [[graft.io.SnapshotSwap]], so a failed write never leaves a torn
+    * state behind. The fold is additive, so a micro-batch replayed
+    * after its snapshot replace counts twice (the fold's docstring).
     */
   def q161_stream_decay(spark: SparkSession, dir: String): DataFrame =
     graft.io.Scratch.scoped(spark, "graft-q161-") { work =>
       val watchDir = s"$work/incoming"
       stageBatches(spark, dir, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(watchDir)
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val partial = EventQueries.decayAggregate(batch)
-            val merged = Option(latest.get()) match {
-              case Some(prev) =>
-                spark.read.parquet(prev).unionByName(partial)
-                  .groupBy("user_id")
-                  .agg(sum(col("n_purchases")).cast("long").as("n_purchases"),
-                    sum(col("cents_sum")).cast("long").as("cents_sum"),
-                    sum(col("decay_micro")).cast("long").as("decay_micro"))
-              case None => partial
-            }
-            val out = s"$work/state_b$id"
-            merged.write.mode("overwrite").parquet(out)
-            latest.set(out)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
-      spark.read.parquet(latest.get())
+      FileFeed.drain(spark, watchDir, schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch(
+          fold(s"$work/state", EventQueries.decayAggregate)(
+            _.groupBy("user_id")
+              .agg(sum(col("n_purchases")).cast("long").as("n_purchases"),
+                sum(col("cents_sum")).cast("long").as("cents_sum"),
+                sum(col("decay_micro")).cast("long").as("decay_micro")))))
+      spark.read.parquet(s"$work/state")
         .orderBy("user_id")
     }
 
@@ -390,32 +349,13 @@ object StreamingParity extends graft.QueryFamily {
       val watchDir = s"$work/incoming"
       stageBatches(spark, dir, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(watchDir)
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val partial = DistributionQueries.ksCounts(batch)
-            val merged = Option(latest.get()) match {
-              case Some(prev) =>
-                spark.read.parquet(prev).unionByName(partial)
-                  .groupBy("event_type", "cents")
-                  .agg(sum(col("ca")).cast("long").as("ca"),
-                    sum(col("cb")).cast("long").as("cb"))
-              case None => partial
-            }
-            val out = s"$work/state_b$id"
-            merged.write.mode("overwrite").parquet(out)
-            latest.set(out)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
-      DistributionQueries.ksFromCounts(spark.read.parquet(latest.get()))
+      FileFeed.drain(spark, watchDir, schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch(
+          fold(s"$work/state", DistributionQueries.ksCounts)(
+            _.groupBy("event_type", "cents")
+              .agg(sum(col("ca")).cast("long").as("ca"),
+                sum(col("cb")).cast("long").as("cb")))))
+      DistributionQueries.ksFromCounts(spark.read.parquet(s"$work/state"))
     }
 
   /** Shared constant on purpose: incremental ≡ one-shot scan. */
@@ -440,32 +380,13 @@ object StreamingParity extends graft.QueryFamily {
       val watchDir = s"$work/incoming"
       stageBatches(spark, dir, watchDir, Seq("b0", "b1"))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(watchDir)
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val partial = batch.groupBy("user_id")
-              .agg(count(lit(1)).cast("long").as("n_events"))
-            val merged = Option(latest.get()) match {
-              case Some(prev) =>
-                spark.read.parquet(prev).unionByName(partial)
-                  .groupBy("user_id")
-                  .agg(sum(col("n_events")).cast("long").as("n_events"))
-              case None => partial
-            }
-            val out = s"$work/state_b$id"
-            merged.write.mode("overwrite").parquet(out)
-            latest.set(out)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
-      spark.read.parquet(latest.get())
+      FileFeed.drain(spark, watchDir, schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch(
+          fold(s"$work/state",
+              _.groupBy("user_id").agg(count(lit(1)).cast("long").as("n_events")))(
+            _.groupBy("user_id")
+              .agg(sum(col("n_events")).cast("long").as("n_events")))))
+      spark.read.parquet(s"$work/state")
         .orderBy(col("n_events").desc, col("user_id"))
         .limit(topkK)
     }
@@ -520,30 +441,10 @@ object StreamingParity extends graft.QueryFamily {
         "b0" -> orders.filter(col("o_orderdate") < cut),
         "b1" -> orders.filter(col("o_orderdate") >= cut).unionByName(tombstones)))
       val schema = spark.read.parquet(s"$watchDir/b0.parquet").schema
-      val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val query = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(watchDir)
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val merged = Option(latest.get()) match {
-              case Some(prev) =>
-                spark.read.parquet(prev).unionByName(batch)
-              case None => batch
-            }
-            val state = graft.operators.Dedup.keepNewest(merged, key = col("o_custkey"),
-              orderBy = col("o_orderdate"), tieBreaker = col("o_orderkey"))
-            val out = s"$work/state_b$id"
-            state.write.mode("overwrite").parquet(out)
-            latest.set(out)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
-      spark.read.parquet(latest.get())
+      FileFeed.drain(spark, watchDir, schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch(
+          fold(s"$work/state")(keepNewest("o_custkey", "o_orderdate", "o_orderkey"))))
+      spark.read.parquet(s"$work/state")
         .filter(col("o_orderkey").isNotNull) // tombstone winners = deleted
         .select(col("o_custkey"), col("o_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("latest_order_date"),

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{HashFunctions => H, TextFunctions => T}
 import graft.io.Artifacts
+import graft.streaming.FileFeed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -904,36 +905,26 @@ object TextQueries extends graft.QueryFamily {
     * (q309), TWO index families now prove streaming ingest
     * end-to-end against generated SQL.
     */
-  def q317_stream_sig_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def q317_stream_sig_ingest(spark: SparkSession, dir: String): DataFrame =
     graft.io.Scratch.scoped(spark, "graft-q317-") { work =>
       val d = docs(spark, dir)
       CurationFlow.stageTwoBatches(spark, work, d, "doc_id",
         feed = Some(dir -> "documents"))
-      val stream = spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // batchId-keyed idempotent append (foreachBatch is
-            // at-least-once; a replayed blind append would duplicate
-            // signature rows and surface phantom near-dup pairs)
-            graft.io.BatchLog.append(
-              sigTableOf(batch)
-                .withColumn("skd", array_distinct(H.shingleKeys(col("sh"))))
-                .drop("sh"),
-              s"$work/sig_index", batchId)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+      FileFeed.drain(spark, s"$work/incoming", d.schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // batchId-keyed idempotent append (foreachBatch is
+          // at-least-once; a replayed blind append would duplicate
+          // signature rows and surface phantom near-dup pairs)
+          graft.io.BatchLog.append(
+            sigTableOf(batch)
+              .withColumn("skd", array_distinct(H.shingleKeys(col("sh"))))
+              .drop("sh"),
+            s"$work/sig_index", batchId)
+          ()
+        })
       pairsFromIndex(graft.io.BatchLog.read(spark, s"$work/sig_index"))
         .orderBy("a_id", "b_id")
     }
-  }
 
   /** q25's oracle — see [[q317_stream_sig_ingest]]. */
   val q317_oracle: String = s"$lshPairsSql\nORDER BY a_id, b_id"

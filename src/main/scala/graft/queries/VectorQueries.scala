@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{VectorFunctions => V}
 import graft.io.Artifacts
+import graft.streaming.FileFeed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -588,7 +589,6 @@ object VectorQueries extends graft.QueryFamily {
     * the search is q42's bounded probe unchanged.
     */
   def q320_stream_ivf_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     graft.io.Scratch.scoped(spark, "graft-q320-") { work =>
       val e = emb(spark, dir)
@@ -611,27 +611,19 @@ object VectorQueries extends graft.QueryFamily {
         .filter(pqIsBatch(col("vec_id")))
       CurationFlow.stageTwoBatches(spark, work, feed, "vec_id",
         feed = Some(dir -> "embeddings-pqbatch"))
-      val stream = spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // batchId-keyed idempotent append (foreachBatch is
-            // at-least-once; a replayed blind append would duplicate
-            // postings and shift top-k ranks vs rebuild)
-            graft.io.BatchLog.append(
-              batch.select(col("vec_id"), V.asDouble(col("embedding")).as("v"))
-                .withColumn("cell", stored.cell(col("v")))
-                .select(col("vec_id"), col("cell"), col("v"),
-                  V.norm(col("v")).as("n_nrm")),
-              s"$work/postings", batchId)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+      FileFeed.drain(spark, s"$work/incoming", feed.schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // batchId-keyed idempotent append (foreachBatch is
+          // at-least-once; a replayed blind append would duplicate
+          // postings and shift top-k ranks vs rebuild)
+          graft.io.BatchLog.append(
+            batch.select(col("vec_id"), V.asDouble(col("embedding")).as("v"))
+              .withColumn("cell", stored.cell(col("v")))
+              .select(col("vec_id"), col("cell"), col("v"),
+                V.norm(col("v")).as("n_nrm")),
+            s"$work/postings", batchId)
+          ()
+        })
       // search: q227's probe against the drained merged inverted file
       val postings = graft.io.BatchLog.read(spark, s"$work/postings")
         .select(col("vec_id").as("n_id"), col("v").as("nv"),
@@ -1312,7 +1304,6 @@ object VectorQueries extends graft.QueryFamily {
     * file append; search is q112's bucket-bounded ADC plan unchanged.
     */
   def q321_stream_pq_ingest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     graft.io.Scratch.scoped(spark, "graft-q321-") { work =>
       val e = emb(spark, dir)
@@ -1335,25 +1326,17 @@ object VectorQueries extends graft.QueryFamily {
         .filter(pqIsBatch(col("vec_id")))
       CurationFlow.stageTwoBatches(spark, work, feed, "vec_id",
         feed = Some(dir -> "embeddings-pqbatch"))
-      val stream = spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/incoming")
-      CurationFlow.withStreamShufflePartitions(spark) {
-        val query = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // batchId-keyed idempotent append (foreachBatch is
-            // at-least-once; a replayed blind append would duplicate
-            // codes and shift ADC candidate ranks vs rebuild)
-            graft.io.BatchLog.append(
-              pqEncode(stored, storedIvf,
-                batch.select(col("vec_id"), V.asDouble(col("embedding")).as("v"))),
-              s"$work/codes", batchId)
-            ()
-          }
-          .option("checkpointLocation", s"$work/ckpt")
-          .start()
-        query.awaitTermination()
-      }
+      FileFeed.drain(spark, s"$work/incoming", feed.schema, s"$work/ckpt")(
+        _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // batchId-keyed idempotent append (foreachBatch is
+          // at-least-once; a replayed blind append would duplicate
+          // codes and shift ADC candidate ranks vs rebuild)
+          graft.io.BatchLog.append(
+            pqEncode(stored, storedIvf,
+              batch.select(col("vec_id"), V.asDouble(col("embedding")).as("v"))),
+            s"$work/codes", batchId)
+          ()
+        })
       // search: q112's ADC probe + exact rerank against the merged table
       val codes = graft.io.BatchLog.read(spark, s"$work/codes")
         .repartition(spark.sparkContext.defaultParallelism)

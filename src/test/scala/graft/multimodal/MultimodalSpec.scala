@@ -25,4 +25,17 @@ class MultimodalSpec extends SparkSpec {
     assert(schema("payload").dataType.typeName == "binary")
     assert(schema("media_meta").dataType.typeName == "struct")
   }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("q335: the streamed media manifest equals the batch q89 run row for row") {
+    val dir = sf("sf0.001")
+    val streamed = Multimodal.q335_stream_media_manifest(spark, dir)
+    val batch = Multimodal.q89_frame_sample(spark, dir)
+    assert(sameRows(streamed, batch),
+      "streamed manifest diverged from the batch frame-sample run")
+    assert(batch.count() > 0, "empty manifest proves nothing")
+  }
 }

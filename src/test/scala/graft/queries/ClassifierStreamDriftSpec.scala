@@ -38,21 +38,25 @@ class ClassifierStreamDriftSpec extends SparkSpec {
   }
 
   test("q180: geometry beats labels — the planted traitor sinks class-A accuracy") {
-    val dir = java.nio.file.Files.createTempDirectory("knncls").toString
-    writeClusters(dir)
-    val got = VectorQueries.q180_knn_classifier(spark, dir).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    // A: 7 queries; the traitor's 5-NN are all geometric-Y (label B)
-    assert(got("A") === ((7L, 6L, 6000000L / 7L)))
-    assert(got("B") === ((7L, 7L, 1000000L)))
+    withTempDir("knncls") { tmp =>
+      val dir = tmp.toString
+      writeClusters(dir)
+      val got = VectorQueries.q180_knn_classifier(spark, dir).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      // A: 7 queries; the traitor's 5-NN are all geometric-Y (label B)
+      assert(got("A") === ((7L, 6L, 6000000L / 7L)))
+      assert(got("B") === ((7L, 7L, 1000000L)))
+    }
   }
 
   test("q181: centroid confusion matrix isolates the traitor in the off-diagonal") {
-    val dir = java.nio.file.Files.createTempDirectory("centcls").toString
-    writeClusters(dir)
-    val got = VectorQueries.q181_centroid_classifier(spark, dir).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(got === Map(
-      ("A", "A") -> 6L, ("A", "B") -> 1L, ("B", "B") -> 7L))
+    withTempDir("centcls") { tmp =>
+      val dir = tmp.toString
+      writeClusters(dir)
+      val got = VectorQueries.q181_centroid_classifier(spark, dir).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      assert(got === Map(
+        ("A", "A") -> 6L, ("A", "B") -> 1L, ("B", "B") -> 7L))
+    }
   }
 }

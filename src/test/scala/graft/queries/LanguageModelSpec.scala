@@ -1,6 +1,13 @@
 package graft.queries
 
+import java.util.concurrent.atomic.AtomicBoolean
+
 import graft.SparkSpec
+import graft.io.BatchLog
+import graft.streaming.FileFeed
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 /** Hand-computed bigram-LM fixtures: corpus counts
   * "a b"→2, "b a"→2, "a c"→1; prefixes a→3, b→2. Contributions in
@@ -50,5 +57,48 @@ class LanguageModelSpec extends SparkSpec {
   test("single-token and empty docs are excluded (no bigram to score)") {
     val out = score((1L, "s", "only"), (2L, "s", "  "), (3L, "s", "a b"))
     assert(out.keySet === Set(3L))
+  }
+
+  private def merged(log: DataFrame): DataFrame =
+    log.groupBy("bigram")
+      .agg(sum(col("c_bigram")).cast("long").as("c_bigram"))
+      .filter(col("c_bigram") > 0)
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** The streamed index-maintenance family is exactly-once in EFFECT
+    * under foreachBatch's at-least-once delivery. The injected failure
+    * is the real one — a micro-batch whose side effect lands but whose
+    * checkpoint offset does not, so the restarted stream re-delivers
+    * it — and scoring from the drained log must still equal a
+    * from-scratch rebuild (BatchLogSpec pins the protocol pieces; this
+    * drives the whole stream through a crash).
+    */
+  test("streamed LM ingest survives a crash-after-append: the replayed micro-batch does not double count") {
+    val dir = sf("sf0.001")
+    val docs = graft.Tables.load(spark, dir, "documents")
+    withTempDir("graft-replay18-") { tmp =>
+      val work = tmp.toString
+      CurationFlow.stageTwoBatches(spark, work, docs, "doc_id")
+      val crashed = new AtomicBoolean(false)
+      def drive(): StreamingQuery =
+        FileFeed.drain(spark, s"$work/incoming", docs.schema, s"$work/ckpt")(
+          _.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+            BatchLog.append(
+              LanguageModel.countsOf(batch), s"$work/lm_index", batchId)
+            // die AFTER the side effect, BEFORE the checkpoint commit —
+            // the restart below re-delivers this exact batch
+            if (batchId == 1L && crashed.compareAndSet(false, true))
+              throw new RuntimeException("injected post-append crash")
+            ()
+          })
+      intercept[StreamingQueryException](drive())
+      assert(crashed.get(), "the injected crash never fired")
+      drive() // restart from the same checkpoint: batch 1 replays
+      assert(sameRows(merged(BatchLog.read(spark, s"$work/lm_index")),
+        LanguageModel.countsOf(docs)),
+        "replayed micro-batch corrupted the merged log vs rebuild")
+    }
   }
 }

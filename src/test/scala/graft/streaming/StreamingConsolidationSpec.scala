@@ -3,12 +3,26 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import graft.streaming.StreamingConsolidation.{fold, keepNewest}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 class StreamingConsolidationSpec extends SparkSpec {
 
   private def ev(id: Long, t: String, user: Long, v: Double) =
     EventsStreaming.Event(id, Timestamp.valueOf(t), user, "click", v)
+
+  private val newestPerUser =
+    keepNewest(keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id")
+
+  /** Starts the keep-newest fold of `stream` into `snapshot`. */
+  private def startFold(stream: DataFrame, snapshot: String, checkpoint: String): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(fold(snapshot)(newestPerUser))
+      .start()
 
   test("micro-batches consolidate to keep-newest per key across the whole stream") {
     withTempDir("consol") { tmp =>
@@ -20,9 +34,7 @@ class StreamingConsolidationSpec extends SparkSpec {
 
       val stream = MemoryStream[EventsStreaming.Event]
       def runAvailable(): Unit = {
-        val q = StreamingConsolidation.sink(
-          stream.toDF(), snapshot, s"$dir/checkpoint",
-          keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
+        val q = startFold(stream.toDF(), snapshot, s"$dir/checkpoint")
         try q.processAllAvailable() finally q.stop()
       }
 
@@ -61,9 +73,7 @@ class StreamingConsolidationSpec extends SparkSpec {
 
       val stream = MemoryStream[EventsStreaming.Event]
       def runAvailable(): Unit = {
-        val q = StreamingConsolidation.sink(
-          stream.toDF(), snapshot, s"$dir/checkpoint",
-          keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
+        val q = startFold(stream.toDF(), snapshot, s"$dir/checkpoint")
         try q.processAllAvailable() finally q.stop()
       }
 
@@ -99,9 +109,7 @@ class StreamingConsolidationSpec extends SparkSpec {
         if (preCreate) assert(new java.io.File(snapshot).mkdirs())
         val stream = MemoryStream[EventsStreaming.Event]
         def runAvailable(): Unit = {
-          val q = StreamingConsolidation.sink(
-            stream.toDF(), snapshot, s"$dir/checkpoint",
-            keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
+          val q = startFold(stream.toDF(), snapshot, s"$dir/checkpoint")
           try q.processAllAvailable() finally q.stop()
         }
         stream.addData(
@@ -133,14 +141,10 @@ class StreamingConsolidationSpec extends SparkSpec {
       ev(4, "2024-01-01 09:00:00", 1, 99.0),
       ev(5, "2024-01-01 12:00:00", 2, 50.0)).toDF()
     /** One AvailableNow run over `dir/incoming`; the rows it read. */
-    def runAvailable(dir: java.nio.file.Path): Long = {
-      val q = StreamingConsolidation.sink(
-        spark.readStream.schema(file1.schema).parquet(s"$dir/incoming"),
-        s"$dir/snapshot", s"$dir/checkpoint",
-        keyCol = "user_id", orderByCol = "ts", tieBreakerCol = "event_id").start()
-      try { q.awaitTermination(); q.recentProgress.map(_.numInputRows).sum }
-      finally q.stop()
-    }
+    def runAvailable(dir: java.nio.file.Path): Long =
+      FileFeed.drain(spark, s"$dir/incoming", file1.schema, s"$dir/checkpoint")(
+        _.writeStream.foreachBatch(fold(s"$dir/snapshot")(newestPerUser)))
+        .recentProgress.map(_.numInputRows).sum
     def snapshot(dir: java.nio.file.Path) = spark.read.parquet(s"$dir/snapshot").collect().toSet
     withTempDir("consolrestart") { restarted =>
       FileFeed.write(s"$restarted/incoming", Seq("b0" -> file1))
@@ -152,6 +156,31 @@ class StreamingConsolidationSpec extends SparkSpec {
         assert(runAvailable(once) === 5L)
         assert(snapshot(restarted) === snapshot(once))
       }
+    }
+  }
+
+  test("an additive fold over three drained files equals the one-shot aggregate") {
+    val s = spark
+    import s.implicits._
+    val files = Seq(
+      Seq(ev(1, "2024-01-01 10:00:00", 1, 10.0), ev(2, "2024-01-01 11:00:00", 2, 20.0)),
+      Seq(ev(3, "2024-01-02 10:00:00", 1, 30.0)),
+      Seq(ev(4, "2024-01-03 10:00:00", 3, 40.0), ev(5, "2024-01-03 11:00:00", 1, 50.0)))
+      .map(_.toDF())
+    val perUser = (df: DataFrame) =>
+      df.groupBy("user_id").agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
+    val sums = (df: DataFrame) =>
+      df.groupBy("user_id").agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
+    withTempDir("consolsum") { dir =>
+      FileFeed.write(s"$dir/incoming", files.zipWithIndex.map { case (f, i) => s"b$i" -> f })
+      val q = FileFeed.drain(spark, s"$dir/incoming", files.head.schema, s"$dir/checkpoint")(
+        _.writeStream.foreachBatch(fold(s"$dir/state", perUser)(sums)))
+      assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+      val folded = spark.read.parquet(s"$dir/state")
+        .as[(Long, Long, Double)].collect().toSet
+      assert(folded === perUser(files.reduce(_ unionByName _))
+        .as[(Long, Long, Double)].collect().toSet)
+      assert(folded === Set((1L, 3L, 90.0), (2L, 1L, 20.0), (3L, 1L, 40.0)))
     }
   }
 }
